@@ -1,24 +1,18 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.nio.ByteBuffer
+import java.nio.charset.{CharacterCodingException, StandardCharsets}
 
 /** CSV ingestion with the reference's exact input semantics
   * (SURVEY §2.1 S1–S5):
   *
   *  - S1: header-less positional read against the 71-col schema.
-  *  - S2: encoding fallback utf-8 → cp1252 → latin-1 (reference
-  *    src/main_01.py:374 lists ['utf-8', 'latin-1', 'cp1252']; its cp1252
-  *    arm is DEAD CODE because Python's latin-1 decodes any byte and
-  *    never raises. We keep three arms but try cp1252 before latin-1 so
-  *    the arm is reachable: cp1252 matches latin-1 on every byte both
-  *    define and additionally maps 0x80–0x9F to the Windows punctuation
-  *    (smart quotes, em dash) those files actually contain; latin-1 stays
-  *    the decode-anything terminal arm. Spark never throws on malformed
-  *    bytes, it substitutes U+FFFD — so each arm's failure trigger is
-  *    "any replacement char decoded", which for cp1252 fires on its five
-  *    undefined bytes 0x81/0x8D/0x8F/0x90/0x9D).
-  *  - S3: BOM strip (Spark's CSV reader handles a file-level BOM; a
+  *  - S2: encoding fallback utf-8 → cp1252 → latin-1, decided once per
+  *    file from its bytes (see [[decode]]).
+  *  - S3: BOM strip (a file-level BOM is dropped in [[decode]]; a
   *    mid-file BOM'd line is scrubbed in the normalize projection).
   *  - S4: recursive case-insensitive `*.csv`/`*.CSV` discovery.
   *  - S5: month-directory pruning — only `YYYY-MM/<datasetType>/` paths
@@ -30,97 +24,77 @@ object LoomCsv {
 
   private val csvGlob = "*.{csv,CSV}"
 
-  /** S1+S3+S4 — raw recursive read of every CSV under `root`. */
-  def readRaw(spark: SparkSession, root: String,
-              charset: String = "UTF-8"): DataFrame =
-    readPaths(spark, Seq(root), charset, recursive = true)
-
-  private def readPaths(spark: SparkSession, paths: Seq[String],
-                        charset: String, recursive: Boolean): DataFrame =
-    spark.read
-      .schema(LoomSchema.raw)
-      .option("header", "false")
-      .option("encoding", charset)
-      .option("mode", "PERMISSIVE")
-      .option("recursiveFileLookup", recursive.toString)
-      .option("pathGlobFilter", csvGlob)
-      .csv(paths: _*)
-
   /** cp1252 differs from latin-1 ONLY on bytes 0x80–0x9F: 27 of them map
     * to Windows punctuation/letters, 5 (0x81 8D 8F 90 9D) are undefined.
     * Decoding as latin-1 (which maps those bytes to the C1 controls
-    * U+0080–U+009F, reversibly) and then `translate`-ing the 27 defined
-    * ones IS a byte-exact cp1252 decode — Spark 4's CSV charset
-    * whitelist has latin-1 but not cp1252, and this costs one scan
-    * instead of two. */
+    * U+0080–U+009F, reversibly) and then re-mapping the 27 defined ones
+    * IS a byte-exact cp1252 decode. */
   private val cp1252From =
     "\u0080\u0082\u0083\u0084\u0085\u0086\u0087\u0088\u0089\u008a\u008b\u008c\u008e" +
     "\u0091\u0092\u0093\u0094\u0095\u0096\u0097\u0098\u0099\u009a\u009b\u009c\u009e\u009f"
   private val cp1252To =
     "\u20ac\u201a\u0192\u201e\u2026\u2020\u2021\u02c6\u2030\u0160\u2039\u0152\u017d" +
     "\u2018\u2019\u201c\u201d\u2022\u2013\u2014\u02dc\u2122\u0161\u203a\u0153\u017e\u0178"
-  private val cp1252UndefinedRe = "[\u0081\u008d\u008f\u0090\u009d]"
+  private val cp1252Table: Array[Char] = {
+    val t = Array.tabulate(256)(_.toChar)
+    cp1252From.zip(cp1252To).foreach { case (f, to) => t(f) = to }
+    t
+  }
+  private val cp1252Undefined = Set(0x81, 0x8d, 0x8f, 0x90, 0x9d)
+  private val utf8Bom = Array(0xef, 0xbb, 0xbf).map(_.toByte)
 
-  /** S2 — encoding-fallback read, PER FILE like the reference
-    * (src/main_01.py:372-387 retries each file independently): files
-    * whose utf-8 decode produced replacement chars (U+FFFD) are re-read
-    * as cp1252 (the latin-1 + translate emulation above); files cp1252
-    * also cannot decode — they contain one of its five undefined bytes —
-    * keep the raw latin-1 decode, which accepts anything. Clean files
-    * are never touched by a fallback arm — a dataset-global fallback
-    * would mojibake the multi-byte utf-8 in every good file. (The
-    * reference lists utf-8 → latin-1 → cp1252, but its cp1252 arm is
-    * dead code — Python's latin-1 never raises — so we order the arms
-    * so each is reachable; latin-1 stays the terminal decode-anything.)
-    *
-    * Fully distributed: the corrupt-file set stays a DataFrame joined
-    * against `input_file_name()` (materialized in a projection — the
-    * expression is nondeterministic and may not sit in a join condition)
-    * — never a driver-collected list baked into an `isin` literal, so a
-    * systematically mis-encoded tree cannot OOM the driver or build a
-    * giant In-expression. The bad-file frames are tiny (one row per
-    * corrupt FILE) and broadcast, so no fallback pass shuffles the data;
-    * the cost is one extra distributed scan of the tree in latin-1 when
-    * any corrupt file exists (a filter on a file-name column cannot
-    * prune the file listing) — the right trade at scale, where driver
-    * memory is the scarce resource. The clean-tree common case
-    * short-circuits on an `isEmpty` probe (a bounded driver boolean).
-    *
-    * The result carries a `_source_file` column — materialized directly
-    * above each single-source scan, where `input_file_name()` is
-    * unambiguous. Callers needing row provenance (the import job's
-    * later-file-wins tiebreak) MUST use it rather than re-deriving
-    * `input_file_name()` above this frame: the fallback plan unions and
-    * joins several file sources, where the expression cannot bind. */
-  def readWithFallback(spark: SparkSession, root: String): DataFrame = {
-    def withFile(df: DataFrame): DataFrame =
-      df.withColumn(sourceFileCol, input_file_name())
-    // replacement-char probe over EVERY column (a stray byte can sit in
-    // any field); concat_ws skips nulls
-    def hasChar(re: String): Column =
-      concat_ws("", LoomSchema.columnNames.map(col): _*).rlike(re)
-    val utf8 = withFile(readRaw(spark, root, "UTF-8"))
-    val bad1 = graft.ops.Staged.stage(
-      utf8.filter(hasChar("�")).select(sourceFileCol).distinct())
-    // clean tree: the probe is fully consumed — drop its pin right away
-    // instead of waiting for the caller's release scope
-    if (bad1.isEmpty) { bad1.unpersist(blocking = false); utf8 }
-    else {
-      val good = utf8.join(broadcast(bad1), Seq(sourceFileCol), "left_anti")
-      val latin1 = graft.ops.Staged.stage(
-        withFile(readRaw(spark, root, "ISO-8859-1"))
-          .join(broadcast(bad1), Seq(sourceFileCol), "left_semi"))
-      // the cp1252 arm "fails" for files holding a byte cp1252 leaves
-      // undefined — those keep the raw latin-1 decode instead
-      val bad2 = graft.ops.Staged.stage(
-        latin1.filter(hasChar(cp1252UndefinedRe)).select(sourceFileCol).distinct())
-      val cpArm = LoomSchema.columnNames.foldLeft(
-          latin1.join(broadcast(bad2), Seq(sourceFileCol), "left_anti")) { (d, c) =>
-        d.withColumn(c, translate(col(c), cp1252From, cp1252To))
-      }
-      val latinArm = latin1.join(broadcast(bad2), Seq(sourceFileCol), "left_semi")
-      good.unionByName(cpArm).unionByName(latinArm)
+  /** S2+S3 — one file's bytes → its text, PER FILE like the reference
+    * (src/main_01.py:372-387 retries each file independently): strict
+    * utf-8 (a decode ERROR, not a U+FFFD in the text, sends a file on —
+    * a valid utf-8 file may spell U+FFFD itself); else cp1252, unless the
+    * file holds one of the five bytes cp1252 leaves undefined; else raw
+    * latin-1, which decodes anything. The reference lists utf-8 →
+    * latin-1 → cp1252, but its cp1252 arm is dead code (Python's latin-1
+    * never raises), so the arms are ordered so each is reachable. A
+    * leading utf-8 BOM is dropped before any arm, as Hadoop's line
+    * reader drops it for Spark's CSV source. */
+  private def decode(bytes: Array[Byte]): String = {
+    val body = if (bytes.startsWith(utf8Bom)) bytes.drop(utf8Bom.length) else bytes
+    // a fresh decoder REPORTs malformed input instead of substituting
+    try StandardCharsets.UTF_8.newDecoder().decode(ByteBuffer.wrap(body)).toString
+    catch {
+      case _: CharacterCodingException =>
+        val latin1 = new String(body, StandardCharsets.ISO_8859_1)
+        if (body.exists(b => cp1252Undefined(b & 0xff))) latin1
+        else latin1.map(cp1252Table(_))
     }
+  }
+
+  /** S1–S4 — header-less positional read of every `*.csv`/`*.CSV` under
+    * `root` (recursive), each file decoded by [[decode]]. One scan: the
+    * `binaryFile` source reads each file whole, the decode runs once per
+    * file, and each line goes through the CSV parser (`from_csv`,
+    * PERMISSIVE) against the 71-column schema, so a short row gets nulls
+    * in its missing cells. No job runs while the frame is built and
+    * nothing is staged or broadcast.
+    *
+    * A file larger than `binaryFile`'s per-file maximum
+    * (`spark.sql.sources.binaryFile.maxLength`) fails the read loudly;
+    * it never drops rows.
+    *
+    * The result carries a `_source_file` column, the file's path, for
+    * callers needing row provenance (the import job's later-file-wins
+    * tiebreak). */
+  def readWithFallback(spark: SparkSession, root: String): DataFrame = {
+    // lines end in \r\n, \n or \r; blank and whitespace-only lines are
+    // dropped, as Spark's CSV reader drops them
+    val fileLines = udf((content: Array[Byte]) =>
+      decode(content).split("\r\n|\n|\r").filter(_.trim.nonEmpty))
+    // parsed inside the generator, so a filter above cannot be pushed
+    // below the parse and evaluate from_csv once more per referenced cell
+    val rows = transform(fileLines(col("content")),
+      line => from_csv(line, LoomSchema.raw, Map("mode" -> "PERMISSIVE")))
+    spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", csvGlob)
+      .load(root)
+      .select(col("path").as(sourceFileCol), inline(rows))
+      .select(LoomSchema.columnNames.map(col) :+ col(sourceFileCol): _*)
   }
 
   /** Row-provenance column emitted by [[readWithFallback]]. */
@@ -151,14 +125,11 @@ object LoomCsv {
   /** P1+P2 normalize: trim every cell, scrub stray BOMs, drop rows with
     * fewer than 3 populated leading cells (the reference's short-row skip,
     * src/main_01.py:403-405). */
-  def normalize(df: DataFrame): DataFrame = {
-    val trimmed = LoomSchema.columnNames.foldLeft(df) { (d, c) =>
-      d.withColumn(c, trim(regexp_replace(col(c), "^\\uFEFF", "")))
-    }
-    trimmed.filter(
-      LoomSchema.columnNames.take(3).map(c => col(c).isNotNull && col(c) =!= "")
-        .reduce(_ && _))
-  }
+  def normalize(df: DataFrame): DataFrame =
+    df.withColumns(LoomSchema.columnNames.map(c =>
+        c -> trim(regexp_replace(col(c), "^\\uFEFF", ""))).toMap)
+      .filter(LoomSchema.columnNames.take(3)
+        .map(c => col(c).isNotNull && col(c) =!= "").reduce(_ && _))
 
   /** Typed view: identity/article columns stay strings; every metric
     * column becomes double via the reference's `float(x or 0)` coercion.
@@ -168,10 +139,8 @@ object LoomCsv {
     // the single source of the reference's float(x or 0) coercion —
     // an inline copy here once drifted from it (no trim before the
     // empty-check), so the two paths disagreed on whitespace-only cells
-    val casted = LoomSchema.metricColumns.foldLeft(df) { (d, c) =>
-      d.withColumn(c, graft.ops.Filters.pyFloatOrZero(c))
-    }
-    casted
+    df.withColumns(LoomSchema.metricColumns.map(c =>
+        c -> graft.ops.Filters.pyFloatOrZero(c)).toMap)
       .withColumn("shift_date", to_date(substring_index(col("DataTurno"), ".", 1)))
       .withColumn("shift", substring_index(col("DataTurno"), ".", -1))
   }

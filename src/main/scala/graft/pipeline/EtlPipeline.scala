@@ -37,8 +37,8 @@ object EtlPipeline {
     * A failing step aborts the pipeline unless marked continueOnError
     * (D5). Each step is tagged as a Spark job group for cancellation /
     * UI attribution (D4). The whole run is a [[graft.ops.Staged]] scope:
-    * intermediates operators staged during any step (fallback bad-file
-    * frames, shingle tables) are released when the pipeline ends —
+    * intermediates operators staged during any step (shingle tables,
+    * say) are released when the pipeline ends —
     * frames a step wants to carry PAST the pipeline must use their own
     * explicit persist (as importOnly's merged frame does). */
   def run(spark: SparkSession, steps: Seq[Step]): Seq[StepResult] =

@@ -15,34 +15,34 @@ object ImportJob {
     * (reference src/main_01.py:1191-1262):
     *
     * read CSVs → normalize/project → short-row filter → optional
-    * desligado anti-join gate → last-writer-wins merge on the PK.
+    * desligado gate against the sink keys → last-writer-wins merge on
+    * the PK.
     *
     * `applyPoweredOffGate = true` gives main_01–04 semantics (skip
     * powered-off `.C` rows already present in the sink); `false` gives
     * main_05 semantics (plain upsert of every row) — the reference
     * dropped the filter in its final iteration (SURVEY §8).
     *
-    * At scale: one shuffle for the merge window (same key as the sink
-    * write partitioning) and a broadcast-able anti-join on sink keys.
+    * At scale: one file scan, one shuffle for the merge window (same key
+    * as the sink write partitioning) and a broadcast join on sink keys.
     */
   def importCsvTree(spark: SparkSession, root: String,
                     sinkKeys: Option[DataFrame] = None,
                     applyPoweredOffGate: Boolean = true): DataFrame = {
-    // provenance comes from the reader's _source_file column:
-    // input_file_name() cannot bind above the fallback plan's
-    // union/join of several file sources
     val parsed = LoomCsv.normalize(LoomCsv.readWithFallback(spark, root))
       .withColumnRenamed(LoomCsv.sourceFileCol, "__file")
     val gated = (sinkKeys, applyPoweredOffGate) match {
       case (Some(sink), true) =>
         // P4+P5: drop powered-off rows whose key already exists in the sink
-        // (reference src/main_01.py:460-473) — anti-join restricted to the
-        // desligado subset, union back the rest.
-        val off = parsed.filter(Filters.poweredOff("DataTurno", "Funcionando", "Parado", 400.0))
-          .join(broadcast(sink.select(LoomSchema.primaryKey.map(col): _*).distinct()),
-            LoomSchema.primaryKey, "left_anti")
-        parsed.filter(!Filters.poweredOff("DataTurno", "Funcionando", "Parado", 400.0))
-          .unionByName(off)
+        // (reference src/main_01.py:460-473), in one pass: a left join
+        // flags rows whose key is in the sink. The keys are distinct, so
+        // no row is duplicated; a null key never matches, so it is kept.
+        val inSink = sink.select(LoomSchema.primaryKey.map(col): _*).distinct()
+          .withColumn("__in_sink", lit(true))
+        parsed.join(broadcast(inSink), LoomSchema.primaryKey, "left")
+          .filter(!Filters.poweredOff("DataTurno", "Funcionando", "Parado", 400.0) ||
+            col("__in_sink").isNull)
+          .drop("__in_sink")
       case _ => parsed
     }
     // U1: last-writer-wins on (DataTurno, Tear); tiebreak pinned to file

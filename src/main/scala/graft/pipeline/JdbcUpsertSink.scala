@@ -217,7 +217,8 @@ object JdbcUpsertSink {
             dialect: UpsertDialect = MySqlUpsert): Unit = {
     val columns = df.columns.toSeq
     val sql = dialect.sql(table, columns, keyCols)
-    val binds = dialect.bindOrder(columns, keyCols)
+    // placeholder p + 1 binds row column binds(p)
+    val binds = dialect.bindOrder(columns, keyCols).toArray
     df.foreachPartition { rows: Iterator[Row] =>
       val conn = connectionFactory()
       try {
@@ -225,7 +226,8 @@ object JdbcUpsertSink {
         val stmt = conn.prepareStatement(sql)
         var n = 0
         rows.foreach { row =>
-          binds.zipWithIndex.foreach { case (c, p) => stmt.setObject(p + 1, row.get(c)) }
+          var p = 0
+          while (p < binds.length) { stmt.setObject(p + 1, row.get(binds(p))); p += 1 }
           stmt.addBatch()
           n += 1
           if (n % batchSize == 0) { stmt.executeBatch(); conn.commit() }

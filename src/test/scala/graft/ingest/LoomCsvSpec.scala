@@ -54,8 +54,8 @@ class LoomCsvSpec extends SparkSpec {
   }
 
   test("S4: recursive discovery picks up .csv and .CSV, all month dirs") {
-    val files = LoomCsv.readRaw(spark, root.toString)
-      .select(input_file_name().as("f")).distinct().as[String].collect()
+    val files = LoomCsv.readWithFallback(spark, root.toString)
+      .select(LoomCsv.sourceFileCol).distinct().as[String].collect()
     assert(files.length === 7)
     assert(files.exists(_.endsWith("UPPER.CSV")))
   }
@@ -89,8 +89,45 @@ class LoomCsvSpec extends SparkSpec {
     assert(LoomCsv.normalize(df).select("Artigo").as[String].head() === "ÁGUA")
   }
 
+  /** A one-file tree holding `bytes`; returns its normalized import. */
+  private def readOne(bytes: Array[Byte]): Seq[org.apache.spark.sql.Row] = {
+    val dir = Files.createTempDirectory("tmsedge")
+    Files.createDirectories(dir.resolve("2026-07/daily"))
+    Files.write(dir.resolve("2026-07/daily/f.csv"), bytes)
+    LoomCsv.normalize(LoomCsv.readWithFallback(spark, dir.toString))
+      .orderBy("DataTurno").collect().toSeq
+  }
+
+  test("S2: a valid utf-8 file spelling U+FFFD stays utf-8") {
+    val rows = readOne(mkRow("2026-07-02.A", "00061", "Á\uFFFDGUA", "480", "0")
+      .getBytes(StandardCharsets.UTF_8))
+    assert(rows.map(_.getAs[String]("Artigo")) === Seq("Á\uFFFDGUA"))
+  }
+
+  test("S2: the encoding is decided per whole file, past the 71 schema columns too") {
+    // the only invalid utf-8 byte (0xC9) sits in a 72nd cell the schema
+    // never reads; the file still takes the cp1252 arm, so its utf-8 É
+    // (0xC3 0x89) reads as cp1252 'Ã‰'
+    val bytes = (mkRow("2026-07-02.A", "00062", "ÉGUA", "480", "0") + ",")
+      .getBytes(StandardCharsets.UTF_8) :+ 0xc9.toByte
+    assert(readOne(bytes).map(_.getAs[String]("Artigo")) === Seq("Ã‰GUA"))
+  }
+
+  test("S1+S3: CRLF and CR line ends, blank and whitespace-only lines, file BOM, empty file") {
+    val rows = readOne(("\uFEFF" +
+      Seq(mkRow("2026-07-02.A", "00063", "ÁGUA", "480", "0"), "", " \t ",
+        mkRow("2026-07-02.B", "00063", "ART", "480", "0")).mkString("\r\n") + "\r" +
+      mkRow("2026-07-02.C", "00063", "ART", "480", "0") + "\r\n")
+      .getBytes(StandardCharsets.UTF_8))
+    assert(rows.map(r => (r.getAs[String]("DataTurno"), r.getAs[String]("Artigo"))) ===
+      Seq(("2026-07-02.A", "ÁGUA"), ("2026-07-02.B", "ART"), ("2026-07-02.C", "ART")))
+    // the last cell keeps no stray \r
+    assert(rows.forall(_.getAs[String]("MinGen16") === "0"))
+    assert(readOne(Array.emptyByteArray).isEmpty)
+  }
+
   test("S3+P3: normalize strips BOM and drops short rows") {
-    val df = LoomCsv.normalize(LoomCsv.readRaw(spark, root.toString))
+    val df = LoomCsv.normalize(LoomCsv.readWithFallback(spark, root.toString))
     val turnos = df.select("DataTurno").as[String].collect()
     assert(turnos.forall(!_.startsWith("﻿")))
     assert(!turnos.contains("too"))
@@ -106,7 +143,7 @@ class LoomCsvSpec extends SparkSpec {
   }
 
   test("typed view: float(''|null or 0) → 0.0, shift key decomposed") {
-    val df = LoomCsv.typedView(LoomCsv.normalize(LoomCsv.readRaw(spark, root.toString)))
+    val df = LoomCsv.typedView(LoomCsv.normalize(LoomCsv.readWithFallback(spark, root.toString)))
     val r = df.filter(col("DataTurno") === "2026-08-01.C" && col("Tear") === "00044")
       .select("Funcionando", "shift", "shift_date").head()
     assert(r.getDouble(0) === 0.0)
@@ -136,6 +173,37 @@ class LoomCsvSpec extends SparkSpec {
       applyPoweredOffGate = false)
     assert(ungated.filter(col("DataTurno") === "2026-08-01.C" && col("Tear") === "00042")
       .count() === 1) // main_05 semantics: plain upsert keeps it
+  }
+
+  test("importCsvTree: building starts no job and pins nothing; the plan scans the tree once") {
+    val sink = Seq(("2026-08-01.C", "00042")).toDF("DataTurno", "Tear")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val pinned = sc.getPersistentRDDs.keySet
+      sc.setJobGroup("loom-build", "build")
+      val plan = try ImportJob.importCsvTree(spark, root.toString, Some(sink))
+          .queryExecution.executedPlan
+        finally sc.clearJobGroup()
+      assert(sc.getPersistentRDDs.keySet === pinned)
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job the build started has been seen too
+      sc.setJobGroup("loom-sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("loom-sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("loom-sentinel"))
+      assert(!groups.contains("loom-build"), "building the import ran a Spark job")
+      val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collectWithSubqueries(plan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      assert(scans.size === 1, plan)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("exportStatus: per-(month, type) file inventory incl. the root forecast.csv; metadata-only scan") {
