@@ -66,7 +66,7 @@ object LoomCsv {
   }
 
   /** S1–S4 — header-less positional read of every `*.csv`/`*.CSV` under
-    * `root` (recursive), each file decoded by [[decode]]. One scan: the
+    * the `roots` (recursive), each file decoded by [[decode]]. One scan: the
     * `binaryFile` source reads each file whole, the decode runs once per
     * file, and each line goes through the CSV parser (`from_csv`,
     * PERMISSIVE) against the 71-column schema, so a short row gets nulls
@@ -80,7 +80,7 @@ object LoomCsv {
     * The result carries a `_source_file` column, the file's path, for
     * callers needing row provenance (the import job's later-file-wins
     * tiebreak). */
-  def readWithFallback(spark: SparkSession, root: String): DataFrame = {
+  def readWithFallback(spark: SparkSession, roots: String*): DataFrame = {
     // lines end in \r\n, \n or \r; blank and whitespace-only lines are
     // dropped, as Spark's CSV reader drops them
     val fileLines = udf((content: Array[Byte]) =>
@@ -92,7 +92,7 @@ object LoomCsv {
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", csvGlob)
-      .load(root)
+      .load(roots: _*)
       .select(col("path").as(sourceFileCol), inline(rows))
       .select(LoomSchema.columnNames.map(col) :+ col(sourceFileCol): _*)
   }
@@ -102,23 +102,19 @@ object LoomCsv {
 
   /** S5 — partition-pruned read: only `root/YYYY-MM/<datasetType>/` dirs
     * for the requested months. Builds explicit per-month paths so the
-    * file listing itself is pruned, then tags each row with its `month`
-    * partition column (from the path) for downstream partition-style
-    * filters. */
+    * file listing itself is pruned, reads them with
+    * [[readWithFallback]] (the import's per-file [[decode]] and parse,
+    * `_source_file` included), then tags each row with its
+    * `month` partition column (from the path) and `dataset_type` for
+    * downstream partition-style filters. */
   def readMonths(spark: SparkSession, root: String, months: Seq[String],
                  datasetType: String = "daily"): DataFrame = {
     val monthRe = "^\\d{4}-\\d{2}$".r
     val valid = months.filter(m => monthRe.findFirstIn(m).isDefined)
     require(valid.nonEmpty, s"no valid YYYY-MM months in $months")
-    val paths = valid.map(m => s"$root/$m/$datasetType")
-    spark.read
-      .schema(LoomSchema.raw)
-      .option("header", "false")
-      .option("mode", "PERMISSIVE")
-      .option("pathGlobFilter", csvGlob)
-      .csv(paths: _*)
+    readWithFallback(spark, valid.map(m => s"$root/$m/$datasetType"): _*)
       .withColumn("month",
-        regexp_extract(input_file_name(), "(\\d{4}-\\d{2})/[^/]+/[^/]+$", 1))
+        regexp_extract(col(sourceFileCol), "(\\d{4}-\\d{2})/[^/]+/[^/]+$", 1))
       .withColumn("dataset_type", lit(datasetType))
   }
 

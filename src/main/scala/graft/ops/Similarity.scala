@@ -2,9 +2,11 @@ package graft.ops
 
 import graft.functions.VectorFunctions._
 import graft.functions.CosineSimilarityExpr.cosineSim
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (north star). Two tiers:
@@ -122,10 +124,11 @@ object Similarity {
   /** IVF (inverted-file) approximate top-k — the other classic ANN scale
     * path. Coarse quantizer: the `nCentroids` corpus vectors with the
     * smallest xxhash64(id) — a deterministic pseudo-random sample with no
-    * trained model, no count() pre-pass, and no global window: Catalyst
-    * plans orderBy(hash).limit(n) as TakeOrderedAndProject, so every
-    * partition keeps only nCentroids candidate rows and the full corpus
-    * never funnels through one task. The hash doubles as the centroid id
+    * trained model, no count() pre-pass, and no global window, collected
+    * once to the driver ([[ivfCentroids]]): Catalyst plans
+    * orderBy(hash).limit(n) as TakeOrderedAndProject, so every partition
+    * keeps only nCentroids candidate rows and the full corpus never
+    * funnels through one task. The hash doubles as the centroid id
     * (64-bit, collision-free in practice). `nIters` optional Lloyd
     * rounds ([[lloydStep]]) move the sampled centroids to their cell
     * means — cells then follow data density instead of the sample.
@@ -161,16 +164,19 @@ object Similarity {
     rankTopK(assigned.join(probes, "centroid_id"), k)
   }
 
-  /** The coarse-quantizer centroid table `(centroid_id, centv)`: hash-
-    * sampled seeds plus `nIters` Lloyd rounds. Public so an index build
-    * can materialize centroids once and reuse them across query batches
-    * (with [[assignCells]]) instead of re-deriving per query. */
+  /** The coarse-quantizer centroid table `(centroid_id, centv
+    * array<float>)`. The seeds are the first `nCentroids` rows of the
+    * driver-collected hash sample ([[hashSample]]), as a local relation.
+    * `nIters` Lloyd rounds ([[lloydStep]]) then run distributed over the
+    * WHOLE corpus, not the sample, so nothing corpus-sized is collected.
+    * Public so an index build can materialize centroids once and reuse
+    * them across query batches (with [[assignCells]]) instead of
+    * re-deriving per query. */
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                    nCentroids: Int, nIters: Int = 0): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val seeded = c
-      .select(xxhash64(col("neighbor_id")).as("centroid_id"), col("cv").as("centv"))
-      .orderBy("centroid_id").limit(nCentroids)
+    val seeded = centroidTable(corpus.sparkSession,
+      hashSample(corpus, idCol, vecCol, nCentroids), nCentroids)
     (0 until nIters).foldLeft(seeded)((cs, _) => lloydStep(c, cs))
   }
 
@@ -233,80 +239,154 @@ object Similarity {
   // (dim 64, m = 8, k = 16 → 8 bytes vs 256: 32×), and queries score
   // against codes via a per-query lookup table (ADC) — the corpus-side
   // scan reads CODES ONLY; full vectors are fetched just for the top
-  // refine·k rerank join. Codebooks train on a bounded hash sample, so
-  // nothing about training scales with the corpus.
+  // refine·k rerank join. The models (IVF seeds and PQ codebooks) train
+  // in plain Scala on the driver, from ONE collect of a hash sample
+  // bounded by `trainN` rows (1024 × 64 floats ≈ 256 KB by default), the
+  // FAISS split (Jégou et al., TPAMI 2011): nothing about training scales
+  // with the corpus, and no Lloyd round is a Spark job. The model tables
+  // come back as local relations, so nothing is staged for them.
 
   /** Squared L2 between two float arrays (expression). */
   private def l2sq(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** PQ codebooks `(subspace, code, centv)`: `m` subspaces of dim/m dims,
-    * `k` codes each. Seeds are the `k` hash-smallest sampled rows' slices
-    * (TakeOrderedAndProject — no global window, no count pre-pass);
-    * `nIters` Lloyd rounds over the `trainN`-row sample move them to cell
-    * means. Only the bounded sample is ever exploded or shuffled. */
-  def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
-                  dim: Int, m: Int, k: Int, trainN: Int = 1024,
-                  nIters: Int = 2): DataFrame = {
+  /** The `n` rows with the smallest `(xxhash64(id), id)`, collected to
+    * the driver in that order as `(hashes, vectors)`: one job, planned as
+    * TakeOrderedAndProject (each partition keeps `n` rows; no global
+    * sort, no count pre-pass). The id tiebreak makes the cut a total
+    * order even under hash collisions ('training is deterministic', which
+    * ivfPqTopKIndexed ≡ ivfPqTopK rests on, must not assume collision
+    * absence). Rows with a null vector are never sampled. Callers bound
+    * `n` by `trainN` or the centroid count, never by the corpus size. */
+  private def hashSample(corpus: DataFrame, idCol: String, vecCol: String,
+                         n: Int): (Array[Long], Array[Array[Double]]) = {
+    val rows = corpus
+      .select(xxhash64(col(idCol)).as("__h"), col(idCol).as("__sid"),
+        col(vecCol).cast("array<double>").as("cv"))
+      .filter(col("cv").isNotNull)
+      .orderBy("__h", "__sid").limit(n)
+      .select("__h", "cv").collect()
+    (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
+  }
+
+  /** `(centroid_id, centv array<float>)` as a local relation: the first
+    * `n` sample rows, keyed by their hash (64-bit, collision-free in
+    * practice). */
+  private def centroidTable(spark: SparkSession,
+                            sample: (Array[Long], Array[Array[Double]]),
+                            n: Int): DataFrame =
+    spark.createDataFrame(
+      sample._1.iterator.zip(sample._2.iterator).take(n)
+        .map { case (h, v) => Row(h, v.map(_.toFloat).toSeq) }.toSeq.asJava,
+      StructType(Seq(StructField("centroid_id", LongType, nullable = false),
+        StructField("centv", ArrayType(FloatType)))))
+
+  /** PQ codebooks `(subspace, code, centv array<float>)` trained on the
+    * driver, as a local relation. Per subspace, the seeds are the first
+    * `k` of the sample's first `trainN` vectors; each of `nIters` Lloyd
+    * rounds assigns every sample slice to its nearest code (squared L2,
+    * ties to the smallest code), replaces each code with its cell mean
+    * (summed in sample order, cast to float) and drops the cells that
+    * captured nothing. Codes are then renumbered 0..k'-1 in code order,
+    * because the ADC lookup (element_at(lut, code+1)) and the LUT builder
+    * are POSITIONAL over the code-sorted codebook array. */
+  private def codebookTable(spark: SparkSession, vs: Array[Array[Double]],
+                            trainN: Int, dim: Int, m: Int, k: Int,
+                            nIters: Int): DataFrame = {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val sub = dim / m
-    // (__h, id) tiebreak makes the sample cut and the seed window total
-    // orders even under hash collisions — same discipline as
-    // shuffleShards/quotaPerStratum; 'training is deterministic' (which
-    // ivfPqTopKIndexed ≡ ivfPqTopK rests on) must not assume collision
-    // absence.
-    val sample = corpus
-      .select(xxhash64(col(idCol)).as("__h"), col(idCol).as("__sid"),
-        col(vecCol).as("cv"))
-      .orderBy("__h", "__sid").limit(trainN)
-    // staged: the seed selection and EVERY Lloyd round re-consume this
-    // frame, and its lineage is a corpus-wide sample scan — without the
-    // pin each consumer re-reads the corpus (Staged releases per query)
-    val subRows = Staged.stage(sample.select(col("__h"), col("__sid"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          j => slice(col("cv"), j * sub + 1, lit(sub)))))
-      .toDF("__h", "__sid", "subspace", "subv"))
-    val w = Window.partitionBy("subspace").orderBy("__h", "__sid")
-    val seeds = subRows
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("subspace"), (col("__rn") - 1).as("code"),
-        col("subv").as("centv"))
-    val trained = (0 until nIters).foldLeft(seeds) { (cbs, _) =>
-      val packed = cbs.groupBy("subspace")
-        .agg(collect_list(struct(col("code"), col("centv"))).as("cb"))
-      subRows.join(broadcast(packed), "subspace")
-        .select(col("subspace"),
-          array_min(transform(col("cb"), ce =>
-            struct(l2sq(col("subv"), ce.getField("centv")).as("d"),
-              ce.getField("code").as("code")))).getField("code").as("code"),
-          posexplode(col("subv")))
-        .groupBy("subspace", "code", "pos").agg(avg(col("col")).as("mv"))
-        .groupBy("subspace", "code")
-        .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
-        .select(col("subspace"), col("code"),
-          transform(col("pm"), s => s.getField("mv").cast("float")).as("centv"))
+    val xs = vs.take(trainN)
+    xs.foreach(x => require(x.length == dim,
+      s"a sampled vector has ${x.length} elements, not dim = $dim"))
+    val rows = (0 until m).flatMap { j =>
+      val pts = xs.map(x => java.util.Arrays.copyOfRange(x, j * sub, j * sub + sub))
+      val cents = (0 until nIters).foldLeft(pts.take(k))((cs, _) => lloydRound(pts, cs))
+      cents.iterator.zipWithIndex.map { case (c, code) => Row(j, code, c.map(_.toFloat).toSeq) }
     }
-    // Lloyd rounds DROP cells that capture no sample points (standard
-    // k-means shrink), which would leave code values non-contiguous —
-    // but the ADC lookup (element_at(lut, code+1)) and the LUT builder
-    // are POSITIONAL over the code-sorted codebook array. Renumber codes
-    // 0..k'-1 in code order so value == position always holds; encode
-    // and LUT both derive from this table, so they stay consistent.
-    val wRenum = Window.partitionBy("subspace").orderBy("code")
-    // staged: callers consume the codebooks from two plan branches
-    // (encode + LUT build); the table is m×k rows — tiny — but its
-    // lineage is the whole training loop
-    Staged.stage(trained.withColumn("code", row_number().over(wRenum) - 1))
+    spark.createDataFrame(rows.asJava,
+      StructType(Seq(StructField("subspace", IntegerType, nullable = false),
+        StructField("code", IntegerType, nullable = false),
+        StructField("centv", ArrayType(FloatType)))))
+  }
+
+  /** One driver-local Lloyd round over sample slices: nearest code per
+    * point, then the cell means (a double sum in sample order over the
+    * count, rounded to float); empty cells drop out, survivors keep
+    * their order, so a later tie still goes to the smaller code. */
+  private def lloydRound(pts: Array[Array[Double]],
+                         cents: Array[Array[Double]]): Array[Array[Double]] = {
+    val sums = cents.map(c => new Array[Double](c.length))
+    val counts = new Array[Long](cents.length)
+    pts.foreach { p =>
+      val c = nearestCode(p, cents)
+      counts(c) += 1
+      var i = 0
+      while (i < p.length) { sums(c)(i) += p(i); i += 1 }
+    }
+    cents.indices.filter(counts(_) > 0)
+      .map(c => sums(c).map(x => (x / counts(c)).toFloat.toDouble)).toArray
+  }
+
+  /** Index of the code nearest `p` by squared L2; ties (and all-NaN
+    * distances) go to the smaller index. */
+  private def nearestCode(p: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < cents.length) {
+      val q = cents(c)
+      var d = 0.0
+      var i = 0
+      while (i < p.length) { val e = p(i) - q(i); d += e * e; i += 1 }
+      if (d < bestD) { best = c; bestD = d }
+      c += 1
+    }
+    best
+  }
+
+  /** PQ codebooks `(subspace, code, centv array<float>)`: `m` subspaces
+    * of dim/m dims, `k` codes each, trained on the driver
+    * ([[codebookTable]]) from the `trainN`-row hash sample — one Spark
+    * job, the sample collect; the result is a local relation. */
+  def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
+                  dim: Int, m: Int, k: Int, trainN: Int = 1024,
+                  nIters: Int = 2): DataFrame =
+    codebookTable(corpus.sparkSession, hashSample(corpus, idCol, vecCol, trainN)._2,
+      trainN, dim, m, k, nIters)
+
+  /** IVF seeds and PQ codebooks from ONE sample collect: the seeds are
+    * the first `nCentroids` rows of the same `(xxhash64(id), id)`
+    * ordering the codebooks train on, so [[ivfCentroids]] (nIters = 0)
+    * and [[pqCodebooks]] read one sample of max(trainN, nCentroids)
+    * rows. */
+  private def ivfPqModel(unitCorpus: DataFrame, nCentroids: Int, dim: Int,
+                         m: Int, kCodes: Int, trainN: Int,
+                         nIters: Int): (DataFrame, DataFrame) = {
+    val spark = unitCorpus.sparkSession
+    val s = hashSample(unitCorpus, "neighbor_id", "cv", math.max(trainN, nCentroids))
+    (centroidTable(spark, s, nCentroids),
+      codebookTable(spark, s._2, trainN, dim, m, kCodes, nIters))
   }
 
   /** All codebooks packed into ONE broadcastable row:
-    * `__cb` = sorted array over subspaces of (subspace, cb[k]). */
-  private def packCodebooks(codebooks: DataFrame): DataFrame =
-    codebooks.groupBy("subspace")
-      .agg(array_sort(collect_list(struct(col("code"), col("centv")))).as("cb"))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("cb")))).as("__cb"))
+    * `__cb` = sorted array over subspaces of (subspace, cb[k]), cb sorted
+    * by code. One global aggregate collects the m·k-row table sorted by
+    * (subspace, code); each subspace's codes are then filtered out of
+    * that list. A `groupBy("subspace")` would put a hash Exchange (and
+    * a stage) over the local or persisted codebook table, which carries
+    * no partitioning. */
+  private def packCodebooks(codebooks: DataFrame): DataFrame = {
+    val all = col("__all")
+    codebooks
+      .agg(array_sort(collect_list(struct(col("subspace"), col("code"),
+        col("centv")))).as("__all"))
+      .select(transform(array_distinct(transform(all, _.getField("subspace"))), j =>
+        struct(j.as("subspace"),
+          transform(filter(all, _.getField("subspace") === j),
+            e => struct(e.getField("code").as("code"), e.getField("centv").as("centv")))
+            .as("cb"))).as("__cb"))
+  }
 
   /** Encode PQ codes: adds a `codes array<int>` column (and drops the
     * vector) — a pure projection over the broadcast codebook pack: no
@@ -398,7 +478,13 @@ object Similarity {
     * The serving table this models is (centroid_id, neighbor_id, codes):
     * bucketed by cell at write time, the probe is an equi-join on the
     * cell id and the scan I/O is codes-only — the two scale levers
-    * (which rows / how many bytes per row) compose independently. */
+    * (which rows / how many bytes per row) compose independently.
+    *
+    * Building the plan runs one Spark job: the `max(trainN, nCentroids)`
+    * -row hash-sample collect that [[ivfPqModel]] trains both models
+    * from on the driver. The centroid and codebook tables are local
+    * relations, so their two consumers (encode and probe/LUT build)
+    * read them without a pin and nothing is left staged. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, dim: Int, nCentroids: Int = 16,
                 nProbe: Int = 2, m: Int = 8, kCodes: Int = 16,
@@ -407,12 +493,7 @@ object Similarity {
     // cosine_sim expression, which is typed array<float>
     val unitCorpus = corpus.select(col(idCol).as("neighbor_id"),
       unitNormalize(col(vecCol)).cast("array<float>").as("cv"))
-    // staged: the centroid table feeds both cell assignment and the
-    // query probe list; unstaged, each branch re-runs the corpus-wide
-    // hash-sample scan behind ivfCentroids
-    val centroids = Staged.stage(
-      ivfCentroids(unitCorpus, "neighbor_id", "cv", nCentroids))
-    val cbs = pqCodebooks(unitCorpus, "neighbor_id", "cv", dim, m, kCodes,
+    val (centroids, cbs) = ivfPqModel(unitCorpus, nCentroids, dim, m, kCodes,
       trainN, nIters)
     // the index: cell assignment + codes in ONE projection pass, no
     // Exchange (both the centroid pack and the codebook pack broadcast);
@@ -459,22 +540,21 @@ object Similarity {
     * codes) bucketed by cell, plus `<table>_centroids` /
     * `<table>_codebooks` (the tiny model tables serving needs to build
     * probes and LUTs). This is the pay-once index build of a real
-    * deployment: training reads a bounded sample, encoding is one
-    * no-Exchange projection pass over the corpus, and every subsequent
-    * query batch scans m-byte code payloads instead of dim×4-byte
-    * vectors. */
+    * deployment: training runs on the driver over one collected hash
+    * sample of `max(trainN, nCentroids)` rows ([[ivfPqModel]], the same
+    * trainer [[ivfPqTopK]] uses), encoding is one no-Exchange projection
+    * pass over the corpus against the persisted model tables, and every
+    * subsequent query batch scans m-byte code payloads instead of
+    * dim×4-byte vectors. */
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                       table: String, dim: Int, nCentroids: Int = 16,
                       m: Int = 8, kCodes: Int = 16, nBuckets: Int = 8,
                       trainN: Int = 1024, nIters: Int = 2): Unit = {
     val unitCorpus = corpus.select(col(idCol).as("neighbor_id"),
       unitNormalize(col(vecCol)).cast("array<float>").as("cv"))
-    val centroids = ivfCentroids(unitCorpus, "neighbor_id", "cv", nCentroids)
-    val cbs = pqCodebooks(unitCorpus, "neighbor_id", "cv", dim, m, kCodes,
+    val (centroids, cbs) = ivfPqModel(unitCorpus, nCentroids, dim, m, kCodes,
       trainN, nIters)
     centroids.write.mode("overwrite").saveAsTable(s"${table}_centroids")
-    // encoding below reads the PERSISTED tables, so the in-memory
-    // training frames are each consumed exactly once here
     cbs.write.mode("overwrite").saveAsTable(s"${table}_codebooks")
     writeBucketed(encodeForIndex(corpus, idCol, vecCol,
       corpus.sparkSession.table(s"${table}_centroids"),

@@ -129,8 +129,9 @@ object Skew {
     * DataFrame's partition count forces physical planning, and — under
     * AQE, on a frame with upstream exchanges — executes stages at
     * plan-BUILD time, which would corrupt the lazy-plan contract).
-    * Instead the session's entry point (Bench/Verify/Profile) probes
-    * the INPUT LAYOUT once — `ceil(dirBytes / maxPartitionBytes)`, the
+    * Instead the session's entry point (Bench, Verify or a tmsbench
+    * workload's set-up) probes the INPUT LAYOUT once —
+    * `ceil(dirBytes / maxPartitionBytes)`, the
     * same arithmetic the file-scan planner applies — and records it as
     * `spark.graft.scanParallelism`. The helper engages only when that
     * recorded scan parallelism is below `defaultParallelism`; with the

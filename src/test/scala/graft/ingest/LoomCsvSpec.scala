@@ -142,6 +142,21 @@ class LoomCsvSpec extends SparkSpec {
     }
   }
 
+  test("S5: month-pruned read decodes each file as the import does (cp1252 under a month dir)") {
+    val df = LoomCsv.readMonths(spark, root.toString, Seq("2026-08"))
+    val artigos = df.filter(col("month") === "2026-08" && col("Artigo").isNotNull)
+      .select("Artigo").as[String].collect().toSet
+    assert(artigos.contains("CAFÉ") && artigos.contains("\u201cQ\u201d")
+      && artigos.contains("A\u0081B"), s"got $artigos")
+    assert(!artigos.exists(_.contains("\uFFFD")), s"got $artigos")
+    // the same rows as the whole-tree import read of that directory
+    val viaImport = LoomCsv.readWithFallback(spark, root.toString)
+      .filter(col(LoomCsv.sourceFileCol).contains("/2026-08/daily/"))
+    assert(df.drop("month", "dataset_type").exceptAll(viaImport).isEmpty &&
+      viaImport.exceptAll(df.drop("month", "dataset_type")).isEmpty)
+    assert(df.select("dataset_type").distinct().as[String].collect() === Array("daily"))
+  }
+
   test("typed view: float(''|null or 0) → 0.0, shift key decomposed") {
     val df = LoomCsv.typedView(LoomCsv.normalize(LoomCsv.readWithFallback(spark, root.toString)))
     val r = df.filter(col("DataTurno") === "2026-08-01.C" && col("Tear") === "00044")

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -194,6 +195,91 @@ class SimilaritySpec extends SparkSpec {
         lit(0.0), (acc, x) => acc + x).as("s"))
       .agg(avg("s")).as[Double].head()
     assert(selfSim > 0.6, s"mean self-ADC $selfSim too lossy")
+  }
+
+  test("model training: hash-order seeds, smallest-code ties, empty cells dropped, codes renumbered, float centv") {
+    // ids are placed by their xxhash64 rank, so the expected tables below
+    // are worked by hand in rank terms: r0..r5 form the trainN = 6 sample,
+    // r6 lies past the cut and must not move any mean
+    val ranked = spark.range(100, 107).select(col("id"), xxhash64(col("id")).as("h"))
+      .as[(Long, Long)].collect().sortBy(_.swap).toSeq
+    val ids = ranked.map(_._1)
+    assert(ids !== ids.sorted, "the fixture must tell hash order from id order")
+    // subspace 0 (x): two identical seeds (r0, r1) — every tie goes to
+    // code 0, code 1 captures nothing and is dropped, code 2 becomes 1.
+    // subspace 1 (y): r3 = 1.0 sits halfway between seeds 0.0 and 2.0
+    // and must join the smaller code.
+    val xs = Seq(0.0, 0.0, 4.0, 1.0, 3.0, 5.0, 100.0)
+    val ys = Seq(0.0, 2.0, 10.0, 1.0, 9.0, 11.0, 100.0)
+    val df = ids.zip(xs.zip(ys)).map { case (i, (x, y)) => (i, Seq(x, y)) }
+      .toDF("vec_id", "embedding")
+    def table(nIters: Int) = {
+      val cbs = Similarity.pqCodebooks(df, "vec_id", "embedding", dim = 2,
+        m = 2, k = 3, trainN = 6, nIters = nIters)
+      assert(cbs.schema("centv").dataType ===
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
+      cbs.as[(Int, Int, Seq[Float])].collect().sortBy(r => (r._1, r._2)).toSeq
+    }
+    assert(table(0) === Seq((0, 0, Seq(0.0f)), (0, 1, Seq(0.0f)), (0, 2, Seq(4.0f)),
+      (1, 0, Seq(0.0f)), (1, 1, Seq(2.0f)), (1, 2, Seq(10.0f))))
+    val one = Seq((0, 0, Seq((1.0 / 3).toFloat)), (0, 1, Seq(4.0f)),
+      (1, 0, Seq(0.5f)), (1, 1, Seq(2.0f)), (1, 2, Seq(10.0f)))
+    assert(table(1) === one)
+    assert(table(2) === one) // converged: the second round reassigns alike
+    // IVF seeds: the first nCentroids rows of the same ordering, keyed
+    // by their hash, float-typed without a Lloyd round
+    val cents = Similarity.ivfCentroids(df, "vec_id", "embedding", 2)
+    assert(cents.schema("centv").dataType ===
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
+    assert(cents.as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq ===
+      ranked.take(2).zip(Seq(Seq(0.0f, 0.0f), Seq(0.0f, 2.0f)))
+        .map { case ((_, h), v) => (h, v) }.sortBy(_._1))
+  }
+
+  test("trained models do not depend on the corpus's partition count") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    def models(df: org.apache.spark.sql.DataFrame) = (
+      Similarity.pqCodebooks(df, "vec_id", "embedding", dim = 64, m = 16, k = 16,
+        trainN = 256, nIters = 2).as[(Int, Int, Seq[Float])].collect().sortBy(r => (r._1, r._2)).toSeq,
+      Similarity.ivfCentroids(df, "vec_id", "embedding", 16)
+        .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq)
+    val one = models(emb.coalesce(1))
+    assert(one._1.size === 16 * 16 && one._2.size === 16)
+    assert(models(emb.repartition(8)) === one)
+  }
+
+  test("ivfPqTopK: building the plan runs one job (the sample collect) and pins nothing") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val pinned = sc.getPersistentRDDs.keySet
+      Staged.withStaged {
+        sc.setJobGroup("ivfpq-build", "build")
+        val q = try Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 20),
+            "vec_id", "embedding", 5, dim = 64, nCentroids = 16, nProbe = 8, m = 16,
+            refine = 8)
+          finally sc.clearJobGroup()
+        assert(sc.getPersistentRDDs.keySet === pinned)
+        // listener events arrive in order: once the sentinel job is seen,
+        // every job the build started has been seen too
+        sc.setJobGroup("ivfpq-sentinel", "sentinel")
+        try spark.range(1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!groups.contains("ivfpq-sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(groups.contains("ivfpq-sentinel"))
+        assert(groups.asScala.count(_ == "ivfpq-build") === 1, groups.toString)
+        assert(q.count() > 0)
+        // the model tables are local relations: running the query pins nothing
+        assert(sc.getPersistentRDDs.keySet === pinned)
+      }
+      assert(sc.getPersistentRDDs.keySet === pinned)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("multi-table near-dup LSH reaches full recall vs the exact pairs (sf0.01)") {

@@ -1,7 +1,10 @@
 package graft.queries
 
 import graft.{SparkSpec, SparkEntry}
-import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
+import org.apache.spark.sql.execution.{QueryExecution, SimpleMode}
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Plan-shape guards (SCALE.md evidence): these queries must keep the
   * physical plans that survive 100 TB — broadcast joins for dim chains,
@@ -78,18 +81,46 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
   }
 
-  private def emptyPartitionWindows(name: String) =
-    SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.isEmpty => w
-    }
+  private def emptyPartitionWindows(p: LogicalPlan) =
+    p.collect { case w: Window if w.partitionSpec.isEmpty => w }
+
+  private def emptyPartitionWindows(name: String): Seq[Window] =
+    emptyPartitionWindows(SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan)
 
   test("q35 IVF: no single-partition window anywhere in the plan") {
     // the round-1 centroid selector ran row_number over the whole corpus
     // in one task; the hash-sampled quantizer must never regress to that
     assert(emptyPartitionWindows("q35_ivf_topk").isEmpty)
-    val p = plan("q35_ivf_topk")
-    assert(p.contains("TakeOrderedAndProject"), p) // centroid sample plan
+    // the centroids are the driver-collected hash sample, which enters
+    // the query plan as a local relation; the sample itself runs as its
+    // own collect job while the plan is built, so the guard is applied
+    // to that job's plan, captured by a listener
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        built.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        built.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    val p = try {
+      val p = plan("q35_ivf_topk")
+      // listener events arrive in order: once the sentinel's is seen,
+      // every query the plan build ran has been seen too
+      val sentinel = spark.range(1).toDF()
+      sentinel.collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!built.asScala.exists(_ eq sentinel.queryExecution) &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      assert(built.asScala.exists(_ eq sentinel.queryExecution))
+      p
+    } finally spark.listenerManager.unregister(listener)
+    assert(p.contains("LocalTableScan [centroid_id"), p)
+    val samples = built.asScala.toSeq.filter(
+      _.executedPlan.treeString.contains("TakeOrderedAndProject"))
+    assert(samples.nonEmpty, built.asScala.map(_.executedPlan.treeString).mkString("\n"))
+    samples.foreach(qe =>
+      assert(emptyPartitionWindows(qe.optimizedPlan).isEmpty, qe.optimizedPlan.treeString))
   }
 
   test("q35 IVF assignment: expression argmax — no corpus shuffle, one window total") {
