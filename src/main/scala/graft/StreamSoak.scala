@@ -5,39 +5,36 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
-/** Streaming state soak: drive the watermark-bounded intake path
-  * (`cleanDocs` → `dropDuplicatesWithinWatermark`) through N
-  * micro-batches of advancing event time and record the state store's
-  * rows/bytes after every batch — the long-run evidence that the
-  * watermark actually EVICTS: per-monitor specs prove semantics on a
-  * handful of batches, this proves the state curve plateaus instead of
-  * growing with total input (the difference between "runs forever" and
-  * "OOMs in week two" on a real cluster).
+/** Streaming intake soak: drive the production intake
+  * (`cleanDocs` → `dedupedDocs` → `corpusIngestSink`) into a temp
+  * directory through N micro-batches and record, per batch, the sink's
+  * `addBatch` time and the dedup state's rows — the long-run evidence
+  * for what the intake guarantees: per-batch cost stays flat however
+  * large the sink grows, and the state holds exactly one row per
+  * distinct novel hash (nothing leaks, nothing is evicted).
   *
-  * Batch shape (per batch b, event time advancing 1 min/batch,
-  * watermark 10 min): `fresh` brand-new documents, `refetchRecent`
-  * re-fetches of batch b−1 content (inside the horizon — the dedup
-  * state must drop them), and `refetchOld` re-fetches of batch b−20
-  * content — which probes the retention EDGE: an entry is evictable
-  * when watermark > eventTime + delay and the watermark lags one
-  * batch, so entries live ~2×delay + 1 batches (~21 here; Spark's
-  * dropDuplicatesWithinWatermark guarantee covers events within
-  * delay of EACH OTHER, which needs the 2× window). The measured
-  * 60-batch run (BENCHNOTES round 10) confirms it: the b−20 refetch
-  * is consistently still deduped (emitted stays exactly
-  * fresh-per-batch) and state plateaus at ~2×delay×novelty. A leak
-  * shows as numRowsTotal growing ~linearly with b; health shows as
-  * that plateau — size state for 2×delay, not 1×.
+  * Batch shape (per batch b, event time advancing 1 min/batch): `fresh`
+  * brand-new documents, `refetch` re-fetches of batch b−1 content and
+  * `refetch` re-fetches of batch b/2 content — a duplicate as old as
+  * half the stream, hours of event time behind once b is large. Only
+  * the fresh documents are novel.
   *
-  * Usage: `runMain graft.StreamSoak [nBatches] [freshPerBatch]`.
-  * Prints one line per batch: batch, input rows, emitted rows,
-  * state rows, state MB, watermark. */
+  * Checks (exit 1 if either fails):
+  *   - no drift: the median `addBatch` ms of the last 10 batches is at
+  *     or below the upper quartile of batches 10-20;
+  *   - state rows equal the cumulative distinct novel hashes after every
+  *     batch, and the sink holds exactly those hashes once each.
+  *
+  * Usage: `runMain graft.StreamSoak [nBatches] [freshPerBatch]`. The
+  * state-store provider is Spark's own setting; for RocksDB run
+  * `sbt 'set run / javaOptions += "-Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"' "runMain graft.StreamSoak 300"`.
+  * Prints one line per batch: batch, input rows, novel rows, addBatch
+  * ms, state rows, state MB. */
 object StreamSoak {
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(60)
     val fresh = if (args.length > 1) args(1).toInt else 150
-    val refetchRecent = fresh / 3
-    val refetchOld = fresh / 3
+    val refetch = fresh / 3
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -56,49 +53,70 @@ object StreamSoak {
     def docs(b: Int): Seq[StreamDoc] = {
       val f = (0 until fresh).map(i =>
         StreamDoc(b * 100000L + i, ts(b), text(b, i), "en", "crawl0"))
-      val recent = if (b >= 1) (0 until refetchRecent).map(i =>
+      val recent = if (b >= 1) (0 until refetch).map(i =>
         StreamDoc(b * 100000L + 50000L + i, ts(b), text(b - 1, i), "en", "crawl1"))
       else Seq.empty
-      val old = if (b >= 20) (0 until refetchOld).map(i =>
-        StreamDoc(b * 100000L + 70000L + i, ts(b), text(b - 20, i), "en", "crawl2"))
+      val old = if (b >= 2) (0 until refetch).map(i =>
+        StreamDoc(b * 100000L + 70000L + i, ts(b), text(b / 2, fresh - 1 - i), "en", "crawl2"))
       else Seq.empty
       f ++ recent ++ old
     }
 
+    val dir = java.nio.file.Files.createTempDirectory("stream_soak").toString
+    val sink = s"$dir/corpus"
     val src = MemoryStream[StreamDoc]
-    val q = CorpusStream.dedupedDocs(
-        CorpusStream.cleanDocs(src.toDF()), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("soak_deduped")
-      .outputMode("append").start()
-    println(f"${"batch"}%5s ${"input"}%7s ${"emitted"}%8s ${"cumOut"}%8s " +
+    val q = CorpusStream.corpusIngestSink(
+        CorpusStream.dedupedDocs(CorpusStream.cleanDocs(src.toDF())),
+        sink, s"$dir/ckpt").start()
+    println("state store provider: " +
+      spark.conf.get("spark.sql.streaming.stateStore.providerClass"))
+    println(f"${"batch"}%5s ${"input"}%7s ${"novel"}%6s ${"addBatchMs"}%10s " +
       f"${"stateRows"}%10s ${"stateMB"}%8s")
-    var prevOut = 0L
-    val stateRows = scala.collection.mutable.ArrayBuffer[Long]()
+    val addBatchMs = scala.collection.mutable.ArrayBuffer[Long]()
+    var stateOk = true
     (0 until nBatches).foreach { b =>
       val batch = docs(b)
       src.addData(batch)
       q.processAllAvailable()
-      val out = spark.sql("SELECT count(*) FROM soak_deduped").head().getLong(0)
-      val so = q.recentProgress.reverse.iterator
-        .flatMap(_.stateOperators).find(_ => true)
-      val rows = so.map(_.numRowsTotal).getOrElse(-1L)
-      val memMb = so.map(_.memoryUsedBytes / 1048576.0).getOrElse(-1.0)
-      stateRows += rows
-      println(f"$b%5d ${batch.size}%7d ${out - prevOut}%8d $out%8d " +
-        f"$rows%10d $memMb%8.2f")
-      prevOut = out
+      // an idle trigger also reports the next batch id, without addBatch
+      val p = Iterator.continually(q.recentProgress.find(p =>
+          p.batchId == b && p.durationMs.containsKey("addBatch")))
+        .map { p => if (p.isEmpty) Thread.sleep(5); p }
+        .collectFirst { case Some(p) => p }.get
+      val so = p.stateOperators.head
+      val ms = p.durationMs.get("addBatch").longValue
+      addBatchMs += ms
+      if (so.numRowsTotal != (b + 1L) * fresh) stateOk = false
+      println(f"$b%5d ${batch.size}%7d ${so.numRowsUpdated}%6d $ms%10d " +
+        f"${so.numRowsTotal}%10d ${so.memoryUsedBytes / 1048576.0}%8.2f")
     }
     q.stop()
-    // plateau check: the mean state over the last third vs the first
-    // post-warmup third — a leak reads >> 1
-    val warm = stateRows.drop(15)
-    if (warm.nonEmpty) {
-      val firstThird = warm.take(warm.size / 3)
-      val lastThird = warm.takeRight(warm.size / 3)
-      val ratio = lastThird.sum.toDouble / math.max(1L, firstThird.sum)
-      println(f"plateau ratio (last-third / first-third state rows, " +
-        f"post-warmup): $ratio%.3f  (leak-free ~= 1.0)")
+    val hashes = spark.read.parquet(s"$sink/batch=*").select("content_hash")
+      .as[String].collect()
+    val sinkOk = hashes.length == nBatches.toLong * fresh &&
+      hashes.distinct.length == hashes.length
+    println(s"state rows = cumulative distinct novel hashes: $stateOk; " +
+      s"sink holds each novel hash once (${hashes.length} rows): $sinkOk")
+    def quartiles(xs: Seq[Long]): (Double, Double, Double) = {
+      val s = xs.sorted.map(_.toDouble)
+      def at(f: Double) = {
+        val x = f * (s.size - 1)
+        val lo = x.toInt
+        s(lo) + (x - lo) * (s(math.min(lo + 1, s.size - 1)) - s(lo))
+      }
+      (at(0.25), at(0.5), at(0.75))
     }
+    val driftOk = nBatches < 30 || {
+      val (q1, med, q3) = quartiles(addBatchMs.slice(10, 21).toSeq)
+      val (_, last, _) = quartiles(addBatchMs.takeRight(10).toSeq)
+      println(f"addBatch ms: batches 10-20 median $med%.0f (quartiles $q1%.0f-$q3%.0f); " +
+        f"last 10 median $last%.0f")
+      last <= q3
+    }
+    println(s"no drift: $driftOk")
+    val root = new org.apache.hadoop.fs.Path(dir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
     spark.stop()
+    if (!(stateOk && sinkOk && driftOk)) sys.exit(1)
   }
 }

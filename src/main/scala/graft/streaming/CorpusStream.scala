@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** A document arriving on the intake stream (matches
@@ -62,13 +62,16 @@ case class SourceDrift(source: String, n_a: Long, n_b: Long,
   *   - PER-DOCUMENT stages (normalize, quality gate, language gate) are
   *     stateless projections — identical code paths work on batch and
   *     streaming frames, so the gates can never drift between the two.
-  *   - WITHIN-STREAM exact dedup runs on the content hash with
-  *     watermark-bounded state (`dropDuplicatesWithinWatermark`): a crawl
-  *     re-fetching a page within the horizon dedups here, for free.
-  *   - AGAINST-CORPUS exact dedup happens in the sink's per-batch
-  *     anti-join on content hashes (hashes move, documents don't — the
-  *     [[graft.ops.IncrementalDedup]] discipline); near-dup folding of
-  *     the accumulated deltas is the scheduled
+  *   - EXACT dedup, within a batch and against everything the stream
+  *     ever admitted, is one keyed operator on the content hash
+  *     ([[dedupedDocs]]): the query's own state holds one flag per
+  *     admitted hash, so a batch probes only its own keys and never
+  *     re-reads the sink — hashes move, documents don't (the
+  *     [[graft.ops.IncrementalDedup]] discipline). State grows with the
+  *     distinct hashes, as the sink's hash column does; large state
+  *     belongs on the RocksDB state-store provider.
+  *   - The SINK only writes: an append-only `batch=<id>` delta log.
+  *     Near-dup folding of the accumulated deltas is the scheduled
   *     `IncrementalDedup.dedupDelta` batch job, NOT the stream — pair
   *     candidate generation needs the corpus-wide inverted index, which
   *     streaming state should never hold.
@@ -173,8 +176,8 @@ object CorpusStream {
     *
     * Unlike the KMV monitor a COUNT sketch is not replay-absorbing (a
     * redelivered batch adds its counts again) — wire it downstream of
-    * [[dedupedDocs]] so within-horizon redeliveries are dropped before
-    * they reach state; that is the documented intake order anyway. */
+    * [[dedupedDocs]] so every redelivered document is dropped before it
+    * reaches state; that is the documented intake order anyway. */
   def lengthQuantileMonitor(docs: DataFrame, binWidth: Long = 16L)
       : org.apache.spark.sql.Dataset[SourceLengthQuantiles] = {
     import docs.sparkSession.implicits._
@@ -215,8 +218,8 @@ object CorpusStream {
     *
     * Like the histogram monitor (and unlike the duplicate-absorbing
     * KMV), a COUNT sketch is not replay-absorbing — wire it downstream
-    * of [[dedupedDocs]] so within-horizon redeliveries never reach
-    * state; that is the documented intake order anyway. */
+    * of [[dedupedDocs]] so no redelivered document ever reaches state;
+    * that is the documented intake order anyway. */
   def frequencyMonitor(docs: DataFrame, probeTerms: Seq[String],
                        d: Int = 4, w: Int = 64)
       : org.apache.spark.sql.Dataset[SourceTermFrequencies] = {
@@ -278,39 +281,60 @@ object CorpusStream {
       }
   }
 
-  /** Within-stream exact dedup: drop documents whose content hash was
-    * already seen inside the watermark horizon. State is hash-sized and
-    * watermark-bounded, so the job runs forever; re-fetches and
-    * duplicate submissions inside the horizon never reach the sink.
-    * Duplicates straddling the horizon are caught by the sink's
-    * against-corpus anti-join — this stage exists to keep those batch
-    * anti-joins small, not to be the only line of defense. */
-  def dedupedDocs(cleaned: DataFrame,
-                  watermark: String = "10 minutes"): DataFrame =
-    cleaned.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("content_hash")
+  /** Exact content dedup for the whole stream, in one keyed operator:
+    * documents group by `content_hash`, and the keyed state is one flag
+    * per hash the stream has admitted. A hash not yet in state emits
+    * its batch's min-`doc_id` row (nulls first, so the survivor does
+    * not depend on which input partition delivered each copy; copies
+    * tied on `doc_id` keep either one) and sets the flag; a hash
+    * already in state emits nothing. That one probe covers same-batch
+    * duplicates, re-fetches and redeliveries, however far apart their
+    * event times are.
+    *
+    * There is no watermark: no late row is silently dropped (a novel
+    * document with an old event time is admitted), and no no-data batch
+    * ever runs. The state is never evicted, so it grows with the
+    * distinct hashes — the same growth as the sink's hash column, but a
+    * batch reads only its own keys. A replayed batch re-runs against
+    * the state version it first ran with and emits the same rows. */
+  def dedupedDocs(cleaned: DataFrame): DataFrame = {
+    val id = cleaned.schema.fieldIndex("doc_id")
+    val hash = cleaned.schema.fieldIndex("content_hash")
+    val minIdFirst: Ordering[Row] = Ordering.by((r: Row) =>
+      if (r.isNullAt(id)) None else Some(r.getLong(id)))
+    cleaned
+      .groupByKey((r: Row) => r.getString(hash))(Encoders.STRING)
+      .flatMapGroupsWithState[Boolean, Row](OutputMode.Append,
+        GroupStateTimeout.NoTimeout) { (_, rows, admitted) =>
+        if (admitted.exists) Iterator.empty
+        else {
+          admitted.update(true)
+          Iterator.single(rows.min(minIdFirst))
+        }
+      }(Encoders.scalaBoolean, Encoders.row(cleaned.schema))
+      .toDF()
+  }
 
-  /** Append-only corpus sink with against-corpus exact dedup: each
-    * micro-batch anti-joins its content hashes against everything the
-    * sink already holds, then appends only the novel documents into
-    * `sinkPath/batch=<id>/`. Batch-id-named directories + overwrite make
-    * replays IDEMPOTENT (a crashed batch re-runs into the same dir); the
-    * corpus itself is never rewritten — this is an append-only delta
-    * log, exactly the shape `IncrementalDedup.dedupDelta` folds with a
-    * scheduled near-dup pass. The anti-join probe reads only the
-    * `content_hash` column of the existing corpus (column pruning at the
-    * scan), so sink growth costs hash-column I/O, not document I/O. */
+  /** Append-only corpus sink: each micro-batch of [[dedupedDocs]]'s
+    * output — already novel against everything the stream admitted —
+    * lands in `sinkPath/batch=<id>/`. Batch-id-named directories +
+    * overwrite make replays IDEMPOTENT (a crashed batch re-runs into the
+    * same dir with the same rows); the corpus itself is never rewritten
+    * — this is an append-only delta log, exactly the shape
+    * `IncrementalDedup.dedupDelta` folds with a scheduled near-dup pass.
+    * A batch writes only its own rows and reads nothing back, so its
+    * cost does not grow with the sink. */
   def corpusIngestSink(deduped: DataFrame, sinkPath: String,
-                       checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(deduped, checkpoint) { (rawBatch, batchId) =>
-      writeNovelBatch(rawBatch, batchId, sinkPath)
+                       checkpoint: String): DataStreamWriter[Row] =
+    foreachBatchSink(deduped, checkpoint) { (batch, batchId) =>
+      writeNovelBatch(batch, batchId, sinkPath)
     }
 
   /** The shared sink scaffolding — one place owns the output mode and
     * checkpoint wiring for every foreachBatch corpus sink. */
   private def foreachBatchSink(deduped: DataFrame, checkpoint: String)
                               (body: (DataFrame, Long) => Unit)
-                              : DataStreamWriter[org.apache.spark.sql.Row] =
+                              : DataStreamWriter[Row] =
     deduped.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
@@ -318,38 +342,14 @@ object CorpusStream {
         body(rawBatch, batchId)
       }
 
-  /** One micro-batch of the append-only sink: within-batch dedup →
-    * against-corpus hash anti-join → idempotent `batch=<id>` overwrite.
-    * Returns Unit — a consumer that wants the written rows reads the
-    * `batch=<id>` directory back itself (the plain sink must not pay a
-    * per-batch read-back it would only discard). */
-  private def writeNovelBatch(rawBatch: DataFrame, batchId: Long,
-                              sinkPath: String): Unit = {
-    val spark = rawBatch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(sinkPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // within-BATCH exact dedup: the watermark stage only guarantees
-    // dedup for duplicates whose event times fall inside the
-    // horizon — a backfill burst can land two same-content docs
-    // hours apart in ONE micro-batch, and the anti-join below only
-    // probes PRIOR batches. Keep-min-id so the survivor is
-    // deterministic.
-    val batch = graft.ops.Merge.lastWriterWins(
-      Seq("content_hash"), Seq(col("doc_id").asc))(rawBatch)
-    val novel =
-      if (fs.exists(new org.apache.hadoop.fs.Path(sinkPath)) &&
-          fs.globStatus(new org.apache.hadoop.fs.Path(s"$sinkPath/batch=*")).nonEmpty) {
-        // exclude THIS batch's own directory from the seen set: a
-        // replayed batch would otherwise anti-join against its own
-        // previous output and overwrite itself with nothing
-        val seen = spark.read.option("basePath", sinkPath)
-          .parquet(s"$sinkPath/batch=*")
-          .filter(col("batch") =!= batchId)
-          .select("content_hash")
-        batch.join(seen, Seq("content_hash"), "left_anti")
-      } else batch
-    novel.write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-  }
+  /** One micro-batch of the append-only sink: an idempotent
+    * `batch=<id>` overwrite. Returns Unit — a consumer that wants the
+    * written rows reads the `batch=<id>` directory back itself (the
+    * plain sink must not pay a per-batch read-back it would only
+    * discard). */
+  private def writeNovelBatch(batch: DataFrame, batchId: Long,
+                              sinkPath: String): Unit =
+    batch.write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
 
   /** [[corpusIngestSink]] plus SERVING-INDEX MAINTENANCE — the streaming
     * twin of the q94 story: each micro-batch's novel documents are
@@ -390,7 +390,7 @@ object CorpusStream {
                                 checkpoint: String,
                                 embed: DataFrame => DataFrame,
                                 indexTable: String,
-                                nBuckets: Int = 8): DataStreamWriter[org.apache.spark.sql.Row] = {
+                                nBuckets: Int = 8): DataStreamWriter[Row] = {
     val geom = deduped.sparkSession.table(s"${indexTable}_codebooks")
       .agg(countDistinct(col("subspace")), max(size(col("centv")))).head
     val m = geom.getLong(0).toInt
@@ -400,7 +400,7 @@ object CorpusStream {
       writeNovelBatch(rawBatch, batchId, sinkPath)
       val novel = spark.read.parquet(s"$sinkPath/batch=$batchId")
       // one embedding per id even when a batch carries the same id with
-      // DIFFERENT content (the sink dedups on content hash, not id):
+      // DIFFERENT content (the intake dedups on content hash, not id):
       // keep the hash-min row deterministically
       val onePerId = graft.ops.Merge.lastWriterWins(
         Seq("doc_id"), Seq(col("content_hash").asc))(novel)
@@ -479,7 +479,7 @@ object CorpusStream {
                        required: Set[String],
                        acceptPath: String, quarantinePath: String,
                        reportPath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(rules.nonEmpty, "admission control needs at least one rule")
     val names = rules.map(_.name).toSet
     require(required.subsetOf(names),
@@ -598,7 +598,7 @@ object CorpusStream {
                    outPath: String, checkpoint: String,
                    k: Int = 3, w: Int = 4, minShared: Int = 2,
                    maxDf: Long = 1000L)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     foreachBatchSink(docs, checkpoint) { (batch, batchId) =>
       if (!batch.isEmpty) {
         graft.ops.Staged.withStaged {

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 class CorpusStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -42,11 +43,10 @@ class CorpusStreamSpec extends SparkSpec {
     assert(byId(1L)._5 === byId(4L)._5)
   }
 
-  test("dedupedDocs: same content within the watermark reaches the sink once") {
+  test("dedupedDocs: same content reaches the output once, across batches") {
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[StreamDoc]
-    val q = CorpusStream.dedupedDocs(
-        CorpusStream.cleanDocs(src.toDF()), watermark = "1 hour")
+    val q = CorpusStream.dedupedDocs(CorpusStream.cleanDocs(src.toDF()))
       .writeStream.format("memory").queryName("stream_deduped")
       .outputMode("append").start()
     src.addData(doc(1, t(1), good), doc(2, t(1, 5), good + " extra"))
@@ -61,56 +61,182 @@ class CorpusStreamSpec extends SparkSpec {
     assert(ids === Set(1L, 2L))
   }
 
-  test("corpusIngestSink: against-corpus anti-join appends only novel content; replay idempotent") {
+  /** One JSON-lines file landed atomically (hidden temp name, then a
+    * rename) into a file-source landing directory. */
+  private def land(dir: java.io.File, name: String, rows: Seq[String]): Unit = {
+    dir.mkdirs()
+    val tmp = new java.io.File(dir, "." + name)
+    java.nio.file.Files.write(tmp.toPath, rows.mkString("", "\n", "\n").getBytes("UTF-8"))
+    java.nio.file.Files.move(tmp.toPath, new java.io.File(dir, name).toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private def json(d: StreamDoc): String = json(d.doc_id.toString, d.ts, d.text)
+
+  private def json(id: String, ts: Timestamp, text: String): String =
+    s"""{"doc_id":$id,"ts":"${ts.toLocalDateTime}","text":"$text","lang":"en","source":"crawl0"}"""
+
+  /** readDocs → cleanDocs → dedupedDocs → corpusIngestSink over a
+    * landing directory: the production intake, end to end. */
+  private def intake(landing: java.io.File, sink: String, ckpt: String) = {
+    landing.mkdirs()
+    CorpusStream.corpusIngestSink(
+      CorpusStream.dedupedDocs(CorpusStream.cleanDocs(
+        CorpusStream.readDocs(spark, landing.getPath))),
+      sink, ckpt).start()
+  }
+
+  private def sinkRows(sink: String): Seq[(Long, Long, String)] =
+    spark.read.option("basePath", sink).parquet(s"$sink/batch=*")
+      .select("batch", "doc_id", "content_hash").as[(Long, Long, String)]
+      .collect().toSeq
+
+  test("dedupedDocs: a duplicate three batches and hours later reaches the sink once") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("corpus_stream").toString
+    val dir = java.nio.file.Files.createTempDirectory("corpus_horizon").toString
     val sink = s"$dir/corpus"
     val src = MemoryStream[StreamDoc]
     val q = CorpusStream.corpusIngestSink(
-        CorpusStream.dedupedDocs(CorpusStream.cleanDocs(src.toDF()), "1 hour"),
-        sink, s"$dir/ckpt").start()
+      CorpusStream.dedupedDocs(CorpusStream.cleanDocs(src.toDF())),
+      sink, s"$dir/ckpt").start()
     try {
-      src.addData(doc(1, t(1), good), doc(2, t(1), good + " indeed"))
+      Seq(Seq(doc(1, t(1), good)),
+          Seq(doc(2, t(2), "a wholly different body of text here")),
+          Seq(doc(3, t(3), "yet another body of text for the corpus")),
+          // doc 1's content again, 8 hours of event time later
+          Seq(doc(4, t(9), good), doc(5, t(9), "and one more novel text for it")))
+        .foreach { b => src.addData(b: _*); q.processAllAvailable() }
+      val rows = sinkRows(sink)
+      assert(rows.map(_._2).toSet === Set(1L, 2L, 3L, 5L), rows.toString)
+      assert(rows.map(_._3).distinct.size === rows.size)
+    } finally q.stop()
+  }
+
+  test("dedupedDocs: a novel document older than all earlier input is admitted") {
+    implicit val sqlCtx = spark.sqlContext
+    val src = MemoryStream[StreamDoc]
+    val q = CorpusStream.dedupedDocs(CorpusStream.cleanDocs(src.toDF()))
+      .writeStream.format("memory").queryName("stream_late")
+      .outputMode("append").start()
+    try {
+      src.addData(doc(1, t(10), good))
+      q.processAllAvailable()
+      src.addData(doc(2, t(12), good + " indeed"))
+      q.processAllAvailable()
+      // nine hours before anything seen so far: a novel text is kept,
+      // a late copy of doc 1's content is still a duplicate
+      src.addData(doc(3, t(1), "a late body of text from an old crawl"),
+        doc(4, t(0), good))
+      q.processAllAvailable()
+      val ids = spark.sql("SELECT doc_id FROM stream_late")
+        .collect().map(_.getLong(0)).toSet
+      assert(ids === Set(1L, 2L, 3L))
+    } finally q.stop()
+  }
+
+  test("dedupedDocs: keep-min-id holds when a batch's duplicates come from several input partitions") {
+    val dir = java.nio.file.Files.createTempDirectory("corpus_minid").toFile
+    val landing = new java.io.File(dir, "landing")
+    val other = "a wholly different body of text here"
+    // one file per copy, all landed before the query starts: one batch
+    land(landing, "a.json", Seq(json(doc(30, t(1), good)), json(doc(8, t(1), other))))
+    land(landing, "b.json", Seq(json(doc(10, t(2), good))))
+    land(landing, "c.json", Seq(json(doc(20, t(3), good)),
+      json("null", t(3), other))) // a null id sorts first, as `asc` puts it
+    assert(spark.read.schema(CorpusStream.schema).json(landing.getPath)
+      .rdd.getNumPartitions > 1, "the copies must span input partitions")
+    val sink = s"$dir/corpus"
+    val q = intake(landing, sink, s"$dir/ckpt")
+    try {
+      q.processAllAvailable()
+      val kept = spark.read.parquet(s"$sink/batch=0")
+        .select("doc_id", "norm_text").collect()
+        .map(r => r.getString(1) -> Option(r.get(0))).toMap
+      assert(kept === Map(good -> Some(10L), other -> None), kept.toString)
+    } finally q.stop()
+  }
+
+  test("corpusIngestSink: only novel content lands; a replayed batch rewrites its own rows") {
+    val dir = java.nio.file.Files.createTempDirectory("corpus_stream").toFile
+    val landing = new java.io.File(dir, "landing")
+    val sink = s"$dir/corpus"
+    val ckpt = s"$dir/ckpt"
+    var q = intake(landing, sink, ckpt)
+    try {
+      land(landing, "f0.json", Seq(json(doc(1, t(1), good)), json(doc(2, t(1), good + " indeed"))))
       q.processAllAvailable()
       // second batch: one replayed content (new id, same text), one
-      // genuinely new doc — and a SAME-BATCH duplicate of the new doc
-      // with an event time beyond the watermark horizon (3h vs 1h):
-      // dropDuplicatesWithinWatermark makes no promise there, so the
-      // sink's within-batch keep-min-id dedup must catch it
-      src.addData(doc(20, t(2), good),
-        doc(21, t(2), "a wholly different body of text here"),
-        doc(22, t(5), "a wholly different body of text here"))
+      // genuinely new doc and a same-batch duplicate of it hours apart
+      land(landing, "f1.json", Seq(json(doc(20, t(2), good)),
+        json(doc(22, t(5), "a wholly different body of text here")),
+        json(doc(21, t(2), "a wholly different body of text here"))))
       q.processAllAvailable()
-      val corpus = spark.read.option("basePath", sink).parquet(s"$sink/batch=*")
-      val ids = corpus.select("doc_id").as[Long].collect().toSet
-      assert(ids === Set(1L, 2L, 21L), ids.toString)
-      // every content hash appears exactly once across the delta log
-      val dupes = corpus.groupBy("content_hash").count().filter(col("count") > 1).count()
-      assert(dupes === 0L)
-      // replay idempotence: re-writing a batch dir with the same id must
-      // not lose rows to an anti-join against its own previous output —
-      // simulate by re-running the sink body for the last batch id
-      val batches = corpus.select("batch").distinct().as[Long].collect().sorted
-      val last = batches.max
-      // materialize the replayed batch up front: in production the batch
-      // rows come from the STREAM (checkpointed state), not from the sink
-      // dir being overwritten — a lazy self-read would model the wrong
-      // thing and also race the overwrite
-      val replayedDf = spark.read.option("basePath", sink)
-        .parquet(s"$sink/batch=$last").drop("batch")
-      val replayed = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          java.util.Arrays.asList(replayedDf.collect(): _*)),
-        replayedDf.schema)
-      // the production body: anti-join excludes batch=last, overwrite
-      val seen = spark.read.option("basePath", sink).parquet(s"$sink/batch=*")
-        .filter(col("batch") =!= last).select("content_hash")
-      val novel = replayed.join(seen, Seq("content_hash"), "left_anti")
-      novel.write.mode("overwrite").parquet(s"$sink/batch=$last")
-      val after = spark.read.option("basePath", sink).parquet(s"$sink/batch=*")
-        .select("doc_id").as[Long].collect().toSet
-      assert(after === ids, after.toString)
+      q.stop()
+      val before = sinkRows(sink)
+      assert(before.map(r => r._1 -> r._2).toSet === Set(0L -> 1L, 0L -> 2L, 1L -> 21L),
+        before.toString)
+      assert(before.map(_._3).distinct.size === before.size)
+      // forget that batch 1 committed: on restart Spark re-runs it from
+      // its offsets, against the state version it first ran with
+      def parts = new java.io.File(s"$sink/batch=1").list()
+        .filter(_.endsWith(".parquet")).toSet
+      val firstParts = parts
+      Seq("1", ".1.crc").foreach(f => new java.io.File(s"$ckpt/commits/$f").delete())
+      q = intake(landing, sink, ckpt)
+      q.processAllAvailable()
+      assert(q.lastProgress.batchId === 1L, "the restart re-ran batch 1 only")
+      assert(parts !== firstParts, "batch=1 was rewritten")
+      val after = sinkRows(sink)
+      assert(after.sorted === before.sorted, after.toString)
     } finally q.stop()
+  }
+
+  test("corpusIngestSink: a data batch scans no sink file; N landed files run N micro-batches") {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val dir = java.nio.file.Files.createTempDirectory("corpus_pin").toFile
+    val landing = new java.io.File(dir, "landing")
+    val sink = s"$dir/corpus"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+          case _ =>
+        }
+    }
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    spark.sparkContext.addSparkListener(listener)
+    val q = intake(landing, sink, s"$dir/ckpt")
+    val n = 3
+    try {
+      (0 until n).foreach { i =>
+        land(landing, s"f$i.json", Seq(json(doc(i, t(i), s"$good number w$i")),
+          json(doc(100 + i, t(i), good))))
+        q.processAllAvailable()
+      }
+      // listener events arrive in order: once the sentinel's plan is
+      // seen, every plan the stream ran has been seen too
+      val sentinel = "corpus-pin-sentinel"
+      spark.range(1).select(lit(sentinel)).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def seen = plans.asScala.exists(p => nodes(p).exists(_.simpleString.contains(sentinel)))
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen)
+      val all = plans.asScala.toSeq.flatMap(nodes)
+      assert(all.exists(p => p.nodeName.contains("InsertIntoHadoopFsRelationCommand") &&
+        p.simpleString.contains(sink)), "the sink writes were captured")
+      val sinkScans = all.filter(p => p.nodeName.contains("Scan") &&
+        (p.simpleString + p.metadata.values.mkString).contains(sink))
+      assert(sinkScans.isEmpty, sinkScans.map(_.simpleString).mkString("\n"))
+      assert(q.lastProgress.batchId === n - 1L)
+      assert(new java.io.File(s"$dir/ckpt/commits").list().count(!_.startsWith(".")) === n)
+      assert(new java.io.File(sink).list().count(_.startsWith("batch=")) === n)
+      assert(sinkRows(sink).map(_._2).toSet === (0L until n).toSet + 100L)
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("corpusIngestSinkWithIndex: novel docs fold into the persisted ANN index; duplicates don't; ids never double-append") {
@@ -142,7 +268,7 @@ class CorpusStreamSpec extends SparkSpec {
         "doc_id", "embedding", tbl, dim = 8, nCentroids = 2, m = 2,
         kCodes = 2, nBuckets = 2, trainN = 16, nIters = 0)
       q = CorpusStream.corpusIngestSinkWithIndex(
-        CorpusStream.dedupedDocs(CorpusStream.cleanDocs(src.toDF()), "1 hour"),
+        CorpusStream.dedupedDocs(CorpusStream.cleanDocs(src.toDF())),
         sink, s"$dir/ckpt", embed, tbl, nBuckets = 2).start()
       src.addData(doc(1, t(1), good), doc(2, t(1), good + " indeed"))
       q.processAllAvailable()

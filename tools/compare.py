@@ -24,9 +24,15 @@ def canon(df):
     return df
 
 fails = []
+missing = []
 for name in sorted(oracle):
+    dumps = glob.glob(f"{out}/{name}")
+    if not dumps:
+        missing.append(name)
+        print(f"MISSING {name}: no dump under {out}")
+        continue
     try:
-        spark_df = pd.read_parquet(glob.glob(f"{out}/{name}")[0])
+        spark_df = pd.read_parquet(dumps[0])
         duck_df = con.execute(oracle[name]).fetchdf()
         a, b = canon(spark_df), canon(duck_df)
         if list(a.columns) != list(b.columns):
@@ -52,5 +58,5 @@ for p in sorted(glob.glob(f"{out}/q*")):
         if n == 0:
             empties += 1
         print(f"{'ROWS' if n>0 else 'EMPTY!'}  {name}: {n} rows")
-print(f"\n{len(fails)} failures")
-sys.exit(1 if (fails or empties) else 0)
+print(f"\n{len(fails)} failures, {len(missing)} missing dumps")
+sys.exit(1 if (fails or missing or empties) else 0)
