@@ -94,7 +94,7 @@ object Soak {
       "q61_sparse08" -> ((s, d) =>
         Dedup.duplicateClusters(pairs(s, d), "doc_a", "doc_b")),
       "q71_sparse08" -> ((s, d) =>
-        Dedup.duplicateClustersStars(pairs(s, d), "doc_a", "doc_b")))
+        Dedup.duplicateClusters(pairs(s, d), "doc_a", "doc_b")))
   }
 
   def main(args: Array[String]): Unit = {

@@ -120,12 +120,15 @@ object LoomCsv {
 
   /** P1+P2 normalize: trim every cell, scrub stray BOMs, drop rows with
     * fewer than 3 populated leading cells (the reference's short-row skip,
-    * src/main_01.py:403-405). */
+    * src/main_01.py:403-405). The skip tests the RAW cells — a scrubbed
+    * cell is non-empty iff, past one leading BOM, a non-space is left
+    * (`trim` strips only spaces) — since a filter on the scrubbed cells
+    * is pushed below the projection and scrubs the key cells twice. */
   def normalize(df: DataFrame): DataFrame =
-    df.withColumns(LoomSchema.columnNames.map(c =>
+    df.filter(LoomSchema.columnNames.take(3)
+        .map(c => col(c).rlike("(?s)^\\uFEFF?+.*[^ ]")).reduce(_ && _))
+      .withColumns(LoomSchema.columnNames.map(c =>
         c -> trim(regexp_replace(col(c), "^\\uFEFF", ""))).toMap)
-      .filter(LoomSchema.columnNames.take(3)
-        .map(c => col(c).isNotNull && col(c) =!= "").reduce(_ && _))
 
   /** Typed view: identity/article columns stay strings; every metric
     * column becomes double via the reference's `float(x or 0)` coercion.

@@ -79,12 +79,13 @@ object CorpusPipeline {
     * `__w` as `tokensCol` to the shingle-based generators to reuse the
     * gate's tokenization.
     *
-    * `clusterer` turns that pair graph into (doc, cluster) labels —
-    * [[Dedup.duplicateClusters]] (min-label, the default) or
-    * [[Dedup.duplicateClustersStars]] (edge contraction, the 100 TB
-    * choice; both emit identical labelings, `DedupSpec`). Only
-    * non-representatives (doc ≠ cluster) are consumed, so any clusterer
-    * honoring the component-min contract slots in.
+    * `clusterer` turns that pair graph into (doc, cluster) labels,
+    * cluster = the component's min id; the default is
+    * [[Dedup.duplicateClusters]] (one union-find contraction pass, plus
+    * min-label rounds only when the graph spans several partitions).
+    * Only non-representatives (doc ≠ cluster) are consumed, so any
+    * clusterer honoring the component-min contract slots in — a caller
+    * passes its own to set `maxIter`/`checkpointDir` or a conf scope.
     *
     * Observability: the returned frame carries three named `observe()`
     * metric sets — `corpus_keep` (rows_kept + rows_gated, the latter

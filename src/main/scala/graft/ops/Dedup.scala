@@ -2,8 +2,12 @@ package graft.ops
 
 import graft.functions.Num
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable
 
 /** Deduplication operators for the LLM-data-pipeline north star:
   * exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -584,8 +588,7 @@ object Dedup {
     * supply an integer-valued or pre-rounded score so both engines rank
     * identically (the oracle discipline: never order on raw doubles).
     *
-    * Scale: the cluster labels come from the iterative
-    * [[duplicateClusters]] (or its star-contraction twin); the rank +
+    * Scale: the cluster labels come from [[duplicateClusters]]; the rank +
     * member-count windows share one by-cluster partitioning, and only
     * (doc, cluster, score) rows ride it — never texts.
     *
@@ -998,16 +1001,20 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** The RDD behind a checkpointed frame (`localCheckpoint` or
+    * `checkpoint` both leave a `LogicalRDD` leaf). */
+  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
+      case _ => None
+    }
+
   /** Free a localCheckpoint's blocks through its RDD handle —
     * `Dataset.unpersist` goes through the CacheManager and cannot reach
     * them. The blocks are NOT recomputable: only superseded frames that
     * nothing will read again may be freed. */
   private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
 
   /** Connected components over an undirected near-dup pair list —
     * the clustering step between pair generation (Jaccard/MinHash/LSH)
@@ -1016,53 +1023,55 @@ object Dedup {
     * "keep one per cluster" is `filter(doc === cluster)` and
     * "drop all dupes" is an anti-join on the non-representatives.
     *
-    * Algorithm: min-label propagation to fixpoint — labels start as the
-    * node id; each round every node takes the min of its own and its
-    * neighbors' labels (one equi-join + groupBy-min per round, both on
-    * the node key). Rounds needed = graph diameter; near-dup clusters
-    * from shingle/LSH collisions are clique-dense, so a handful of
-    * rounds converge. Each round also POINTER-JUMPS through the
-    * previous round's labels (the doubling trick of Kiveris et al.
-    * SOCC'14): the propagated min is itself a node id, so one more
-    * equi-join against the materialized label table replaces it with
-    * that node's label, letting reach grow ~2× per round instead of
-    * +1. Round 3 measured the jump SLOWER (7.4 s → 9.7 s) — but that
-    * was with a separate driver probe action per round; with the probe
-    * folded into the checkpoint job (below) the jump is a strict win
-    * re-measured at sf0.1 (13 rounds → 10, same per-round cost), and
-    * at scale it trades one extra label-table shuffle per round for
-    * ~25 % fewer rounds on this graph shape (more on long chains).
+    * Local contraction first (Łącki, Mirrokni & Włodarczyk, "Connected
+    * Components at Scale via Local Contractions", 2018): pairs are
+    * canonicalised to (least, greatest) — a self-pair stays as a node —
+    * and repartitioned by the least endpoint with NO partition count, so
+    * AQE sizes the exchange by `advisoryPartitionSizeInBytes` under
+    * [[withIterConfs]]. One `mapPartitions` runs a union-find and emits
+    * (x, r_p(x)), the least node of x's component within partition p;
+    * one eager checkpoint materializes it, the only job that computes
+    * the pair graph. With ONE partition (AQE packs a graph under the
+    * advisory size into one, as it did the bench's and the sf0.1
+    * clustering queries') every pair met the same union-find, so that
+    * IS the answer: the loop's zero-round case, decided from the
+    * checkpoint's RDD without a job.
     *
-    * The loop stops early on a converged round, and the convergence
-    * probe costs ZERO extra jobs: the propagation aggregation carries
-    * each node's previous label alongside the new min (the self row is
-    * tagged before the union, so `min(when(self, cluster))` recovers it
-    * — no extra join), and a changed-row count over the two is collected
-    * as an `observe()` metric DURING the round's own checkpoint job.
-    * One job per round, works for any id type — the previous
-    * numeric-sum shortcut needed a second aggregate action per round
-    * and a decimal cast that could round fractional ids into a false
-    * early convergence. `maxIter` bounds the pathological case.
-    * Batching two propagation steps per checkpoint (fewer driver
-    * round-trips) is deliberately absent: the unmaterialized first step
-    * feeds BOTH branches of the second step's union, so it either
-    * recomputes per branch or needs its own pin — trading
-    * data-proportional work for job count, the wrong direction at
-    * cluster scale now that each round is already a single job.
+    * With several, let r(x) = min_p r_p(x); the quotient graph joins
+    * r(x) to each other local label of x, and the min-label loop runs
+    * over it. A row's label is the loop's label of its local label, or
+    * that label itself when it has no quotient edge. Exact because every
+    * local label of x lies in x's component (no quotient edge leaves
+    * one); a pair (u, v) met some partition p, so r(u) – r_p(u) = r_p(v)
+    * – r(v) is a quotient path (the quotient connects a component's
+    * local labels); and the component min c is c's own local label
+    * everywhere (r(c) = c). The quotient has no more nodes than the
+    * input; a path of k pairs maps onto at most 2k quotient edges.
     *
-    * Each round's labels are checkpointed: iterating on raw DataFrames
-    * nests every previous round's plan inside the next (persist skips
-    * recompute but does NOT truncate the logical plan — 12 rounds OOM'd
-    * the driver just RENDERING the plan string), while the checkpoint
-    * replaces the lineage with the materialized partitions. By default
-    * the checkpoint is `localCheckpoint` (executor-local blocks, no
-    * extra I/O — right for single-app runs where an executor loss fails
-    * the job anyway); pass `checkpointDir` to use reliable `checkpoint`
-    * instead, which writes each round to the (HDFS-visible) directory so
-    * a multi-hour 100 TB clustering survives executor loss. Superseded
-    * rounds are freed either way — block-level unpersist locally,
-    * file deletion on the reliable path — bounding live storage to two
-    * label tables at any instant.
+    * The loop: each round every node takes the min of its own and its
+    * neighbors' labels (one equi-join + groupBy-min on the node key),
+    * then POINTER-JUMPS through the previous labels (Kiveris et al.,
+    * SOCC'14) — the min is itself a node id, so one more equi-join
+    * replaces it with that node's label and reach grows ~2× per round
+    * (13 → 10 rounds at sf0.1 before the contraction pass). The
+    * convergence probe costs no job: the aggregation carries each node's
+    * previous label, and the changed-row count is an `observe()` metric
+    * of the round's checkpoint job, exact for any id type. `maxIter`
+    * bounds the rounds. Rounds are checkpointed because persist does not
+    * truncate the plan (12 nested rounds OOM'd the driver rendering it).
+    *
+    * Ids compare under their column type's SQL ordering: Long, Int,
+    * String (UTF-8 bytes) or Double (-0.0 is 0.0, NaN last); any other
+    * type fails a `require` naming it. A null id joins nothing: its
+    * partner stays a node, and the null id gets one row labelled with
+    * its partners' least label; a pair of nulls is dropped.
+    *
+    * Checkpoints are `localCheckpoint` (executor-local blocks, no extra
+    * I/O — an executor loss fails the job anyway in a single-app run);
+    * `checkpointDir` switches to reliable `checkpoint` files, so a
+    * multi-hour clustering survives executor loss. Superseded tables are
+    * freed as soon as nothing reads them, and the result is released
+    * with the enclosing `Staged` scope.
     *
     * Output: (doc, cluster) — one row per distinct node appearing in
     * `pairs`, cluster = min doc id reachable through the pair graph.
@@ -1077,68 +1086,156 @@ object Dedup {
       if (reliable) df.checkpoint() else df.localCheckpoint()
     def free(df: DataFrame): Unit =
       if (reliable) deleteCheckpointFiles(df) else freeCheckpoint(df)
-    // round sizing + cached-plan re-partitioning: see [[withIterConfs]]
+    // exchange sizing + cached-plan re-partitioning: see [[withIterConfs]]
     withIterConfs(spark) {
-      val edges = Staged.stage(
-        pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-          .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
-          .distinct())
-      var labels = materialize(
-        edges.select(col("u").as("doc"), col("u").as("cluster")).distinct())
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        // every node's self row is in the union (labels covers all
-        // nodes), so min(when(__self, ...)) is exactly the previous
-        // label — the changed-row count falls out of the same hash
-        // aggregate
-        val prop = labels.withColumn("__self", lit(true))
-          .unionByName(
-            edges.join(labels.withColumnRenamed("doc", "v"), "v")
-              .select(col("u").as("doc"), col("cluster"))
-              .withColumn("__self", lit(false)))
-          .groupBy("doc").agg(
-            min("cluster").as("cluster"),
-            min(when(col("__self"), col("cluster"))).as("__prev"))
-        // pointer jump: the propagated min is a node id, and every node
-        // id is in labels.doc, so the inner join is lossless; the
-        // looked-up label is <= the propagated one (labels only ever
-        // decrease), so the jump preserves monotone convergence
-        val jumped = prop
-          .join(labels.select(col("doc").as("cluster"), col("cluster").as("__l2")),
-            "cluster")
-          .select(col("doc"), col("__l2").as("cluster"), col("__prev"))
-        val obs = org.apache.spark.sql.Observation()
-        val next = materialize(
-          jumped.observe(obs, coalesce(
-              sum(when(col("cluster") =!= col("__prev"), 1L).otherwise(0L)),
-              lit(0L)).as("changed"))
-            .select("doc", "cluster"))
-        // the eager checkpoint IS the observed action — obs.get returns
-        // without scheduling anything; changed == 0 implies the plain
-        // propagation step was also a fixpoint (jumped <= prop <= prev)
-        converged = obs.get("changed").asInstanceOf[Long] == 0L
-        // the superseded round is unreachable from `next` (already
-        // materialized) — free it instead of waiting for GC
-        free(labels)
-        labels = next
-        i += 1
-      }
-      // the final table stays pinned for the caller's action; release
-      // with the query like every other staged intermediate
-      val result = labels
+      val (a, b) = (col(aCol), col(bCol))
+      // least() skips a null, so a pair with one null id keeps its other
+      // id as `u` with a null `v`; a pair of nulls has no node at all
+      val edges = pairs.select(least(a, b).as("u"),
+          when(a.isNotNull && b.isNotNull, greatest(a, b)).as("v"))
+        .filter(col("u").isNotNull)
+      val idType = edges.schema("u").dataType
+      val labelSchema = StructType(Seq(
+        StructField("doc", idType), StructField("cluster", idType)))
+      val local = materialize(edges.repartition(col("u"))
+        .mapPartitions(localComponents(idType))(Encoders.row(labelSchema)))
+      val result =
+        if (checkpointRdd(local).exists(_.getNumPartitions <= 1)) local
+        else {
+          val rows = local.filter(col("doc").isNotNull)
+          val r = rows.groupBy("doc").agg(min("cluster").as("__r"))
+          val q = rows.join(r, "doc").filter(col("cluster") =!= col("__r"))
+            .select(col("__r").as("u"), col("cluster").as("v"))
+          val quotient = Staged.stage(
+            q.unionByName(q.select(col("v").as("u"), col("u").as("v"))).distinct())
+          val labels = minLabelLoop(quotient, maxIter, materialize, free)
+          // every row's local label maps to its component min, so the min
+          // over a node's rows is its label (and a null id's least one)
+          val out = materialize(local
+            .join(labels.select(col("doc").as("cluster"), col("cluster").as("__l")),
+              Seq("cluster"), "left_outer")
+            .groupBy("doc").agg(min(coalesce(col("__l"), col("cluster"))).as("cluster")))
+          quotient.unpersist(blocking = false)
+          free(labels)
+          free(local)
+          out
+        }
       Staged.registerRelease(() => free(result))
       result
     }
   }
 
-  /** Scoped conf for the closure loops, save/restore discipline (the
-    * loops both build and execute their plans, so nothing leaks into
-    * the caller's queries):
-    *   - coalescePartitions.parallelismFirst=false — size each round's
-    *     shuffles to the advisory partition size, not the core count
-    *     (the label/edge tables are usually tiny relative to the
-    *     cluster; at 100 TB the advisory size still yields full
+  /** The contraction pass over one partition of canonical (u, v) rows: a
+    * union-find with path compression (halving) that always roots a
+    * merged set at its least id under `idType`'s SQL ordering. Emits
+    * (node, least node of its local component) per node, plus, when some
+    * row has a null `v`, one (null, least local label of those rows' `u`)
+    * row. */
+  private def localComponents(idType: DataType): Iterator[Row] => Iterator[Row] = {
+    require(Set[DataType](LongType, IntegerType, StringType, DoubleType)(idType),
+      s"duplicateClusters: unsupported id type ${idType.simpleString} " +
+        "(ids must be bigint, int, string or double)")
+    // -0.0 and 0.0 are one id, as in SQL grouping; boxed NaNs are equal
+    val key: Any => Any = idType match {
+      case DoubleType => x => if (x.asInstanceOf[Double] == 0.0) 0.0 else x
+      case _ => identity
+    }
+    val less: (Any, Any) => Boolean = idType match {
+      case LongType => (x, y) => x.asInstanceOf[Long] < y.asInstanceOf[Long]
+      case IntegerType => (x, y) => x.asInstanceOf[Int] < y.asInstanceOf[Int]
+      case DoubleType => (x, y) =>
+        java.lang.Double.compare(x.asInstanceOf[Double], y.asInstanceOf[Double]) < 0
+      case StringType => (x, y) =>
+        UTF8String.fromString(x.asInstanceOf[String])
+          .binaryCompare(UTF8String.fromString(y.asInstanceOf[String])) < 0
+    }
+    rows => {
+      val index = new java.util.HashMap[Any, Integer]()
+      val ids = mutable.ArrayBuffer.empty[Any]
+      val parent = mutable.ArrayBuffer.empty[Int]
+      def node(x: Any): Int = {
+        val k = key(x)
+        val i = index.get(k)
+        if (i != null) i.intValue()
+        else { index.put(k, ids.size); ids += k; parent += ids.size - 1; ids.size - 1 }
+      }
+      def find(x: Int): Int = {
+        var i = x
+        while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+        i
+      }
+      val nullPartners = mutable.ArrayBuffer.empty[Int]
+      rows.foreach { row =>
+        val u = node(row.get(0))
+        if (row.isNullAt(1)) nullPartners += u
+        else {
+          val (ru, rv) = (find(u), find(node(row.get(1))))
+          if (ru != rv) { if (less(ids(ru), ids(rv))) parent(rv) = ru else parent(ru) = rv }
+        }
+      }
+      val nullRow = nullPartners.map(i => ids(find(i)))
+        .reduceOption((x, y) => if (less(y, x)) y else x).map(Row(null, _))
+      ids.indices.iterator.map(i => Row(ids(i), ids(find(i)))) ++ nullRow
+    }
+  }
+
+  /** The pointer-jumping min-label loop of [[duplicateClusters]] over a
+    * symmetric (u, v) edge table: the checkpointed (doc, cluster) labels
+    * of its nodes. */
+  private def minLabelLoop(edges: DataFrame, maxIter: Int,
+                           materialize: DataFrame => DataFrame,
+                           free: DataFrame => Unit): DataFrame = {
+    var labels = materialize(
+      edges.select(col("u").as("doc"), col("u").as("cluster")).distinct())
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter) {
+      // every node's self row is in the union (labels covers all
+      // nodes), so min(when(__self, ...)) is exactly the previous
+      // label — the changed-row count falls out of the same hash
+      // aggregate
+      val prop = labels.withColumn("__self", lit(true))
+        .unionByName(
+          edges.join(labels.withColumnRenamed("doc", "v"), "v")
+            .select(col("u").as("doc"), col("cluster"))
+            .withColumn("__self", lit(false)))
+        .groupBy("doc").agg(
+          min("cluster").as("cluster"),
+          min(when(col("__self"), col("cluster"))).as("__prev"))
+      // pointer jump: the propagated min is a node id, and every node
+      // id is in labels.doc, so the inner join is lossless; the
+      // looked-up label is <= the propagated one (labels only ever
+      // decrease), so the jump preserves monotone convergence
+      val jumped = prop
+        .join(labels.select(col("doc").as("cluster"), col("cluster").as("__l2")),
+          "cluster")
+        .select(col("doc"), col("__l2").as("cluster"), col("__prev"))
+      val obs = org.apache.spark.sql.Observation()
+      val next = materialize(
+        jumped.observe(obs, coalesce(
+            sum(when(col("cluster") =!= col("__prev"), 1L).otherwise(0L)),
+            lit(0L)).as("changed"))
+          .select("doc", "cluster"))
+      // the eager checkpoint IS the observed action — obs.get returns
+      // without scheduling anything; changed == 0 implies the plain
+      // propagation step was also a fixpoint (jumped <= prop <= prev)
+      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      // the superseded round is unreachable from `next` (already
+      // materialized) — free it instead of waiting for GC
+      free(labels)
+      labels = next
+      i += 1
+    }
+    labels
+  }
+
+  /** Scoped conf for the contraction pass and the closure loop,
+    * save/restore discipline (they both build and execute their plans,
+    * so nothing leaks into the caller's queries):
+    *   - coalescePartitions.parallelismFirst=false — size each
+    *     shuffle to the advisory partition size, not the core count
+    *     (the pair graph and label tables are usually tiny relative to
+    *     the cluster; at 100 TB the advisory size still yields full
     *     parallelism, so this is not a small-data hack);
     *   - canChangeCachedPlanOutputPartitioning=true — the same sizing
     *     for the PERSISTED frames the rounds re-scan: a cached plan's
@@ -1161,17 +1258,13 @@ object Dedup {
     }
   }
 
-  /** Delete a reliable checkpoint's files once the round it fed is
-    * materialized — the reliable-path twin of [[freeCheckpoint]]. */
+  /** Delete a reliable checkpoint's files once nothing reads it — the
+    * reliable-path twin of [[freeCheckpoint]]. */
   private def deleteCheckpointFiles(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.getCheckpointFile.foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(path, true)
-        }
-      case _ =>
+    checkpointRdd(df).flatMap(_.getCheckpointFile).foreach { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        .delete(path, true)
     }
 
   def simhashPairs(idCol: String, textCol: String, maxHamming: Int = 3)
@@ -1415,122 +1508,6 @@ object Dedup {
       .agg(sort_array(collect_list(col("__pos"))).as("__keep"))
     toks.join(keptPos, Seq(idCol), "left_outer")
       .withColumn("__k", coalesce(col("__keep"), array().cast("array<bigint>")))
-  }
-
-  /** [[duplicateClusters]]' web-scale twin: alternating large-star /
-    * small-star edge contraction (Kiveris et al., "Connected Components
-    * in MapReduce and Beyond", SOCC'14) — the formulation SCALE.md
-    * designates for 100 TB clustering. Output-identical: (doc, cluster =
-    * component min) for every node in `pairs` (`DedupSpec` proves ≡ on
-    * path/clique/string-id/fractional-id graphs; q71 shares q61's
-    * DuckDB recursive-CTE oracle).
-    *
-    * Why a second formulation: min-label propagation carries a LABEL
-    * TABLE of every node through every round — its per-round shuffle is
-    * Θ(nodes + edges) until the last round. Star contraction rewrites
-    * the EDGE SET itself: each large-star hangs every node's
-    * larger-than-parent neighbors directly under its local minimum,
-    * each small-star re-parents the smaller ones, so edges collapse
-    * toward (node, component-min) and successive rounds shuffle a
-    * SHRINKING set — on web-scale near-dup graphs (billions of tiny
-    * cliques, a few long chains) most edges reach their final form in
-    * 2–3 rounds and later rounds touch a fraction of the input.
-    * Provably O(log² n) rounds on any graph; observed ≤ 5 on every
-    * test corpus. Both steps are the same shape as everything else in
-    * this file: groupBy-min on a node key + an equi-join back — no
-    * driver-side graph state.
-    *
-    * Convergence costs per round: one count over the new edge set (the
-    * previous round's count is carried in a driver variable, never
-    * recomputed) plus, only when the counts match, one anti-join
-    * emptiness probe — both bounded by the (shrinking) edge set, not
-    * the corpus. Unlike min-label, the per-node "previous label" does
-    * not ride along naturally, and ids may be strings (SURVEY §1.1), so
-    * the numeric-potential shortcut is out.
-    * Checkpointing/free semantics are identical to [[duplicateClusters]]
-    * (localCheckpoint by default, reliable via `checkpointDir`). */
-  def duplicateClustersStars(pairs: DataFrame, aCol: String, bCol: String,
-                             maxIter: Int = 30,
-                             checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    val reliable = checkpointDir.isDefined
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    def free(df: DataFrame): Unit =
-      if (reliable) deleteCheckpointFiles(df) else freeCheckpoint(df)
-    // round sizing + cached-plan re-partitioning: see [[withIterConfs]]
-    withIterConfs(spark) {
-      // staged: THREE plan branches consume the pair frame (the edge
-      // canonicalization plus both arms of the node union) — unstaged,
-      // the expensive pair GENERATOR behind it (Jaccard/LSH candidate
-      // join) would re-run once per branch
-      val p0 = Staged.stageCut(pairs)
-      // canonical u > v, self-loops out. Isolated self-paired ids (a==b
-      // rows) still appear in the output via the `nodes` union below.
-      var edges = materialize(
-        p0.select(greatest(col(aCol), col(bCol)).as("u"),
-            least(col(aCol), col(bCol)).as("v"))
-          .filter(col("u") =!= col("v")).distinct())
-      // every node of the ORIGINAL graph — the star forest loses
-      // isolated nodes (no edges), and roots only appear as targets
-      val nodes = Staged.stage(
-        p0.select(col(aCol).as("doc"))
-          .unionByName(p0.select(col(bCol).as("doc"))).distinct())
-
-      // large-star: hang every neighbor bigger than u under
-      // m = min(N(u) ∪ {u}); since m <= u < v the emitted (v, m) is
-      // already canonical
-      def largeStar(e: DataFrame): DataFrame = {
-        val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-        val mins = nbrs.groupBy("u").agg(min(col("v")).as("mn"))
-          .select(col("u"), least(col("mn"), col("u")).as("m"))
-        nbrs.join(mins, "u").filter(col("v") > col("u"))
-          .select(col("v").as("u"), col("m").as("v")).distinct()
-      }
-      // small-star: re-parent every smaller-than-u neighbor (and u
-      // itself) onto m = min of that set; all emitted rows canonical
-      // because m = min(v's) < every other v < u
-      def smallStar(e: DataFrame): DataFrame = {
-        val mins = e.groupBy("u").agg(min(col("v")).as("m"))
-        val joined = e.join(mins, "u")
-        joined.filter(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .unionByName(joined.select(col("u"), col("m").as("v")))
-          .distinct()
-      }
-
-      var converged = false
-      var i = 0
-      var edgeCount = edges.count()
-      while (!converged && i < maxIter) {
-        // each star step gets its own checkpoint: un-materialized, the
-        // large-star output would feed small-star's aggregate AND both
-        // union branches — recomputing per consumer (the same reasoning
-        // that keeps duplicateClusters at one step per checkpoint)
-        val ls = materialize(largeStar(edges))
-        val next = materialize(smallStar(ls))
-        free(ls)
-        // fixpoint of BOTH stars ⇔ star forest ⇔ edge set unchanged;
-        // counts are equal at fixpoint, so one-sided anti-emptiness
-        // suffices for set equality (both sides distinct). The previous
-        // round's count is carried, never recomputed.
-        val nextCount = next.count()
-        converged = nextCount == edgeCount &&
-          next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-        free(edges)
-        edges = next
-        edgeCount = nextCount
-        i += 1
-      }
-      val stars = edges
-      Staged.registerRelease(() => free(stars))
-      // roots and isolated nodes label themselves
-      stars.select(col("u").as("doc"), col("v").as("cluster"))
-        .unionByName(
-          nodes.join(stars.select(col("u").as("doc")), Seq("doc"), "left_anti")
-            .select(col("doc"), col("doc").as("cluster")))
-    }
   }
 
   /** Duplicated-SPAN detection: the maximal runs of corpus-duplicated

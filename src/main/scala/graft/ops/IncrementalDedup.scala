@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   *   3. cluster: [[Dedup.duplicateClusters]] over those pairs, dropping
   *      every non-minimum member — including BASE docs when a fresh
   *      bridge merges two base clusters (retroactive removal keeps the
-  *      result consistent with a rebuild).
+  *      result consistent with a rebuild). The delta's pair graph is
+  *      delta-sized, so it usually fits one partition and is labelled
+  *      by the clusterer's single union-find pass, with no rounds.
   *
   * ≡-to-rebuild contract (proved by `IncrementalDedupSpec`, demonstrated
   * corpus-wide by q74's full-rebuild oracle): assuming ids are assigned

@@ -779,8 +779,10 @@ object Similarity {
     * Plan at scale: assignment is a pure projection over the broadcast
     * centroid pack (no shuffle); the candidate self-join carries IDS ONLY
     * (cell, doc) — the wide vectors join back once per side for the
-    * exact verify, exactly like [[cosineNearDupPairs]]; the CC loop is
-    * [[Dedup.duplicateClusters]]' checkpointed min-label propagation.
+    * exact verify, exactly like [[cosineNearDupPairs]]; components come
+    * from [[Dedup.duplicateClusters]], whose union-find contraction pass
+    * labels a θ-graph that fits one partition in one job and leaves only
+    * the cross-partition quotient to its min-label rounds otherwise.
     * Pairs never span cells (a doc lives in exactly one cell), so
     * components are cell-local by construction.
     *

@@ -184,13 +184,13 @@ object LlmQueries {
         "doc_a", "doc_b"),
       Some(dupClustersOracle)),
 
-    // Same clustering, web-scale formulation: alternating large-star /
-    // small-star edge contraction (SCALE.md's designated 100 TB path —
-    // the edge set SHRINKS across rounds instead of shuffling a full
-    // label table every round). Output-identical to q61 by construction
-    // and by oracle: both share the DuckDB recursive-CTE closure.
+    // Kept under its registered name after the star-contraction
+    // clusterer it ran was deleted (it cost about twice min-label's jobs
+    // for identical labels): the same composition as q61, checked
+    // against the same DuckDB recursive-CTE closure, so the inventory,
+    // its oracle key and the bench history stay comparable.
     Q("q71_dup_clusters_stars",
-      (s, d) => Dedup.duplicateClustersStars(
+      (s, d) => Dedup.duplicateClusters(
         Tables.documents(s, d)
           .transform(Dedup.ngramJaccardPairs("doc_id", "text", 3, 0.03)),
         "doc_a", "doc_b"),

@@ -133,6 +133,39 @@ class LoomCsvSpec extends SparkSpec {
     assert(!turnos.contains("too"))
   }
 
+  test("P3: the short-row skip and the scrub agree on BOM, space and tab cells") {
+    val bom = "\uFEFF"
+    val edges = Seq(bom, "   ", bom + "  ", " " + bom, "\t", bom + " x ")
+    val key = Seq("2026-09-01.A", "00060", "ART9")
+    // each edge cell in each of the three key positions; Rpm tags the row
+    val lines = for ((e, i) <- edges.zipWithIndex; p <- 0 until 3)
+      yield (key.updated(p, e) ++ Seq("", "G1", s"${3 * i + p}") ++ Seq.fill(65)("0"))
+        .mkString(",")
+    // a plain first line, so no edge cell is the file-level BOM
+    val out = readOne((mkRow("2026-09-01.B", "00061", "ART9", "480", "0") +: lines)
+        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+      .filter(_.getAs[String]("Rpm") != "500")
+      .map(r => r.getAs[String]("Rpm").toInt ->
+        Seq("DataTurno", "Tear", "Artigo").map(r.getAs[String]))
+      .toMap
+    // a scrubbed cell is kept exactly when something other than spaces
+    // is left after one leading BOM
+    val kept = Map(3 -> bom, 4 -> "\t", 5 -> "x")
+    assert(out.keySet === kept.keySet.flatMap(i => (0 until 3).map(3 * i + _)))
+    for ((i, v) <- kept; p <- 0 until 3) assert(out(3 * i + p) === key.updated(p, v))
+  }
+
+  test("importCsvTree: the BOM scrub runs once per cell") {
+    val plan = ImportJob.importCsvTree(spark, "fixtures/loom",
+      Some(Seq(("2024-01-01.C", "00001")).toDF("DataTurno", "Tear")))
+      .queryExecution.executedPlan
+    val scrubs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(plan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect {
+        case r: org.apache.spark.sql.catalyst.expressions.RegExpReplace => r }))
+    assert(scrubs.size === LoomSchema.columnNames.size, plan)
+  }
+
   test("S5: month-pruned read excludes non-YYYY-MM dirs and tags partitions") {
     val df = LoomCsv.readMonths(spark, root.toString, Seq("2026-07", "2026-08"))
     val months = df.select("month").distinct().as[String].collect().toSet

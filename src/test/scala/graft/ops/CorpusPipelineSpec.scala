@@ -49,12 +49,20 @@ class CorpusPipelineSpec extends SparkSpec {
       "doc_id", "norm_text", 3, 64, 4, 0.5, tokensCol = Some("__w"))))
     assert(exactFed.nonEmpty)
     assert(minhashFed === exactFed)
-    // the 100 TB clusterer slots in without changing the corpus: stars-fed
-    // pipeline ≡ min-label-fed pipeline end to end
-    val starsFed = run(_.transform(Dedup.minhashLshPairs(
+    // a caller's own clusterer slots in without changing the corpus: with
+    // AQE coalescing off the pair graph keeps several partitions, so the
+    // clusterer runs its quotient rounds instead of the one-pass answer
+    val severalPartitions = (g: org.apache.spark.sql.DataFrame, a: String, b: String) => {
+      val k = "spark.sql.adaptive.coalescePartitions.enabled"
+      val prev = spark.conf.getOption(k)
+      spark.conf.set(k, "false")
+      try Dedup.duplicateClusters(g, a, b)
+      finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    val quotientFed = run(_.transform(Dedup.minhashLshPairs(
       "doc_id", "norm_text", 3, 64, 4, 0.5, tokensCol = Some("__w"))),
-      clusterer = Dedup.duplicateClustersStars(_, _, _))
-    assert(starsFed === exactFed)
+      clusterer = severalPartitions)
+    assert(quotientFed === exactFed)
   }
 
   test("keepScore policy (q109's hook): clusters keep their longest member, survivor count matches min-id") {

@@ -50,33 +50,151 @@ class DedupSpec extends SparkSpec {
     assert(keep === Set(1L, 10L))
   }
 
+  /** Runs `body` with AQE's partition coalescing off, so the contraction
+    * pass keeps every shuffle partition and the quotient loop runs. */
+  private def severalPartitions[T](body: => T): T = {
+    val k = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, "false")
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** Labels of one graph on both paths: as it comes (one partition) and
+    * with the multi-partition quotient path forced. */
+  private def bothPaths[T](label: => T): Seq[T] =
+    Seq(Staged.withStaged(label), severalPartitions(Staged.withStaged(label)))
+
+  /** The reference: a plain union-find, each node labelled with its
+    * component's min id. */
+  private def refClusters(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(x => x -> find(x)).toMap
+  }
+
+  test("duplicateClusters ≡ a plain union-find on random graphs, on both paths") {
+    // random pairs in both orientations (self-pairs and repeats come up
+    // by chance and are added on purpose), a clique, and a path whose
+    // ids are sorted — the worst case for min-label rounds
+    val gen = for {
+      n <- Gen.choose(2, 30)
+      m <- Gen.choose(1, 40)
+      random <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n.toLong), Gen.choose(0L, n.toLong)))
+      k <- Gen.choose(2, 6)
+      len <- Gen.choose(2, 14)
+    } yield {
+      val clique = for (i <- 0 until k; j <- i + 1 until k) yield (100L + j, 100L + i)
+      val path = (0 until len).map(i => (200L + i, 201L + i))
+      random ++ random.take(3) ++ Seq((7L, 7L), (300L, 300L)) ++ clique ++ path
+    }
+    for (seed <- 1 to 5) {
+      val pairs = gen.pureApply(Gen.Parameters.default, Seed(seed.toLong))
+      val expected = refClusters(pairs)
+      bothPaths(Dedup.duplicateClusters(pairs.toDF("doc_a", "doc_b"), "doc_a", "doc_b")
+          .as[(Long, Long)].collect()).foreach { got =>
+        assert(got.length === expected.size, s"seed=$seed: one row per node")
+        assert(got.toMap === expected, s"seed=$seed")
+      }
+    }
+  }
+
   test("duplicateClusters converges on a path graph needing many rounds") {
-    // a 13-node path has diameter 12 — exercises the early-stop loop well
-    // past one propagation round
+    // a 13-node path has diameter 12: one union-find pass on one
+    // partition, many pointer-jumping rounds on several
     val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val out = Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
-      .as[(Long, Long)].collect()
-    assert(out.length === 13 && out.forall(_._2 === 0L), out.toSeq.toString)
+    bothPaths(Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+        .as[(Long, Long)].collect()).foreach { out =>
+      assert(out.length === 13 && out.forall(_._2 === 0L), out.toSeq.toString)
+    }
   }
 
   test("duplicateClusters handles string ids (type-agnostic convergence probe)") {
-    // the observed changed-row count works on any orderable id type;
-    // a 4-node chain must propagate all the way to 'a'
-    val pairs = Seq(("b", "a"), ("b", "c"), ("c", "d")).toDF("doc_a", "doc_b")
-    val out = Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
-      .as[(String, String)].collect().toMap
-    assert(out === Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a"))
+    // the union-find orders strings as Spark does, by UTF-8 bytes: U+FFFD
+    // sorts before U+1F600 there, but after its UTF-16 surrogates (Java's
+    // String order); the loop's changed-row probe compares labels exactly
+    val emoji = "😀"
+    val pairs = Seq(("b", "a"), ("b", "c"), ("c", "d"), (emoji, "�"))
+      .toDF("doc_a", "doc_b")
+    bothPaths(Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+        .as[(String, String)].collect().toMap).foreach { out =>
+      assert(out === Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
+        emoji -> "�", "�" -> "�"))
+    }
   }
 
   test("duplicateClusters handles fractional ids without false early convergence") {
-    // round-4 advice: a decimal(38,0)-cast sum probe could round a changed
-    // fractional label back onto the previous sum and stop early; the
-    // changed-row probe compares labels exactly, so a double-id chain
-    // whose labels differ only in the fraction still converges correctly
-    val pairs = Seq((2.4, 2.1), (2.4, 2.7), (2.7, 3.1)).toDF("doc_a", "doc_b")
-    val out = Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
-      .as[(Double, Double)].collect().toMap
-    assert(out === Map(2.1 -> 2.1, 2.4 -> 2.1, 2.7 -> 2.1, 3.1 -> 2.1))
+    // a double-id chain whose labels differ only in the fraction must
+    // propagate all the way (a decimal-cast sum probe once stopped such a
+    // chain early); -0.0 and 0.0 are one id and NaN sorts last, as in SQL
+    val pairs = Seq((2.4, 2.1), (2.4, 2.7), (2.7, 3.1), (-0.0, 1.5), (0.0, 2.5),
+      (Double.NaN, 3.1)).toDF("doc_a", "doc_b")
+    bothPaths(Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+        .as[(Double, Double)].collect().map { case (d, c) => d.toString -> c }.toMap)
+      .foreach { out =>
+        assert(out === Map("2.1" -> 2.1, "2.4" -> 2.1, "2.7" -> 2.1, "3.1" -> 2.1,
+          "NaN" -> 2.1, "0.0" -> 0.0, "1.5" -> 0.0, "2.5" -> 0.0))
+      }
+  }
+
+  test("duplicateClusters: a null id joins nothing and takes its partners' least label") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (None, Some(3L)), (Some(4L), Some(3L)),
+      (Some(5L), None), (None, None)).toDF("doc_a", "doc_b")
+    bothPaths(Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+        .as[(Option[Long], Long)].collect().toMap).foreach { out =>
+      assert(out === Map(Some(1L) -> 1L, Some(2L) -> 1L, Some(3L) -> 3L,
+        Some(4L) -> 3L, Some(5L) -> 5L, None -> 3L))
+    }
+  }
+
+  test("duplicateClusters rejects an id type it cannot order, naming it") {
+    val pairs = Seq((1.5f, 2.5f)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException](
+      Staged.withStaged(Dedup.duplicateClusters(pairs, "doc_a", "doc_b")))
+    assert(e.getMessage.contains("float"), e.getMessage)
+  }
+
+  test("duplicateClusters: a graph in one partition takes the pass's 2 jobs, whatever its diameter") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def jobsToBuild(group: String, pairs: org.apache.spark.sql.DataFrame): Int = {
+      val pinned = sc.getPersistentRDDs.keySet
+      Staged.withStaged {
+        sc.setJobGroup(group, group)
+        try Dedup.duplicateClusters(pairs, "doc_a", "doc_b") finally sc.clearJobGroup()
+      }
+      assert(sc.getPersistentRDDs.keySet === pinned)
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job the build started has been seen too
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(group + "-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(group + "-sentinel"))
+      groups.toArray.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val twoEdges = jobsToBuild("cc-two-edges", Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b"))
+      val sortedPath = jobsToBuild("cc-sorted-path",
+        (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"))
+      // the exchange's stage and the eager checkpoint; no label table,
+      // no edge table, no round
+      assert(twoEdges <= 2, s"$twoEdges jobs")
+      assert(sortedPath === twoEdges)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("dropRepeatedPassages: keep-first across docs, intra-doc collapse, tail chunks, full-boilerplate removal") {
@@ -142,34 +260,6 @@ class DedupSpec extends SparkSpec {
     assert(out(3L)._2 === toks("u", 16) && out(3L)._4 === 16L)
     // doc 2: the second a1..a16 run duplicates the first window → dropped
     assert(out(2L)._2 === toks("a", 16) && out(2L)._4 === 16L)
-  }
-
-  test("duplicateClustersStars ≡ duplicateClusters on every graph shape") {
-    // the star-contraction twin must produce the identical (doc, cluster)
-    // labeling — clique-dense, long-path (worst case for round count),
-    // string ids, fractional ids, and a self-pair
-    val graphs = Seq(
-      Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (7L, 7L)).toDF("doc_a", "doc_b"),
-      (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"))
-    graphs.foreach { pairs =>
-      val minLabel = Staged.withStaged {
-        Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
-          .as[(Long, Long)].collect().toSet }
-      val stars = Staged.withStaged {
-        Dedup.duplicateClustersStars(pairs, "doc_a", "doc_b")
-          .as[(Long, Long)].collect().toSet }
-      assert(stars === minLabel)
-    }
-    val strPairs = Seq(("b", "a"), ("b", "c"), ("c", "d")).toDF("doc_a", "doc_b")
-    val strOut = Staged.withStaged {
-      Dedup.duplicateClustersStars(strPairs, "doc_a", "doc_b")
-        .as[(String, String)].collect().toMap }
-    assert(strOut === Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a"))
-    val fracPairs = Seq((2.4, 2.1), (2.4, 2.7), (2.7, 3.1)).toDF("doc_a", "doc_b")
-    val fracOut = Staged.withStaged {
-      Dedup.duplicateClustersStars(fracPairs, "doc_a", "doc_b")
-        .as[(Double, Double)].collect().toMap }
-    assert(fracOut === Map(2.1 -> 2.1, 2.4 -> 2.1, 2.7 -> 2.1, 3.1 -> 2.1))
   }
 
   test("duplicateClusters reliable-checkpoint path matches the default and cleans its files") {
