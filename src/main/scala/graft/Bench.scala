@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":...,"value":N,"unit":"sec","queries":{...},"errors":{...},"sf":...}`.
@@ -20,24 +18,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // partition sizing via the soak-derived rule (ops/Skew): resolves
-    // to the cpus floor at every fixture scale (bench numbers stay
-    // protocol-comparable across rounds); a soak-scale sf dir engages
-    // the bytes/128MB arithmetic. SPARK_GRAFT_SHUFFLE overrides.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.ops.Skew.suggestedShufflePartitions(
-        graft.ops.Skew.dirBytes(
-          new org.apache.hadoop.conf.Configuration(), sfDir),
-        minParts = cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // the cpus floor at every fixture scale, so bench numbers stay
+    // protocol-comparable across rounds; a soak-scale sf dir engages
+    // the bytes/128MB arithmetic
+    val spark = SparkEntry.localSession(cpus,
+      SparkEntry.shufflePartitionsFor(cpus, graft.ops.Skew.dirBytes(
+        new org.apache.hadoop.conf.Configuration(), sfDir)))
     // record the input layout's scan parallelism so CPU-dense scan-side
     // chains can fan out when the layout under-parallelizes them
     // (ops/Skew.fanOutForCpu; no-op at cluster-scale layouts)

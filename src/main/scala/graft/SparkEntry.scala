@@ -30,4 +30,29 @@ object SparkEntry {
     * md5 verification twin carrying a full oracle (q91/q96/q97/q98/q99). */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The local session the mains (Bench, Verify, Soak, StreamSoak) run
+    * in: `local[cores]`, `shufflePartitions` shuffle partitions, UTC, no
+    * UI, WARN logging. The heap is the forked JVM's -Xmx
+    * (SPARK_DRIVER_MEM in build.sbt): in local mode the driver JVM is
+    * already running when the builder executes, so a
+    * `spark.driver.memory` conf set here would be a silent no-op. */
+  def localSession(cores: Int, shufflePartitions: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Shuffle partitions for `inputBytes` of input on `cores` cores: the
+    * soak-derived sizing rule ([[graft.ops.Skew.suggestedShufflePartitions]],
+    * which resolves to the `cores` floor at every fixture scale), unless
+    * SPARK_GRAFT_SHUFFLE forces a count. */
+  def shufflePartitionsFor(cores: Int, inputBytes: Long): Int =
+    sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(
+      graft.ops.Skew.suggestedShufflePartitions(inputBytes, minParts = cores))
 }

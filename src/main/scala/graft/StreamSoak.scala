@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{CorpusStream, StreamDoc}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -35,13 +34,7 @@ object StreamSoak {
     val nBatches = args.headOption.map(_.toInt).getOrElse(60)
     val fresh = if (args.length > 1) args(1).toInt else 150
     val refetch = fresh / 3
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cores = 8, shufflePartitions = 8)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,23 +15,10 @@ object Verify {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // partition sizing via the soak-derived rule (ops/Skew): the
-    // fixture scales resolve to the cpus floor (identical behavior to
-    // the old hard pin); a soak-scale sf dir engages the bytes/128MB
-    // arithmetic. SPARK_GRAFT_SHUFFLE stays the explicit override.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.ops.Skew.suggestedShufflePartitions(
-        graft.ops.Skew.dirBytes(
-          new org.apache.hadoop.conf.Configuration(), sfDir),
-        minParts = cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SparkEntry.localSession(cpus,
+      SparkEntry.shufflePartitionsFor(cpus, graft.ops.Skew.dirBytes(
+        new org.apache.hadoop.conf.Configuration(), sfDir)))
     // same fan-out layout probe as Bench (ops/Skew.fanOutForCpu) — the
     // verify dumps must run the exact plans the bench times, so the
     // DuckDB gate certifies the fanned-out shape

@@ -32,32 +32,28 @@ object TextFunctions {
   def shingles(text: Column, n: Int): Column =
     shinglesFromTokens(tokens(text), n)
 
-  /** [[shingles]] over a pre-tokenized array — lets a pipeline that
-    * already materialized the token array (quality gate, langId) feed
-    * the dedup stages without re-tokenizing the corpus. */
+  /** [[shingles]] over a token array, bound once ([[let]]) so an
+    * unmaterialized `tokens(text)` is tokenized once per row, not once
+    * per n-gram. A pipeline that already materialized the token array
+    * (quality gate, langId) feeds the dedup stages from it directly. */
   def shinglesFromTokens(ws: Column, n: Int): Column =
-    // size-n+1 shingles (positions 1..size-n+1); guard avoids Spark's
-    // descending sequence(0, -1) when the doc has fewer than n tokens.
-    when(size(ws) >= n,
-      array_distinct(
-        transform(
-          sequence(lit(0), size(ws) - n),
-          i => array_join(slice(ws, i + 1, lit(n)), " ")
-        )
-      )
-    ).otherwise(array().cast("array<string>"))
+    array_distinct(shinglesWithMultiplicity(ws, n))
 
   /** [[shinglesFromTokens]] WITHOUT the distinct — multiplicity
     * preserved, for weighted (tf) consumers like
     * [[graft.ops.Dedup.sparseCosinePairs]] where a repeated shingle
     * must count twice. */
   def shinglesWithMultiplicity(ws: Column, n: Int): Column =
-    when(size(ws) >= n,
-      transform(
-        sequence(lit(0), size(ws) - n),
-        i => array_join(slice(ws, i + 1, lit(n)), " ")
-      )
-    ).otherwise(array().cast("array<string>"))
+    let(ws)(ngrams(_, n))
+
+  // size-n+1 n-grams (positions 1..size-n+1) of a BOUND token array;
+  // the guard avoids Spark's descending sequence(0, -1) when the doc
+  // has fewer than n tokens
+  private def ngrams(w: Column, n: Int): Column =
+    when(size(w) >= n,
+      transform(sequence(lit(0), size(w) - n),
+        i => array_join(slice(w, i + 1, lit(n)), " ")))
+      .otherwise(array().cast("array<string>"))
 
   /** Stopword hits: number of tokens present in `stopwords`. */
   def stopwordHits(text: Column, stopwords: Seq[String]): Column =
@@ -68,48 +64,38 @@ object TextFunctions {
     * Ratios are null for empty/whitespace-only docs (n_tokens = 0): the
     * bare division would throw DIVIDE_BY_ZERO under Spark 4's default
     * ANSI mode the moment a real corpus contains one empty row. */
-  def qualityStruct(text: Column, stopwords: Seq[String]): Column = {
-    val ts = tokens(text)
-    val n  = size(ts)
-    struct(
-      length(text).as("n_chars"),
-      n.as("n_tokens"),
-      Num.roundz(when(n > 0,
-        aggregate(ts, lit(0L), (acc, w) => acc + length(w)).cast("double") / n), 4)
-        .as("mean_token_len"),
-      Num.roundz(when(n > 0,
-        size(filter(ts, w => w.isInCollection(stopwords))).cast("double") / n), 4)
-        .as("stopword_ratio")
-    )
-  }
+  def qualityStruct(text: Column, stopwords: Seq[String]): Column =
+    let(tokens(text)) { ts =>
+      val n  = size(ts)
+      struct(
+        length(text).as("n_chars"),
+        n.as("n_tokens"),
+        Num.roundz(when(n > 0,
+          aggregate(ts, lit(0L), (acc, w) => acc + length(w)).cast("double") / n), 4)
+          .as("mean_token_len"),
+        Num.roundz(when(n > 0,
+          size(filter(ts, w => w.isInCollection(stopwords))).cast("double") / n), 4)
+          .as("stopword_ratio")
+      )
+    }
 
   /** Word bigrams WITHOUT dedup (unlike [[shingles]]) — the duplicate
     * count is the whole signal for [[repetitionStruct]]. */
-  def bigrams(ws: Column): Column =
-    when(size(ws) >= 2,
-      transform(sequence(lit(0), size(ws) - 2), i => array_join(slice(ws, i + 1, lit(2)), " ")))
-      .otherwise(array().cast("array<string>"))
+  def bigrams(ws: Column): Column = shinglesWithMultiplicity(ws, 2)
 
   /** Repetition signals (the repeated-n-gram family of corpus quality
     * filters): fraction of duplicate tokens and duplicate word-bigrams
     * within the document — high values flag boilerplate / degenerate
     * text. Pure per-row array expressions, no shuffle. Fractions are
     * null when the doc has no tokens (resp. no bigrams): the bare
-    * division would throw under Spark 4's default ANSI mode.
-    *
-    * Convenience form — it re-derives the token and bigram arrays per
-    * extracted field (interpreted lambdas, no CSE: same rule as
-    * [[langIdFromTokens]]). On a hot scan, materialize `tokens(text)`
-    * and [[bigrams]] as their own columns first and use
-    * [[repetitionStructFromArrays]]. */
-  def repetitionStruct(text: Column): Column = {
-    val ws = tokens(text)
-    repetitionStructFromArrays(ws, bigrams(ws))
-  }
+    * division would throw under Spark 4's default ANSI mode. The token
+    * and bigram arrays are each bound once per row ([[let]]). */
+  def repetitionStruct(text: Column): Column =
+    let(tokens(text))(ws => let(bigrams(ws))(repetitionStructFromArrays(ws, _)))
 
-  /** [[repetitionStruct]] over pre-materialized token/bigram array
-    * columns: every field reads plain attributes, so the expensive
-    * tokenize/bigram lambdas run exactly once per row. */
+  /** [[repetitionStruct]] over token/bigram arrays that are already
+    * columns or bound variables: each is read more than once, so a
+    * caller passes bound values, not array expressions. */
   def repetitionStructFromArrays(ws: Column, bg: Column): Column = {
     val n  = size(ws)
     val nb = size(bg)
@@ -196,13 +182,11 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "les", "des", "et", "est", "une")
   )
 
-  def langId(text: Column): Column = langIdFromTokens(tokens(text))
+  def langId(text: Column): Column = let(tokens(text))(langIdFromTokens)
 
-  /** [[langId]] over an already-tokenized array column. Callers that
-    * also need the token count should materialize `tokens(text)` in ONE
-    * projection and feed it here: higher-order lambdas are interpreted
-    * and Catalyst does not CSE them, so `langId(text)` re-tokenizes the
-    * row once per candidate language. */
+  /** [[langId]] over a token array that is already a column or a bound
+    * variable: each candidate language's scorer reads it once, so an
+    * array expression passed here is recomputed per language. */
   def langIdFromTokens(ws: Column): Column = {
     // structural guard for the sentinel fold below: it is only correct
     // while every candidate code sorts lexically BELOW "und" — a future

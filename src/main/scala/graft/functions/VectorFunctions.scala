@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   * higher-order expressions — no UDFs, fully distributed, null-safe only
   * as far as the inputs are (embeddings are non-null in the test tables).
   *
-  * Scale note: each op is O(dim) per row and runs inside the expression
-  * pipeline; the expensive part of kNN is the pair enumeration, which the
-  * callers in [[graft.ops.Similarity]] control (brute-force vs LSH/IVF).
+  * Scale note: every kernel binds its row-wide inputs once, under the
+  * rule stated on [[graft.functions.let]], so dot/norm/cosine/l2,
+  * [[unitNormalize]] and [[quantizeInt8]] are O(dim) per row and the
+  * hyperplane / JL projections O(bits·dim). The expensive part of kNN is
+  * the pair enumeration, which the callers in [[graft.ops.Similarity]]
+  * control (brute-force vs LSH/IVF).
   */
 object VectorFunctions {
 
@@ -32,22 +35,28 @@ object VectorFunctions {
 
   /** Unit-normalize to a double array; zero vectors pass through as-is
     * (ANSI-safe: unguarded division would throw DIVIDE_BY_ZERO). */
-  def unitNormalize(a: Column): Column = {
-    val n = norm(a)
-    when(n === 0.0, transform(a, x => x.cast("double")))
-      .otherwise(transform(a, x => x.cast("double") / n))
-  }
+  def unitNormalize(a: Column): Column =
+    // the sum of squares folds left from 0.0 in element order, as
+    // norm's zip_with + aggregate does, so the result is bit-identical
+    aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"),
+      ss => {
+        val n = sqrt(ss)
+        when(n === 0.0, transform(a, x => x.cast("double")))
+          .otherwise(transform(a, x => x.cast("double") / n))
+      })
 
   /** Symmetric int8 quantization: scale by 127/max|x| and round (ties
     * away from zero — Spark round and DuckDB round agree), the standard
     * embedding-compression step before ANN index build. Zero vectors
     * quantize to zeros. Output is array<long> so the values survive any
     * engine's integer width unchanged. */
-  def quantizeInt8(a: Column): Column = {
-    val mx = array_max(transform(a, x => abs(x.cast("double"))))
-    when(mx === 0.0, transform(a, _ => lit(0L)))
-      .otherwise(transform(a, x => round(x.cast("double") * 127.0 / mx).cast("long")))
-  }
+  def quantizeInt8(a: Column): Column =
+    // max|x| as a null-started greatest fold: greatest skips nulls and
+    // orders NaN above every number, exactly as array_max does
+    aggregate(a, lit(null).cast("double"),
+      (acc, x) => greatest(acc, abs(x.cast("double"))),
+      mx => when(mx === 0.0, transform(a, _ => lit(0L)))
+        .otherwise(transform(a, x => round(x.cast("double") * 127.0 / mx).cast("long"))))
 
   /** L2 distance. */
   def l2(a: Column, b: Column): Column =
@@ -139,15 +148,14 @@ object VectorFunctions {
     val maxProbes = 1 + nBits + m * (m - 1) / 2
     require(nProbe >= 1 && nProbe <= maxProbes,
       s"nProbe must be in [1, $maxProbes] for nBits=$nBits")
-    // the sorted (|proj|, bit, sign) table is bound ONCE per row as a
-    // lambda variable: reusing a named Column subtree inlines it at every
-    // reference (Catalyst has no CSE for interpreted higher-order
-    // lambdas), which made the tree ~nBits·m² copies of the projection
-    // sort — slow to analyze, optimize, and evaluate
+    // the sorted (|proj|, bit, sign) table and the home bucket are each
+    // bound once per row ([[let]]): a named Column subtree is inlined at
+    // every reference, which made the tree ~nBits·m² copies of the
+    // projection sort — slow to analyze, optimize, and evaluate
     val sortedTable = array_sort(zip_with(lshProjections(vec, nBits, seed),
       sequence(lit(0), lit(nBits - 1)),
       (p, h) => struct(abs(p).as("a"), h.as("h"), (p > 0).as("pos"))))
-    val probes = transform(array(sortedTable), bc => {
+    let(sortedTable) { bc =>
       def scoreAt(i: Column): Column = element_at(bc, i + 1).getField("a")
       def maskAt(i: Column): Column =
         call_function("shiftleft", lit(1L), element_at(bc, i + 1).getField("h"))
@@ -166,10 +174,9 @@ object VectorFunctions {
             x => x.isNotNull)
           concat(singles, pairs)
         }
-      val flips = transform(slice(array_sort(perturbs), 1, nProbe - 1),
-        s => bucket.bitwiseXOR(s.getField("m")))
-      concat(array(bucket), flips)
-    })
-    element_at(probes, 1)
+      let(bucket)(b => concat(array(b),
+        transform(slice(array_sort(perturbs), 1, nProbe - 1),
+          s => b.bitwiseXOR(s.getField("m")))))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.functions.VectorFunctions._
 import graft.functions.CosineSimilarityExpr.cosineSim
+import graft.functions.let
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -388,6 +389,29 @@ object Similarity {
             .as("cb"))).as("__cb"))
   }
 
+  /** Per packed subspace j, `f(x_j, cb_j)`: the vector's slice x_j is
+    * bound once per subspace ([[graft.functions.let]]), not rebuilt for
+    * each of the subspace's codes. Reads the `__cb` pack column. */
+  private def perSubspace(vec: Column, sub: Int)(f: (Column, Column) => Column): Column =
+    transform(col("__cb"), jcb =>
+      let(slice(vec, jcb.getField("subspace") * sub + 1, lit(sub)))(
+        f(_, jcb.getField("cb"))))
+
+  /** PQ codes of `vec`: per subspace, the code whose centroid minimizes
+    * `dist(x_j, centv)`, ties to the smaller code (struct ordering). */
+  private def pqCodes(vec: Column, sub: Int)(dist: (Column, Column) => Column): Column =
+    perSubspace(vec, sub)((x, cb) =>
+      array_min(transform(cb, ce =>
+        struct(dist(x, ce.getField("centv")).as("d"), ce.getField("code").as("code"))))
+        .getField("code"))
+
+  /** ADC lookup table of `vec`: lut[j][c] = `score(x_j, centv_{j,c})`. */
+  private def pqLut(vec: Column, sub: Int)(score: (Column, Column) => Column): Column =
+    perSubspace(vec, sub)((x, cb) => transform(cb, ce => score(x, ce.getField("centv"))))
+
+  // the deterministic twins' integer forms: ×10⁴, rounded, as long
+  private def q4(d: Column): Column = round(d * 10000).cast("long")
+
   /** Encode PQ codes: adds a `codes array<int>` column (and drops the
     * vector) — a pure projection over the broadcast codebook pack: no
     * shuffle, no window, at any corpus size. Every other column passes
@@ -400,13 +424,7 @@ object Similarity {
     val sub = dim / m
     corpus
       .crossJoin(broadcast(packCodebooks(codebooks)))
-      .withColumn("codes",
-        transform(col("__cb"), jcb =>
-          array_min(transform(jcb.getField("cb"), ce =>
-            struct(l2sq(
-                slice(col(vecCol), jcb.getField("subspace") * sub + 1, lit(sub)),
-                ce.getField("centv")).as("d"),
-              ce.getField("code").as("code")))).getField("code")))
+      .withColumn("codes", pqCodes(col(vecCol), sub)(l2sq))
       .drop("__cb", vecCol)
   }
 
@@ -446,11 +464,7 @@ object Similarity {
                      dim: Int, m: Int): DataFrame = {
     val sub = dim / m
     queries.crossJoin(broadcast(packCodebooks(codebooks)))
-      .withColumn("lut",
-        transform(col("__cb"), jcb =>
-          transform(jcb.getField("cb"), ce =>
-            dot(slice(col(vecCol), jcb.getField("subspace") * sub + 1, lit(sub)),
-              ce.getField("centv")))).as("lut"))
+      .withColumn("lut", pqLut(col(vecCol), sub)(dot))
       .drop("__cb", vecCol)
   }
 
@@ -653,12 +667,7 @@ object Similarity {
       .withColumn("uv", unitNormalize(col("cv")))
       .crossJoin(broadcast(packCodebooks(codebooks)))
       .select(col("centroid_id"), col("neighbor_id"),
-        transform(col("__cb"), jcb =>
-          array_min(transform(jcb.getField("cb"), ce =>
-            struct(round(l2sq(
-                slice(col("uv"), jcb.getField("subspace") * sub + 1, lit(sub)),
-                ce.getField("centv")) * 10000).cast("long").as("d"),
-              ce.getField("code").as("code")))).getField("code")).as("codes"))
+        pqCodes(col("uv"), sub)((x, c) => q4(l2sq(x, c))).as("codes"))
   }
 
   /** [[appendIvfPqIndex]]'s deterministic twin: encode the batch against
@@ -690,10 +699,7 @@ object Similarity {
     val luts = queries
       .select(col(idCol).as("query_id"), unitNormalize(col(vecCol)).as("uq"))
       .crossJoin(broadcast(packCodebooks(cbs)))
-      .withColumn("lut", transform(col("__cb"), jcb =>
-        transform(jcb.getField("cb"), ce =>
-          round(dot(slice(col("uq"), jcb.getField("subspace") * sub + 1, lit(sub)),
-            ce.getField("centv")) * 10000).cast("long"))))
+      .withColumn("lut", pqLut(col("uq"), sub)((x, c) => q4(dot(x, c))))
       .select("query_id", "lut")
     val probes = probeCells(queries, idCol, vecCol, cents, nProbe)
       .select("query_id", "centroid_id")
@@ -965,19 +971,11 @@ object Similarity {
       .select(col(idCol).as("neighbor_id"), unitNormalize(col(vecCol)).as("cv"))
       .crossJoin(broadcast(pack))
       .select(col("neighbor_id"),
-        transform(col("__cb"), jcb =>
-          array_min(transform(jcb.getField("cb"), ce =>
-            struct(round(l2sq(
-                slice(col("cv"), jcb.getField("subspace") * sub + 1, lit(sub)),
-                ce.getField("centv")) * 10000).cast("long").as("d"),
-              ce.getField("code").as("code")))).getField("code")).as("codes"))
+        pqCodes(col("cv"), sub)((x, c) => q4(l2sq(x, c))).as("codes"))
     val q = queries
       .select(col(idCol).as("query_id"), unitNormalize(col(vecCol)).as("uq"))
       .crossJoin(broadcast(pack))
-      .withColumn("lut", transform(col("__cb"), jcb =>
-        transform(jcb.getField("cb"), ce =>
-          round(dot(slice(col("uq"), jcb.getField("subspace") * sub + 1, lit(sub)),
-            ce.getField("centv")) * 10000).cast("long"))))
+      .withColumn("lut", pqLut(col("uq"), sub)((x, c) => q4(dot(x, c))))
       .select("query_id", "lut")
     val cand = adcTopCandidates(codes.crossJoin(broadcast(q)), k * refine)
     val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))

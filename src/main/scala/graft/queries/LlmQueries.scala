@@ -106,10 +106,10 @@ object LlmQueries {
         Tables.documents(s, d)
           .filter(size(ws) > 0)
           .select(col("doc_id"),
-            posexplode(transform(
-              sequence(lit(0), greatest(ceil((size(ws) - chunk) /
+            posexplode(graft.functions.let(ws)(w => transform(
+              sequence(lit(0), greatest(ceil((size(w) - chunk) /
                 lit(stride.toDouble)).cast("long"), lit(0L))),
-              i => array_join(slice(ws, (i * stride + 1).cast("int"), lit(chunk)), " "))))
+              i => array_join(slice(w, (i * stride + 1).cast("int"), lit(chunk)), " ")))))
           .select(col("doc_id"), col("pos").cast("long").as("chunk_idx"),
             col("col").as("chunk_text"),
             size(split(col("col"), " ")).cast("long").as("n_chunk_tokens"))
@@ -178,18 +178,6 @@ object LlmQueries {
     // reachable set (quadratic closure — fine at verify scale; the
     // Spark side is the iterative min-label propagation that scales).
     Q("q61_dup_clusters",
-      (s, d) => Dedup.duplicateClusters(
-        Tables.documents(s, d)
-          .transform(Dedup.ngramJaccardPairs("doc_id", "text", 3, 0.03)),
-        "doc_a", "doc_b"),
-      Some(dupClustersOracle)),
-
-    // Kept under its registered name after the star-contraction
-    // clusterer it ran was deleted (it cost about twice min-label's jobs
-    // for identical labels): the same composition as q61, checked
-    // against the same DuckDB recursive-CTE closure, so the inventory,
-    // its oracle key and the bench history stay comparable.
-    Q("q71_dup_clusters_stars",
       (s, d) => Dedup.duplicateClusters(
         Tables.documents(s, d)
           .transform(Dedup.ngramJaccardPairs("doc_id", "text", 3, 0.03)),
@@ -3362,7 +3350,7 @@ object LlmQueries {
     // q26/q141 near-dup pair graph — the dedup-graph HEALTH reading:
     // closure → 10⁴ is clique-like template duplication that transitive
     // clustering safely collapses; high degree with near-zero closure is
-    // chain-like drift (A~B~C but A≁C) where q61/q71's connected
+    // chain-like drift (A~B~C but A≁C) where q61's connected
     // components over-merge — the "tighten the threshold first" signal.
     // Algorithm is degree-ordered compact-forward (each edge oriented
     // from its lower-(degree, id) endpoint, wedge fan-out bounded by
@@ -6696,10 +6684,9 @@ object LlmQueries {
       |  ORDER BY abs(v) DESC, j LIMIT 1),
       |vv AS (SELECT j, CAST(v * sg AS BIGINT) AS v FROM v3, sg)""".stripMargin
 
-  /** Transitive closure + min over the reachable set — shared by q61 and
-    * q71 (two clustering formulations, one contract). Quadratic closure
-    * is fine at verify scale; the Spark sides are the iterative
-    * formulations that scale. */
+  /** q61's oracle: transitive closure + min over the reachable set.
+    * Quadratic closure is fine at verify scale; the Spark side is the
+    * iterative formulation that scales. */
   private lazy val dupClustersOracle: String =
     """WITH RECURSIVE sh AS (SELECT DISTINCT doc_id AS doc, shingle FROM (
       |  SELECT doc_id, unnest(list_transform(range(greatest(len(w) - 2, 0)),

@@ -145,4 +145,70 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out(2) === ((0L, 0L, rows(2))))
     assert(out(3) === ((0L, 0L, "")))
   }
+
+  // the forms the bound kernels replaced (tokens / bigrams re-derived
+  // inside each lambda), kept as the reference they must equal
+  private object Ref {
+    import org.apache.spark.sql.Column
+    private def ngrams(ws: Column, n: Int) =
+      transform(sequence(lit(0), size(ws) - n), i => array_join(slice(ws, i + 1, lit(n)), " "))
+    def shinglesFromTokens(ws: Column, n: Int): Column =
+      when(size(ws) >= n, array_distinct(ngrams(ws, n)))
+        .otherwise(array().cast("array<string>"))
+    def shinglesWithMultiplicity(ws: Column, n: Int): Column =
+      when(size(ws) >= n, ngrams(ws, n)).otherwise(array().cast("array<string>"))
+    def bigrams(ws: Column): Column =
+      when(size(ws) >= 2, ngrams(ws, 2)).otherwise(array().cast("array<string>"))
+    def qualityStruct(text: Column, stopwords: Seq[String]): Column = {
+      val ts = TextFunctions.tokens(text)
+      val n = size(ts)
+      struct(
+        length(text).as("n_chars"),
+        n.as("n_tokens"),
+        Num.roundz(when(n > 0,
+          aggregate(ts, lit(0L), (acc, w) => acc + length(w)).cast("double") / n), 4)
+          .as("mean_token_len"),
+        Num.roundz(when(n > 0,
+          size(filter(ts, w => w.isInCollection(stopwords))).cast("double") / n), 4)
+          .as("stopword_ratio"))
+    }
+    def repetitionStruct(text: Column): Column = {
+      val ws = TextFunctions.tokens(text)
+      TextFunctions.repetitionStructFromArrays(ws, bigrams(ws))
+    }
+    def langId(text: Column): Column = TextFunctions.langIdFromTokens(TextFunctions.tokens(text))
+  }
+
+  test("bound n-gram, quality, repetition and langId kernels equal their unbound forms (short, empty, null docs)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val texts = Seq[String](null, "", "   ", "a", "a b", "a  b\tc", " a b c d a b ",
+      "the cat the cat the", "der die das und ist", "el la de que y la", "x x x x x",
+      "le la les des et", "é ü ß ñ 日本 語", "a b c d e f g h i j k l")
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      Row(i.toLong, t, Option(t).map(_.split(" ").toSeq.map(w => if (w == "b") null else w)).orNull)
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), StructType(Seq(
+      StructField("id", LongType), StructField("text", StringType),
+      StructField("ws", ArrayType(StringType, true)))))
+    val text = col("text")
+    val sw = Seq("the", "a", "of")
+    // each token source: the unmaterialized tokens(text), and a plain
+    // array column holding null and empty elements
+    val pairs = Seq(TextFunctions.tokens(text), col("ws")).flatMap { ws =>
+      (1 to 5).flatMap(n => Seq(
+        TextFunctions.shinglesFromTokens(ws, n) -> Ref.shinglesFromTokens(ws, n),
+        TextFunctions.shinglesWithMultiplicity(ws, n) -> Ref.shinglesWithMultiplicity(ws, n))) :+
+        (TextFunctions.bigrams(ws) -> Ref.bigrams(ws))
+    } ++ Seq(
+      TextFunctions.shingles(text, 3) -> Ref.shinglesFromTokens(TextFunctions.tokens(text), 3),
+      TextFunctions.qualityStruct(text, sw) -> Ref.qualityStruct(text, sw),
+      TextFunctions.repetitionStruct(text) -> Ref.repetitionStruct(text),
+      TextFunctions.langId(text) -> Ref.langId(text))
+    pairs.zipWithIndex.foreach { case ((got, want), k) =>
+      val diff = df.filter(!(got <=> want) ||
+        !(got.cast("string") <=> want.cast("string")))
+      assert(diff.isEmpty, s"pair $k: " + diff.select(col("id"), got, want).collect().mkString("; "))
+    }
+  }
 }

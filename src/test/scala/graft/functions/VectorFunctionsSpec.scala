@@ -119,4 +119,78 @@ class VectorFunctionsSpec extends SparkSpec {
     val p90 = dist.sorted.apply((dist.size * 9) / 10)
     assert(p90 < 0.45, s"p90 cosine distortion $p90")
   }
+
+  // the unbound formulas unitNormalize and quantizeInt8 replaced (the
+  // norm / array_max recomputed per element), kept as the reference the
+  // bound forms must equal bit for bit
+  private def unitNormalizeRef(a: org.apache.spark.sql.Column) = {
+    val n = VectorFunctions.norm(a)
+    when(n === 0.0, transform(a, x => x.cast("double")))
+      .otherwise(transform(a, x => x.cast("double") / n))
+  }
+  private def quantizeInt8Ref(a: org.apache.spark.sql.Column) = {
+    val mx = array_max(transform(a, x => abs(x.cast("double"))))
+    when(mx === 0.0, transform(a, _ => lit(0L)))
+      .otherwise(transform(a, x => round(x.cast("double") * 127.0 / mx).cast("long")))
+  }
+
+  private val edgeRows: Seq[Seq[java.lang.Double]] = {
+    val inf = Double.PositiveInfinity
+    Seq(Seq(3.0, 4.0), Seq(0.0, 0.0), Seq(), null, Seq(null), Seq(1.0, null, 2.0),
+      Seq(Double.NaN, 1.0), Seq(Double.NaN), Seq(inf, 1.0), Seq(-inf, 2.0),
+      Seq(inf, -inf), Seq(-0.0, 0.0), Seq(-0.0), Seq(1e-300, -1e-300),
+      Seq(1e200, 1e200), Seq(-2.0, 4.0, 1.0), Seq(0.1, 0.2, 0.3, -0.7),
+      Seq(1.0, -1.0), Seq(-127.5, 0.5))
+  }
+
+  private def edgeVectors(rows: Seq[Seq[java.lang.Double]]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 2), StructType(Seq(
+      StructField("id", LongType), StructField("v", ArrayType(DoubleType, true)))))
+  }
+
+  test("unitNormalize and quantizeInt8 equal their unbound formulas bit for bit (edge values, float and double)") {
+    Seq("array<double>", "array<float>").foreach { t =>
+      val v = col("v").cast(t)
+      // <=> catches any null difference; the string forms catch -0.0
+      // against 0.0, which SQL equality treats as equal
+      def same(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+        (a <=> b) && (a.cast("string") <=> b.cast("string"))
+      val u = edgeVectors(edgeRows).select(col("id"),
+        VectorFunctions.unitNormalize(v).as("u"), unitNormalizeRef(v).as("u0"))
+      val uDiff = u.filter(!same(col("u"), col("u0")))
+      assert(uDiff.isEmpty, s"$t: " + uDiff.collect().mkString("; "))
+      assert(u.count() === edgeRows.size)
+      // a NaN or infinite component (1e200 overflows to Infinity as a
+      // float) has no int8 code: both forms raise ANSI's cast overflow
+      val (finite, nonFinite) = edgeRows.partition(r => r == null || r.forall { x =>
+        val d = if (x == null) 0.0 else if (t == "array<float>") x.floatValue.toDouble
+          else x.doubleValue
+        !d.isNaN && !d.isInfinite
+      })
+      val q = edgeVectors(finite).select(col("id"),
+        VectorFunctions.quantizeInt8(v).as("q"), quantizeInt8Ref(v).as("q0"))
+      val qDiff = q.filter(!same(col("q"), col("q0")))
+      assert(qDiff.isEmpty, s"$t: " + qDiff.collect().mkString("; "))
+      assert(nonFinite.size === (if (t == "array<float>") 6 else 5))
+      nonFinite.foreach { r =>
+        Seq(VectorFunctions.quantizeInt8(v), quantizeInt8Ref(v)).foreach { f =>
+          val e = intercept[Exception](edgeVectors(Seq(r)).select(f).collect())
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(c => String.valueOf(c.getMessage).contains("CAST_OVERFLOW")), e)
+        }
+      }
+    }
+  }
+
+  test("unitNormalize and quantizeInt8 equal their unbound formulas on the test embeddings") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
+    val v = col("embedding")
+    val diff = emb.filter(
+      !(VectorFunctions.unitNormalize(v) <=> unitNormalizeRef(v)) ||
+      !(VectorFunctions.quantizeInt8(v) <=> quantizeInt8Ref(v)))
+    assert(diff.isEmpty)
+  }
 }
