@@ -151,9 +151,9 @@ object TextFunctions {
     val ts = tokens(text)
     // Bit positions are static, so the per-bit work unrolls Scala-side
     // into plain array literals — stays a single array-aggregate per row.
+    val xx = graft.ops.HashFamily.XxHash64
     def bitVotes(w: Column): Column = array((0 until 64).map { b =>
-      when(shiftright(xxhash64(w), b).bitwiseAND(lit(1L)) === 1L, lit(1L))
-        .otherwise(lit(-1L))
+      when(xx.tokenBit(xx.tokenWord(w), b) === 1L, lit(1L)).otherwise(lit(-1L))
     }: _*)
     val zeros = array(Seq.fill(64)(lit(0L)): _*)
     val votes = aggregate(ts, zeros,

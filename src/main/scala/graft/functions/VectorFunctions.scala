@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.HashFamily
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -66,21 +67,24 @@ object VectorFunctions {
 
   /** Raw hyperplane projections for `nBits` random hyperplanes, as an
     * array<double>. Hyperplane h's component for dimension i is a
-    * pseudo-random ±1 derived from xxhash64(131·seed + h, i) —
-    * reproducible across runs with no stored model; distinct `seed`s give
-    * independent hyperplane sets (131 > max nBits, so (seed, h) ranges
-    * never collide). The magnitudes drive multi-probe bucket selection
+    * pseudo-random ±1 drawn by `family` for plane 131·seed + h
+    * ([[HashFamily.hyperplanePositive]]) — reproducible across runs with
+    * no stored model; distinct `seed`s give independent hyperplane sets
+    * (131 > max nBits, so (seed, h) ranges never collide). Each sum is
+    * finished by [[HashFamily.projection]] (the md5 family rounds it to
+    * 4dp). The magnitudes drive multi-probe bucket selection
     * ([[lshProbes]]): the smaller |projection(h)| is, the likelier bit h
     * is on the wrong side of its hyperplane. */
-  def lshProjections(vec: Column, nBits: Int, seed: Int = 0): Column =
-    array((0 until nBits).map { h =>
-      aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") *
-            when(shiftright(xxhash64(lit(131 * seed + h), i), 13).bitwiseAND(lit(1L)) === 1L, 1.0)
-              .otherwise(-1.0)),
-        lit(0.0), (acc, x) => acc + x)
-    }: _*)
+  def lshProjections(vec: Column, nBits: Int, seed: Int = 0,
+                     family: HashFamily = HashFamily.XxHash64): Column =
+    array((0 until nBits).map(h => hyperplaneProjection(vec, 131 * seed + h, family)): _*)
+
+  private def hyperplaneProjection(vec: Column, plane: Int, family: HashFamily): Column =
+    family.projection(aggregate(
+      zip_with(vec, sequence(lit(0), size(vec) - 1),
+        (x, i) => x.cast("double") *
+          when(family.hyperplanePositive(plane, i), 1.0).otherwise(-1.0)),
+      lit(0.0), (acc, x) => acc + x))
 
   /** Johnson–Lindenstrauss sign-matrix projection to `k` dimensions
     * (Achlioptas 2003: ±1 entries preserve pairwise distances like
@@ -119,19 +123,18 @@ object VectorFunctions {
     }: _*)
   }
 
-  private def bucketOf(projs: Column, nBits: Int): Column =
-    aggregate(
-      zip_with(projs, sequence(lit(0), lit(nBits - 1)),
-        (p, h) => when(p > 0, call_function("shiftleft", lit(1L), h)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-
   /** Deterministic LSH bucket id from `nBits` random-hyperplane signs
     * (sign-agreement probability approximates cosine; prunes the kNN
     * candidate space from O(N²) to O(N·bucket)). Bit h is set iff
-    * projection h is positive; the bit sum equals the OR since bits are
-    * distinct. */
-  def lshBucket(vec: Column, nBits: Int, seed: Int = 0): Column =
-    bucketOf(lshProjections(vec, nBits, seed), nBits)
+    * projection h is positive (a null projection sets no bit). The id is
+    * a non-nullable OR of CASE bits, so a join on it infers no
+    * `isnotnull` filter — Catalyst would push such a filter below the
+    * projection and compute every hyperplane projection twice per row. */
+  def lshBucket(vec: Column, nBits: Int, seed: Int = 0,
+                family: HashFamily = HashFamily.XxHash64): Column =
+    (0 until nBits).map { h =>
+      when(hyperplaneProjection(vec, 131 * seed + h, family) > 0, lit(1L << h)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
 
   /** Multi-probe LSH (Lv et al., VLDB'07 shape): the home bucket plus the
     * `nProbe - 1` next-likeliest buckets. A bucket's likelihood is scored
@@ -143,7 +146,8 @@ object VectorFunctions {
     * ordered by score. Returns an array of `nProbe` distinct bucket ids;
     * callers explode it on the (small) query side only, so the corpus is
     * still bucketed once and never re-hashed. */
-  def lshProbes(vec: Column, nBits: Int, nProbe: Int, seed: Int = 0): Column = {
+  def lshProbes(vec: Column, nBits: Int, nProbe: Int, seed: Int = 0,
+                family: HashFamily = HashFamily.XxHash64): Column = {
     val m = math.min(nBits, 8)
     val maxProbes = 1 + nBits + m * (m - 1) / 2
     require(nProbe >= 1 && nProbe <= maxProbes,
@@ -152,7 +156,7 @@ object VectorFunctions {
     // bound once per row ([[let]]): a named Column subtree is inlined at
     // every reference, which made the tree ~nBits·m² copies of the
     // projection sort — slow to analyze, optimize, and evaluate
-    val sortedTable = array_sort(zip_with(lshProjections(vec, nBits, seed),
+    val sortedTable = array_sort(zip_with(lshProjections(vec, nBits, seed, family),
       sequence(lit(0), lit(nBits - 1)),
       (p, h) => struct(abs(p).as("a"), h.as("h"), (p > 0).as("pos"))))
     let(sortedTable) { bc =>

@@ -718,28 +718,29 @@ object Dedup {
     * size m so n_heldout·k/m stays well under 1 (spec pins the
     * kept ⊆ [[decontaminate]]-kept law).
     *
-    * `shingleKey` compresses the probe-side aggregate key (the
-    * production path hashes the shingle to a long so the only
+    * `family` ([[HashFamily]]) draws the k bit positions
+    * ([[HashFamily.bloomBit]], seeded per hash function) and keys the
+    * probe-side aggregate ([[HashFamily.shingleKey]]): the production
+    * xxhash64 family hashes the shingle to a long, so the only
     * corpus-sized shuffle carries (doc, long, bit) rows, never shingle
-    * strings; the md5 verification twin keeps the string so the oracle
-    * stays readable). Output: the clean subset of `train`, original
-    * schema — [[decontaminate]]'s contract. */
-  private def bloomDecontaminateCore(idCol: String, textCol: String, n: Int,
-                                     mBits: Long, kHashes: Int,
-                                     pos: (Column, Int) => Column,
-                                     shingleKey: Column => Column)
-                                    (train: DataFrame,
-                                     heldOut: DataFrame): DataFrame = {
+    * strings. xxhash64 is not SQL-expressible, so q114 is rows-only;
+    * under [[HashFamily.Md5]] (q115) the bit set, the probe and any
+    * false positives are all reproduced by the SQL oracle. Output: the
+    * clean subset of `train`, original schema — [[decontaminate]]'s
+    * contract. */
+  def bloomDecontaminate(idCol: String, textCol: String, n: Int,
+                         mBits: Long, kHashes: Int,
+                         family: HashFamily = HashFamily.XxHash64)
+                        (train: DataFrame, heldOut: DataFrame): DataFrame = {
     require(mBits > 0, s"mBits $mBits must be positive")
     require(kHashes > 0, s"kHashes $kHashes must be positive")
-    val seeds = 0 until kHashes
     def positions(shingle: Column): Column =
-      array(seeds.map(s => pos(shingle, s)): _*)
+      array((0 until kHashes).map(s => family.bloomBit(shingle, s, mBits)): _*)
     val bits = explodedShingles(heldOut, idCol, textCol, n)
       .select(explode(positions(col("shingle"))).as("bit"))
       .distinct()
     val probes = explodedShingles(train, idCol, textCol, n)
-      .select(col("doc"), shingleKey(col("shingle")).as("__sk"),
+      .select(col("doc"), family.shingleKey(col("shingle")).as("__sk"),
         explode(positions(col("shingle"))).as("bit"))
     val contaminated = probes
       .join(broadcast(bits.withColumn("__set", lit(1))), Seq("bit"), "left")
@@ -749,31 +750,6 @@ object Dedup {
       .select(col("doc").as(idCol)).distinct()
     train.join(contaminated, Seq(idCol), "left_anti")
   }
-
-  /** Production [[bloomDecontaminateCore]]: xxhash64 positions (seeded
-    * per hash function), shingle keys hashed to longs so no corpus-
-    * sized shuffle carries strings. Not SQL-expressible (xxhash64) →
-    * rows-only registration; [[bloomDecontaminateMd5]] is the fully
-    * oracle-checked twin (the q27↔q91 discipline). */
-  def bloomDecontaminate(idCol: String, textCol: String, n: Int,
-                         mBits: Long, kHashes: Int)
-                        (train: DataFrame, heldOut: DataFrame): DataFrame =
-    bloomDecontaminateCore(idCol, textCol, n, mBits, kHashes,
-      (shingle, s) => pmod(xxhash64(lit(s), shingle), lit(mBits)),
-      xxhash64(_))(train, heldOut)
-
-  /** md5 verification twin of [[bloomDecontaminate]]: positions from
-    * the first 32 md5 bits of "seed|shingle" — reproducible in any
-    * engine with md5, so the ENTIRE bloom construction (bit set, probe,
-    * FP behavior included) hash-checks against a SQL oracle. */
-  def bloomDecontaminateMd5(idCol: String, textCol: String, n: Int,
-                            mBits: Long, kHashes: Int)
-                           (train: DataFrame, heldOut: DataFrame): DataFrame =
-    bloomDecontaminateCore(idCol, textCol, n, mBits, kHashes,
-      (shingle, s) => conv(substring(
-          md5(concat(lit(s"$s|"), shingle)), 1, 8), 16, 10)
-        .cast("long") % mBits,
-      identity)(train, heldOut)
 
   /** Graded twin of [[decontaminate]]: instead of the binary drop, score
     * every training document by its shingle overlap with the held-out
@@ -835,66 +811,44 @@ object Dedup {
   }
 
   /** MinHash + LSH banding candidate pairs.
-    * numPerms permutations via xxhash64(shingle, seed p); bands of
-    * `rowsPerBand` minhashes hash to a bucket; docs colliding in any band
-    * become candidates; candidates are verified with exact shingle-set
-    * Jaccard estimated from minhash agreement.
+    * numPerms permutations of each shingle ([[HashFamily.permutation]]
+    * over [[HashFamily.shingleKey]]); bands of `rowsPerBand` minhashes
+    * hash to a bucket ([[HashFamily.bandBucket]]); docs colliding in any
+    * band become candidates; candidates are verified with exact
+    * shingle-set Jaccard estimated from minhash agreement.
     * Scale: candidates come from equi-join on (band, bucket) — no O(N²).
+    *
+    * `family` picks the hashes. xxhash64 is the production default
+    * (8-byte long minhashes, the shingle hashed once); under
+    * [[HashFamily.Md5]] a minhash is the lowercase-hex md5 of
+    * "p|shingle", which both engines order identically, so the pair set
+    * is fully oracle-checkable (q91, q177).
     */
   def minhashLshPairs(idCol: String, textCol: String, n: Int,
                       numPerms: Int, rowsPerBand: Int, threshold: Double,
-                      tokensCol: Option[String] = None)
+                      tokensCol: Option[String] = None,
+                      family: HashFamily = HashFamily.XxHash64)
                      (df: DataFrame): DataFrame = {
     require(numPerms % rowsPerBand == 0, "numPerms must divide into bands")
-    val numBands = numPerms / rowsPerBand
     // Minhash via explode → hash-aggregate (one min per permutation):
     // stays in whole-stage codegen, unlike a per-row higher-order
     // `aggregate` over the shingle array (which is interpreted and was
-    // ~25× slower). Same semantics: min over distinct shingles of
-    // xxhash64(shingle, perm).
-    // Hash each shingle string ONCE; per-permutation values re-mix the
-    // 8-byte base hash (xxhash64 of a long is far cheaper than of a
-    // ~20-char string × numPerms). Signature quality is unchanged —
-    // permutation hashes stay uniform and independent.
-    val exploded = shingleRows(df, idCol, textCol, tokensCol, n)
-      .select(col("doc"), xxhash64(col("shingle")).as("h"))
-    val minAggs = (0 until numPerms).map(p => min(xxhash64(col("h"), lit(p))).as(s"h$p"))
-    val sigs = exploded.groupBy("doc")
-      .agg(minAggs.head, minAggs.tail: _*)
-      .select(col("doc"), array((0 until numPerms).map(p => col(s"h$p")): _*).as("sig"))
-    lshBandPairs(sigs, numPerms, rowsPerBand, threshold,
-      b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-  }
-
-  /** md5-signature twin of [[minhashLshPairs]] — the VERIFICATION
-    * instrument, not the production path: md5 is the one hash both Spark
-    * and DuckDB compute bit-identically (see q45↔q51 for the same
-    * pattern on embeddings), so this variant's pair set is fully
-    * oracle-checkable while the xxhash64 path stays the production
-    * default (8-byte long minhashes vs 32-char hex strings — ~4× less
-    * signature traffic). Same plan shape: explode → per-perm min
-    * aggregate (codegen'd) → band/bucket equi-join → minhash-agreement
-    * verify. Per-perm value = min over shingles of md5(perm || '|' ||
-    * shingle); both engines order the lowercase-hex strings identically
-    * (ASCII lexicographic). */
-  def minhashLshPairsMd5(idCol: String, textCol: String, n: Int,
-                         numPerms: Int, rowsPerBand: Int, threshold: Double,
-                         tokensCol: Option[String] = None)
-                        (df: DataFrame): DataFrame = {
-    require(numPerms % rowsPerBand == 0, "numPerms must divide into bands")
-    // fanned out: numPerms md5 calls per shingle in the signature
-    // partials otherwise run at the single-file scan's width (r12
-    // profiled q91 as one 5.7 s task of a 6.4 s query; no-op on
-    // cluster layouts and on already-shuffled pipeline frames)
+    // ~25× slower). Same semantics: min over distinct shingles of the
+    // permutation hash.
+    // fanned out: numPerms hashes per shingle in the signature partials
+    // otherwise run at the single-file scan's width (r12 profiled q91 as
+    // one 5.7 s task of a 6.4 s query; no-op on cluster layouts).
+    // graft.Bench at sf0.1 measured it ~2.3× faster for md5, ~15% for
+    // xxhash64
     val exploded = shingleRows(Skew.fanOutForCpu(df, Seq(col(idCol))),
-      idCol, textCol, tokensCol, n)
-    val minAggs = (0 until numPerms).map(p =>
-      min(md5(concat(lit(p.toString), lit("|"), col("shingle")))).as(s"h$p"))
+        idCol, textCol, tokensCol, n)
+      .select(col("doc"), family.shingleKey(col("shingle")).as("h"))
+    val minAggs = (0 until numPerms).map(p => min(family.permutation(col("h"), p)).as(s"h$p"))
     val sigs = exploded.groupBy("doc")
       .agg(minAggs.head, minAggs.tail: _*)
       .select(col("doc"), array((0 until numPerms).map(p => col(s"h$p")): _*).as("sig"))
     lshBandPairs(sigs, numPerms, rowsPerBand, threshold,
-      b => md5(concat_ws("|", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))))
+      b => family.bandBucket(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
   }
 
   /** Shared LSH tail: band the signatures (`bandBucket` builds band b's
@@ -921,84 +875,25 @@ object Dedup {
       .select("doc_a", "doc_b", "est_jaccard")
   }
 
-  /** SimHash near-dup pairs: 64-bit simhash per doc, band into 4×16-bit
-    * chunks (docs within Hamming distance 3 of each other collide on at
-    * least one chunk — pigeonhole), verify with exact Hamming distance.
-    */
   /** Distributed simhash signatures via explode → 64 codegen'd
     * conditional-sum aggregates (same bit semantics as
     * [[graft.functions.TextFunctions.simhash]], which is the single-pass
-    * per-row variant for narrow inputs). */
-  def simhashSignatures(idCol: String, textCol: String)(df: DataFrame): DataFrame = {
+    * per-row variant for narrow inputs). Token bit b is
+    * [[HashFamily.tokenBit]] of the token's [[HashFamily.tokenWord]],
+    * computed once per token; the signature is a long (bit b = vote b
+    * positive) under either family. */
+  def simhashSignatures(idCol: String, textCol: String,
+                        family: HashFamily = HashFamily.XxHash64)
+                       (df: DataFrame): DataFrame = {
     val toks = df.select(col(idCol).as("doc"),
         explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .withColumn("h", xxhash64(col("w")))
+      .withColumn("h", family.tokenWord(col("w")))
     val voteAggs = (0 until 64).map(b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as(s"v$b"))
+      sum(when(family.tokenBit(col("h"), b) === 1L, 1L).otherwise(-1L)).as(s"v$b"))
     toks.groupBy("doc").agg(voteAggs.head, voteAggs.tail: _*)
       .select(col("doc"),
         (0 until 64).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ bitwiseOR _).as("sim"))
-  }
-
-  /** md5-variant SimHash signatures — q28's verification instrument
-    * (same pattern as [[minhashLshPairsMd5]]): token bit b comes from
-    * md5's hex nibble b/4 (bit 3−b%4 of its value), and the signature is
-    * emitted as a 64-char '0'/'1' STRING (char b+1 = bit b) so both
-    * engines sidestep 1L<<63 sign traps entirely. Same distributed
-    * shape as [[simhashSignatures]]: explode → 64 codegen'd
-    * conditional-sum vote aggregates → one projection. */
-  def simhashSignaturesMd5(idCol: String, textCol: String)(df: DataFrame): DataFrame = {
-    // the 16 nibble values are parsed ONCE per token in a projection —
-    // deriving each of the 64 vote bits straight from the hex string
-    // would run conv(substring(…)) 64× per token and measured ~10×
-    // slower than the xxhash path; with the nibble array the per-bit
-    // work is an element_at + shift, and the twin lands within ~3× of
-    // production (the md5 calls themselves)
-    val toks = df.select(col(idCol).as("doc"),
-        explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .withColumn("m", md5(col("w")))
-      .withColumn("nibs", array((0 until 16).map(n =>
-        conv(substring(col("m"), 1 + n, 1), 16, 10).cast("int")): _*))
-    def bitOf(b: Int): Column =
-      shiftright(element_at(col("nibs"), b / 4 + 1), 3 - b % 4).bitwiseAND(lit(1))
-    val voteAggs = (0 until 64).map(b =>
-      sum(when(bitOf(b) === 1, 1L).otherwise(-1L)).as(s"v$b"))
-    toks.groupBy("doc").agg(voteAggs.head, voteAggs.tail: _*)
-      .select(col("doc"),
-        concat((0 until 64).map(b =>
-          when(col(s"v$b") > 0, lit("1")).otherwise(lit("0"))): _*).as("sim"))
-  }
-
-  /** [[simhashPairs]] under the md5 bit family — every stage (token
-    * bits, votes, 16-bit chunk banding, Hamming verify) is reproducible
-    * in DuckDB, so the SimHash pair set gets a full hash oracle (q97).
-    * Chunks band on 16-char substrings of the bit string; Hamming is a
-    * per-position char comparison. Same exhaustiveness law: 4-chunk
-    * pigeonhole covers Hamming ≤ 3 only. */
-  def simhashPairsMd5(idCol: String, textCol: String, maxHamming: Int = 3)
-                     (df: DataFrame): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-chunk banding is exhaustive only for maxHamming <= 3, got $maxHamming")
-    // staged: both sides of the band self-join consume the signatures,
-    // and the md5-per-token signature aggregation is ~5× the xxhash
-    // path's cost — unstaged it runs twice
-    val sh = Staged.stage(simhashSignaturesMd5(idCol, textCol)(df))
-    val chunks = sh.select(col("doc"), col("sim"),
-        posexplode(array((0 until 4).map(c =>
-          substring(col("sim"), 1 + c * 16, 16)): _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "ckey")
-    chunks.as("a").join(chunks.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        col("a.sim").as("sig_a"), col("b.sim").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        aggregate(sequence(lit(1), lit(64)), lit(0L), (acc, i) =>
-          acc + when(col("sig_a").substr(i, lit(1)) =!= col("sig_b").substr(i, lit(1)),
-            1L).otherwise(0L)).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
   }
 
   /** The RDD behind a checkpointed frame (`localCheckpoint` or
@@ -1267,7 +1162,14 @@ object Dedup {
         .delete(path, true)
     }
 
-  def simhashPairs(idCol: String, textCol: String, maxHamming: Int = 3)
+  /** SimHash near-dup pairs: 64-bit simhash per doc, band into 4×16-bit
+    * chunks (docs within Hamming distance 3 of each other collide on at
+    * least one chunk — pigeonhole), verify with exact Hamming distance
+    * (a long). Under [[HashFamily.Md5]] every stage (token bits, votes,
+    * chunk banding, Hamming verify) is reproducible in DuckDB, so the
+    * pair set gets a full hash oracle (q97). */
+  def simhashPairs(idCol: String, textCol: String, maxHamming: Int = 3,
+                   family: HashFamily = HashFamily.XxHash64)
                   (df: DataFrame): DataFrame = {
     // Pigeonhole over 4 × 16-bit chunks is exhaustive ONLY for Hamming
     // distance <= 3 (4 differing chunks can hide a distance-4 pair from
@@ -1275,7 +1177,11 @@ object Dedup {
     // presenting a <=maxHamming result — refuse instead of under-recall.
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4-chunk banding is exhaustive only for maxHamming <= 3, got $maxHamming")
-    val sh = simhashSignatures(idCol, textCol)(df)
+    // staged: both sides of the chunk self-join read the signatures.
+    // Unstaged, AQE reuses the partial-vote shuffle but runs the final
+    // 64-sum aggregate and the chunking once per side; graft.Bench at
+    // sf0.1 measured the stage ~0.1 s faster for both families
+    val sh = Staged.stage(simhashSignatures(idCol, textCol, family)(df))
     val chunks = sh.select(col("doc"), col("sim"),
         posexplode(array((0 until 4).map(c =>
           shiftright(col("sim"), c * 16).bitwiseAND(lit(0xFFFFL))): _*)))
@@ -1284,7 +1190,7 @@ object Dedup {
         col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
           col("a.doc") < col("b.doc"))
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        hamming64(col("a.sim"), col("b.sim")).as("hamming"))
+        hamming64(col("a.sim"), col("b.sim")).cast("long").as("hamming"))
       .dropDuplicates("doc_a", "doc_b")
       .filter(col("hamming") <= maxHamming)
   }

@@ -68,17 +68,24 @@ object Similarity {
     * flipping its smallest-|projection| bits — the likeliest sign errors)
     * without re-bucketing the corpus; probe buckets are distinct, so no
     * candidate pair is scored twice and no dedup pass is needed.
+    *
+    * `family` draws the hyperplanes ([[HashFamily]]). Under
+    * [[HashFamily.Md5]] with nProbe = 1, bucket assignment, candidate
+    * join and ranking are all reproducible in DuckDB (q98's oracle);
+    * the multi-probe flip ordering is the one piece not mirrored in SQL.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, nBits: Int = 8, nProbe: Int = 1): DataFrame = {
+              vecCol: String, k: Int, nBits: Int = 8, nProbe: Int = 1,
+              family: HashFamily = HashFamily.XxHash64): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(lshProbes(col(vecCol), nBits, nProbe)).as("bucket"))
-    // fanned out like [[bruteForceTopK]]: nBits hyperplane projections
-    // per corpus row, otherwise serialized at the scan's width
+      explode(lshProbes(col(vecCol), nBits, nProbe, family = family)).as("bucket"))
+    // fanned out like [[bruteForceTopK]], below the bucket projection:
+    // nBits hyperplane projections per corpus row, otherwise serialized
+    // at the scan's width
     val c = Skew.fanOutForCpu(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        lshBucket(col(vecCol), nBits).as("bucket")),
-      Seq(col("neighbor_id")))
+        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
+        Seq(col("neighbor_id")))
+      .withColumn("bucket", lshBucket(col("cv"), nBits, family = family))
     rankTopK(c.join(q, "bucket"), k)
   }
 
@@ -258,14 +265,18 @@ object Similarity {
     * sort, no count pre-pass). The id tiebreak makes the cut a total
     * order even under hash collisions ('training is deterministic', which
     * ivfPqTopKIndexed ≡ ivfPqTopK rests on, must not assume collision
-    * absence). Rows with a null vector are never sampled. Callers bound
-    * `n` by `trainN` or the centroid count, never by the corpus size. */
+    * absence). Rows with a null vector are never sampled. `prep` maps
+    * the vector before sampling; the null filter runs on the raw column
+    * first, so Catalyst cannot push it below `prep` and evaluate `prep`
+    * twice per row. Callers bound `n` by `trainN` or the centroid count,
+    * never by the corpus size. */
   private def hashSample(corpus: DataFrame, idCol: String, vecCol: String,
-                         n: Int): (Array[Long], Array[Array[Double]]) = {
+                         n: Int, prep: Column => Column = identity)
+      : (Array[Long], Array[Array[Double]]) = {
     val rows = corpus
+      .filter(col(vecCol).isNotNull)
       .select(xxhash64(col(idCol)).as("__h"), col(idCol).as("__sid"),
-        col(vecCol).cast("array<double>").as("cv"))
-      .filter(col("cv").isNotNull)
+        prep(col(vecCol)).cast("array<double>").as("cv"))
       .orderBy("__h", "__sid").limit(n)
       .select("__h", "cv").collect()
     (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
@@ -356,16 +367,20 @@ object Similarity {
     codebookTable(corpus.sparkSession, hashSample(corpus, idCol, vecCol, trainN)._2,
       trainN, dim, m, k, nIters)
 
+  /** Unit-normalized `array<float>`: the IVF side (centroidScores) runs
+    * the native cosine_sim expression, which is typed array<float>. */
+  private def unitVec(v: Column): Column = unitNormalize(v).cast("array<float>")
+
   /** IVF seeds and PQ codebooks from ONE sample collect: the seeds are
     * the first `nCentroids` rows of the same `(xxhash64(id), id)`
     * ordering the codebooks train on, so [[ivfCentroids]] (nIters = 0)
     * and [[pqCodebooks]] read one sample of max(trainN, nCentroids)
     * rows. */
-  private def ivfPqModel(unitCorpus: DataFrame, nCentroids: Int, dim: Int,
-                         m: Int, kCodes: Int, trainN: Int,
-                         nIters: Int): (DataFrame, DataFrame) = {
-    val spark = unitCorpus.sparkSession
-    val s = hashSample(unitCorpus, "neighbor_id", "cv", math.max(trainN, nCentroids))
+  private def ivfPqModel(corpus: DataFrame, idCol: String, vecCol: String,
+                         nCentroids: Int, dim: Int, m: Int, kCodes: Int,
+                         trainN: Int, nIters: Int): (DataFrame, DataFrame) = {
+    val spark = corpus.sparkSession
+    val s = hashSample(corpus, idCol, vecCol, math.max(trainN, nCentroids), unitVec)
     (centroidTable(spark, s, nCentroids),
       codebookTable(spark, s._2, trainN, dim, m, kCodes, nIters))
   }
@@ -503,12 +518,10 @@ object Similarity {
                 vecCol: String, k: Int, dim: Int, nCentroids: Int = 16,
                 nProbe: Int = 2, m: Int = 8, kCodes: Int = 16,
                 refine: Int = 4, trainN: Int = 1024, nIters: Int = 2): DataFrame = {
-    // float cast: the IVF side (centroidScores) runs the native
-    // cosine_sim expression, which is typed array<float>
     val unitCorpus = corpus.select(col(idCol).as("neighbor_id"),
-      unitNormalize(col(vecCol)).cast("array<float>").as("cv"))
-    val (centroids, cbs) = ivfPqModel(unitCorpus, nCentroids, dim, m, kCodes,
-      trainN, nIters)
+      unitVec(col(vecCol)).as("cv"))
+    val (centroids, cbs) = ivfPqModel(corpus, idCol, vecCol, nCentroids, dim,
+      m, kCodes, trainN, nIters)
     // the index: cell assignment + codes in ONE projection pass, no
     // Exchange (both the centroid pack and the codebook pack broadcast);
     // fanned out when the input layout under-parallelizes the CPU-dense
@@ -535,7 +548,7 @@ object Similarity {
                          k: Int, dim: Int, nProbe: Int, m: Int,
                          refine: Int): DataFrame = {
     val uq = queries.select(col(idCol).as("query_id"),
-      unitNormalize(col(vecCol)).cast("array<float>").as("uq"))
+      unitVec(col(vecCol)).as("uq"))
     val probes = pqLuts(uq, "uq", codebooks, dim, m)
       .join(uq, "query_id")
       .crossJoin(broadcast(packCentroids(centroids)))
@@ -564,10 +577,8 @@ object Similarity {
                       table: String, dim: Int, nCentroids: Int = 16,
                       m: Int = 8, kCodes: Int = 16, nBuckets: Int = 8,
                       trainN: Int = 1024, nIters: Int = 2): Unit = {
-    val unitCorpus = corpus.select(col(idCol).as("neighbor_id"),
-      unitNormalize(col(vecCol)).cast("array<float>").as("cv"))
-    val (centroids, cbs) = ivfPqModel(unitCorpus, nCentroids, dim, m, kCodes,
-      trainN, nIters)
+    val (centroids, cbs) = ivfPqModel(corpus, idCol, vecCol, nCentroids, dim,
+      m, kCodes, trainN, nIters)
     centroids.write.mode("overwrite").saveAsTable(s"${table}_centroids")
     cbs.write.mode("overwrite").saveAsTable(s"${table}_codebooks")
     writeBucketed(encodeForIndex(corpus, idCol, vecCol,
@@ -590,7 +601,7 @@ object Similarity {
     // parallelizes it (no-op on cluster-wide scans; see fanOutForCpu)
     val unit = Skew.fanOutForCpu(corpus, Seq(col(idCol)))
       .select(col(idCol).as("neighbor_id"),
-        unitNormalize(col(vecCol)).cast("array<float>").as("cv"))
+        unitVec(col(vecCol)).as("cv"))
     pqEncode(
       assignCells(unit, "neighbor_id", "cv", centroids)
         .select(col("neighbor_id"), col("cv"), col("centroid_id")),
@@ -981,41 +992,6 @@ object Similarity {
     val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     rankTopK(cand.join(vecs, "neighbor_id").join(broadcast(qvecs), "query_id"), k)
-  }
-
-  /** md5-hyperplane LSH bucket id as an nBits-char '0'/'1' string —
-    * [[graft.functions.VectorFunctions.lshBucket]]'s verification
-    * family: hyperplane (h, i)'s ±1 component is the parity of md5's
-    * first hex nibble of "h|i", and the projection is rounded to 4dp
-    * BEFORE the sign test, so bucket assignment is reproducible in
-    * DuckDB (summation-order float dust below 5e-5 collapses in the
-    * round). String buckets sidestep bit-shift sign traps, same as
-    * [[Dedup.simhashSignaturesMd5]]. */
-  def lshBucketMd5(vec: Column, nBits: Int): Column =
-    concat((0 until nBits).map { h =>
-      val p = round(aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * when(
-            conv(substring(md5(concat(lit(h.toString), lit("|"), i.cast("string"))), 1, 1),
-              16, 10).cast("int").bitwiseAND(lit(1)) === 1, 1.0).otherwise(-1.0)),
-        lit(0.0), (acc, x) => acc + x), 4)
-      when(p > 0, lit("1")).otherwise(lit("0"))
-    }: _*)
-
-  /** [[lshTopK]]'s verification twin (home bucket only — the multi-probe
-    * flip ordering is the one piece not worth mirroring in SQL): both
-    * sides bucket under [[lshBucketMd5]], candidates come from the same
-    * bucket equi-join, ranking is the shared [[rankTopK]] contract. Every
-    * stage is DuckDB-reproducible, so the hyperplane-LSH ANN family gets
-    * a full hash oracle (q98; the production multi-probe q30 keeps its
-    * rows-only check + q50 recall floor). */
-  def lshTopKMd5(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, k: Int, nBits: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      lshBucketMd5(col(vecCol), nBits).as("bucket"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      lshBucketMd5(col(vecCol), nBits).as("bucket"))
-    rankTopK(c.join(q, "bucket"), k)
   }
 
   /** [[ivfTopK]]'s verification twin: identical plan shape (broadcast

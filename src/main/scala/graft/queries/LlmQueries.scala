@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{KmvSketchAgg, Num, TextFunctions, VectorFunctions}
-import graft.ops.{Centrality, Collocations, Constraints, Coreset, CorpusManifest, Coverage, Dedup, EventAnalytics, Skew, IncrementalDedup, LinearModel, Privacy, Retrieval, Sampling, Similarity, Sketches, Skyline, Spectral, Stats, VocabStats}
+import graft.ops.{Centrality, Collocations, Constraints, Coreset, CorpusManifest, Coverage, Dedup, EventAnalytics, HashFamily, Skew, IncrementalDedup, LinearModel, Privacy, Retrieval, Sampling, Similarity, Sketches, Skyline, Spectral, Stats, VocabStats}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -497,16 +497,15 @@ object LlmQueries {
         .transform(Dedup.minhashLshPairs("doc_id", "text", 3, 32, 4, 0.03)),
       None),
 
-    // q27's md5-signature twin — same algorithm, same parameters, but
-    // every hash in the pipeline (per-perm minhash AND band bucket) is
-    // md5, which DuckDB computes bit-identically, so the full MinHash+LSH
-    // pair set gets a hash-checked oracle instead of q27's rows-only
-    // check. MinhashLshSpec pins its pair set ≡ q27's on the same input;
-    // xxhash64 stays the production default (long vs 32-char hex
-    // signatures).
+    // q27's operator under HashFamily.Md5: every hash (per-perm minhash
+    // AND band bucket) is md5, which DuckDB computes bit-identically, so
+    // the MinHash+LSH pair set gets a full hash oracle. DedupSpec pins
+    // both families on one input: each surfaces every true dup, and their
+    // pair counts differ by at most 50% (the sets are not equal).
     Q("q91_minhash_lsh_md5",
       (s, d) => Tables.documents(s, d)
-        .transform(Dedup.minhashLshPairsMd5("doc_id", "text", 3, 32, 4, 0.03)),
+        .transform(Dedup.minhashLshPairs("doc_id", "text", 3, 32, 4, 0.03,
+          family = HashFamily.Md5)),
       Some("""WITH sh AS (SELECT DISTINCT doc_id AS doc, shingle FROM (
              |  SELECT doc_id, unnest(list_transform(range(greatest(len(w) - 2, 0)),
              |    i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS shingle
@@ -533,17 +532,17 @@ object LlmQueries {
         .transform(Dedup.simhashPairs("doc_id", "text", 3)),
       None),
 
-    // q28's md5-bit twin — token bits from md5 nibbles, signature as a
-    // 64-char bit string, same 4×16 chunk banding + Hamming verify —
-    // every stage DuckDB-reproducible, so the SimHash family gets a full
-    // hash oracle (q91's pattern for MinHash). Unlike MinHash the
-    // radius-1..3 tail is legitimately bit-family-dependent (one 64-bit
-    // sketch, not an averaged estimate), so DedupSpec pins both
-    // families' surfaced pairs to the top of the exact token-cosine
-    // distribution instead of to each other.
+    // q28's operator under HashFamily.Md5 — token bits from md5 nibbles
+    // (the oracle spells the signature as a bit string, char b+1 = bit
+    // b), same 4×16 chunk banding + Hamming verify — every stage
+    // DuckDB-reproducible. Unlike MinHash the radius-1..3 tail is
+    // legitimately bit-family-dependent (one 64-bit sketch, not an
+    // averaged estimate), so DedupSpec pins both families' surfaced
+    // pairs to the top of the exact token-cosine distribution instead of
+    // to each other.
     Q("q97_simhash_pairs_md5",
       (s, d) => Tables.documents(s, d)
-        .transform(Dedup.simhashPairsMd5("doc_id", "text", 3)),
+        .transform(Dedup.simhashPairs("doc_id", "text", 3, HashFamily.Md5)),
       Some("""WITH tok AS (SELECT doc_id AS doc, unnest(list_filter(
              |    string_split_regex(trim(text), '\s+'), x -> x <> '')) AS w
              |  FROM documents),
@@ -607,16 +606,16 @@ object LlmQueries {
       },
       None),
 
-    // q30's md5-hyperplane twin (home bucket, same nBits/k): hyperplane
-    // signs from md5 nibble parity, projections rounded 4dp before the
-    // sign test, string bucket ids — the whole bucket assignment +
-    // candidate join + ranking reproducible in DuckDB, completing the
-    // hash-family oracle set (q91 MinHash, q96 IVF, q97 SimHash).
+    // q30's operator under HashFamily.Md5 (home bucket only, same
+    // nBits/k): hyperplane signs from md5 nibble parity, projections
+    // rounded 4dp before the sign test (the oracle's bit-string bucket is
+    // the same partition as the long one) — bucket assignment +
+    // candidate join + ranking all reproducible in DuckDB.
     Q("q98_lsh_topk_md5",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.lshTopKMd5(emb, emb.filter(col("vec_id") < 100),
-          "vec_id", "embedding", 5, nBits = 4)
+        Similarity.lshTopK(emb, emb.filter(col("vec_id") < 100),
+          "vec_id", "embedding", 5, nBits = 4, nProbe = 1, family = HashFamily.Md5)
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |proj AS (SELECT vec_id, h,
@@ -2384,15 +2383,15 @@ object LlmQueries {
       },
       None),
 
-    // md5 verification twin of q114: positions from the first 32 md5
-    // bits of "seed|shingle", so the bit set, the probe, and any false
-    // positives are all reproduced exactly by the SQL oracle — the
+    // q114's operator under HashFamily.Md5: positions from the first 32
+    // md5 bits of "seed|shingle", so the bit set, the probe, and any
+    // false positives are all reproduced exactly by the SQL oracle — the
     // whole Bloom construction hash-checks, not just its effect.
     Q("q115_bloom_decontaminate_md5",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        Dedup.bloomDecontaminateMd5("doc_id", "text", 3,
-          mBits = 1L << 20, kHashes = 4)(
+        Dedup.bloomDecontaminate("doc_id", "text", 3,
+          mBits = 1L << 20, kHashes = 4, family = HashFamily.Md5)(
           docs.filter(col("doc_id") % 50 =!= 0),
           docs.filter(col("doc_id") % 50 === 0))
           .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
@@ -4555,7 +4554,8 @@ object LlmQueries {
         val docs = Tables.documents(s, d)
         val truth = Dedup.ngramJaccardPairs("doc_id", "text", 3, 0.3)(docs)
           .select("doc_a", "doc_b")
-        val run = Dedup.minhashLshPairsMd5("doc_id", "text", 3, 32, 4, 0.3)(docs)
+        val run = Dedup.minhashLshPairs("doc_id", "text", 3, 32, 4, 0.3,
+          family = HashFamily.Md5)(docs)
           .select("doc_a", "doc_b")
         val nT = truth.agg(count(lit(1)).as("n_truth"))
         val nR = run.agg(count(lit(1)).as("n_run"))

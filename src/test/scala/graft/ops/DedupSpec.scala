@@ -469,7 +469,8 @@ class DedupSpec extends SparkSpec {
     }
     val xx = Dedup.minhashLshPairs("doc_id", "text", 3, 32, 4, 0.03)(real)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val md = Dedup.minhashLshPairsMd5("doc_id", "text", 3, 32, 4, 0.03)(real)
+    val md = Dedup.minhashLshPairs("doc_id", "text", 3, 32, 4, 0.03,
+      family = HashFamily.Md5)(real)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     check(xx, "xxhash"); check(md, "md5")
     assert(math.abs(xx.size - md.size) <= math.max(xx.size, md.size) / 2,
@@ -530,7 +531,7 @@ class DedupSpec extends SparkSpec {
     }
     val nXx = check(Dedup.simhashPairs("doc_id", "text", 3)(real), "xxhash")
     val nMd = Staged.withStaged {
-      check(Dedup.simhashPairsMd5("doc_id", "text", 3)(real), "md5")
+      check(Dedup.simhashPairs("doc_id", "text", 3, HashFamily.Md5)(real), "md5")
     }
     // and the families find comparably many (same sketch, same radius)
     assert(math.abs(nXx - nMd) <= math.max(nXx, nMd) / 2,
@@ -539,7 +540,7 @@ class DedupSpec extends SparkSpec {
 
   test("md5 simhash twin: exact dupes at Hamming 0; unrelated docs excluded") {
     val out = Staged.withStaged {
-      Dedup.simhashPairsMd5("doc_id", "text", 3)(docs)
+      Dedup.simhashPairs("doc_id", "text", 3, HashFamily.Md5)(docs)
         .as[(Long, Long, Long)].collect().toSeq
     }
     assert(out.find(p => (p._1, p._2) == (0L, 1L)).get._3 === 0L)
@@ -612,7 +613,7 @@ class DedupSpec extends SparkSpec {
     def kept(f: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame): Set[Long] =
       f(train, held).select("doc_id").as[Long].collect().toSet
     val xx = kept(Dedup.bloomDecontaminate("doc_id", "text", 3, 1L << 20, 4))
-    val md = kept(Dedup.bloomDecontaminateMd5("doc_id", "text", 3, 1L << 20, 4))
+    val md = kept(Dedup.bloomDecontaminate("doc_id", "text", 3, 1L << 20, 4, HashFamily.Md5))
     assert(xx.subsetOf(exactKept), s"xxhash under-dropped: kept ${(xx -- exactKept).take(5)}")
     assert(md.subsetOf(exactKept), s"md5 under-dropped: kept ${(md -- exactKept).take(5)}")
     assert(xx === exactKept && md === exactKept,
@@ -628,7 +629,8 @@ class DedupSpec extends SparkSpec {
     val exactKept = Dedup.decontaminate("doc_id", "text", 3)(train, held)
       .select("doc_id").as[Long].collect().toSet
     assert(exactKept === Set(1L, 2L))
-    val tiny = Dedup.bloomDecontaminateMd5("doc_id", "text", 3, mBits = 2L, kHashes = 1)(train, held)
+    val tiny = Dedup.bloomDecontaminate("doc_id", "text", 3, mBits = 2L, kHashes = 1,
+      family = HashFamily.Md5)(train, held)
       .select("doc_id").as[Long].collect().toSet
     assert(tiny.subsetOf(exactKept))
     assert(tiny.size < exactKept.size, s"expected FP drops at m=2, kept $tiny")
@@ -1317,7 +1319,8 @@ class DedupSpec extends SparkSpec {
     val (truth, run) = graft.ops.Staged.withStaged {
       (Dedup.ngramJaccardPairs("doc_id", "text", 3, 0.3)(docs)
          .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet,
-       Dedup.minhashLshPairsMd5("doc_id", "text", 3, 32, 4, 0.3)(docs)
+       Dedup.minhashLshPairs("doc_id", "text", 3, 32, 4, 0.3,
+         family = HashFamily.Md5)(docs)
          .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
     }
     assert(truth.contains((1L, 2L)) && truth.contains((3L, 4L)),

@@ -282,6 +282,44 @@ class SimilaritySpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("ivfPqTopK: the build-time sample collect unit-normalizes each vector once") {
+    // the null-vector filter must run on the raw column: a filter on the
+    // normalized one is pushed below its projection and evaluates
+    // unitNormalize (one array aggregate) a second time per row
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    import org.apache.spark.sql.execution.QueryExecution
+    // some vectors null: the sample skips them, so the filter is real
+    val emb = spark.range(200).select(col("id").as("vec_id"),
+      when(col("id") % 7 =!= 0,
+        array((1 to 8).map(j => sin(col("id") * j).cast("float")): _*)).as("embedding"))
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        ran.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        ran.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 20),
+        "vec_id", "embedding", 5, dim = 8, nCentroids = 4, nProbe = 2, m = 2, kCodes = 4)
+      // listener events arrive in order: once the sentinel's is seen,
+      // every query the build ran has been seen too
+      val sentinel = spark.range(1).toDF()
+      sentinel.collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!ran.asScala.exists(_ eq sentinel.queryExecution) &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      assert(ran.asScala.exists(_ eq sentinel.queryExecution))
+    } finally spark.listenerManager.unregister(listener)
+    val samples = ran.asScala.toSeq.filter(_.optimizedPlan.treeString.contains("__sid"))
+    assert(samples.size === 1, ran.asScala.map(_.optimizedPlan.treeString).mkString("\n"))
+    val plan = samples.head.optimizedPlan
+    val aggregates = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case a: ArrayAggregate => a })
+    assert(aggregates.size === 1, plan.treeString)
+  }
+
   test("multi-table near-dup LSH reaches full recall vs the exact pairs (sf0.01)") {
     // the q51 configuration: per-pair miss (1 - p²)^32 < 3e-7 at cos 0.35
     val d = "/root/testdata/sf0.01"
@@ -314,8 +352,8 @@ class SimilaritySpec extends SparkSpec {
       (0L, Seq(1.0f, 0.0f, 0.0f)), (1L, Seq(1.0f, 0.0f, 0.0f)),
       (2L, Seq(0.9f, 0.1f, 0.0f)), (3L, Seq(-1.0f, 0.2f, 0.4f))
     ).toDF("vec_id", "embedding")
-    val out = Similarity.lshTopKMd5(dup, dup.filter(col("vec_id") === 0),
-        "vec_id", "embedding", 2, nBits = 2)
+    val out = Similarity.lshTopK(dup, dup.filter(col("vec_id") === 0),
+        "vec_id", "embedding", 2, nBits = 2, family = HashFamily.Md5)
       .orderBy("rk").as[(Long, Long, Double, Long)].collect().toSeq
     assert(out.head._2 === 1L && out.head._3 === 1.0)
     assert(out.map(_._4) === (1L to out.length).toSeq)

@@ -149,6 +149,21 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(emptyPartitionWindows("q50_ann_recall").isEmpty)
   }
 
+  test("q30/q98 LSH: no filter repeats the corpus-side hyperplane projections") {
+    // a nullable bucket id makes the bucket join infer isnotnull(bucket),
+    // which Catalyst pushes below the projection: every corpus row then
+    // computes its projections twice, once in that filter
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    Seq("q30_lsh_topk", "q98_lsh_topk_md5").foreach { q =>
+      val p = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      val repeated = p.collect {
+        case f: Filter if f.condition.exists(_.isInstanceOf[ArrayAggregate]) => f
+      }
+      assert(repeated.isEmpty, s"$q: ${repeated.mkString("\n")}")
+    }
+  }
+
   test("q65 shard layout: two-phase rank, no single-partition window") {
     assert(emptyPartitionWindows("q65_shuffle_shards").isEmpty)
   }
@@ -381,6 +396,52 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(p.contains("BroadcastHashJoin"), s"$q: $p") // bit-position probe
       assert(!p.contains("CartesianProduct"), s"$q: $p")
     }
+  }
+
+  /** Physical operator names of `name`'s plan in pre-order, expressions
+    * ignored. The aggregate strategy is normalised: Spark picks a hash,
+    * object-hash or sort aggregate from the buffer's data type (a string
+    * min cannot be updated in place), and a sort aggregate's input Sort
+    * comes with that choice. */
+  private def operators(name: String): Seq[String] = {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case a: SortAggregateExec => "Aggregate" +: (a.child match {
+        case s: SortExec => walk(s.child)
+        case c => walk(c)
+      })
+      case _: HashAggregateExec | _: ObjectHashAggregateExec =>
+        "Aggregate" +: p.children.flatMap(walk)
+      case _ => p.nodeName +: p.children.flatMap(walk)
+    }
+    walk(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+  }
+
+  test("md5-family queries run their production twin's plan: q27≡q91, q28≡q97, q30≡q98, q114≡q115") {
+    // each oracled query is its rows-only twin's operator under
+    // HashFamily.Md5, so the oracle certifies the production plan: the
+    // same fan-out and staging decisions, only the hash expressions
+    // differ. Checked on the single-file layout, where fan-out engages.
+    val key = graft.ops.Skew.ScanParallelismKey
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val differing = try Seq(
+      "q27_minhash_lsh" -> "q91_minhash_lsh_md5",
+      "q28_simhash_pairs" -> "q97_simhash_pairs_md5",
+      "q30_lsh_topk" -> "q98_lsh_topk_md5",
+      "q114_bloom_decontaminate" -> "q115_bloom_decontaminate_md5"
+    ).flatMap { case (prod, md5) =>
+      val (a, b) = (operators(prod), operators(md5))
+      if (a == b) None
+      else Some(s"$prod vs $md5:\n  ${a.mkString(" ")}\n  ${b.mkString(" ")}")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(differing.isEmpty, differing.mkString("\n"))
   }
 
   test("q117 quality rank normalization: window partitioned by source, never single-partition") {
