@@ -49,14 +49,18 @@ object VectorFunctions {
   /** Symmetric int8 quantization: scale by 127/max|x| and round (ties
     * away from zero — Spark round and DuckDB round agree), the standard
     * embedding-compression step before ANN index build. Zero vectors
-    * quantize to zeros. Output is array<long> so the values survive any
-    * engine's integer width unchanged. */
+    * quantize to zeros. A vector with a NaN or infinite component has no
+    * int8 code and is rejected as null, so one malformed embedding
+    * cannot abort the query. Output is array<long> so the values survive
+    * any engine's integer width unchanged. */
   def quantizeInt8(a: Column): Column =
     // max|x| as a null-started greatest fold: greatest skips nulls and
-    // orders NaN above every number, exactly as array_max does
+    // orders NaN above every number, exactly as array_max does, so the
+    // max is NaN or infinite exactly when a component is
     aggregate(a, lit(null).cast("double"),
       (acc, x) => greatest(acc, abs(x.cast("double"))),
-      mx => when(mx === 0.0, transform(a, _ => lit(0L)))
+      mx => when(isnan(mx) || mx === Double.PositiveInfinity, lit(null))
+        .when(mx === 0.0, transform(a, _ => lit(0L)))
         .otherwise(transform(a, x => round(x.cast("double") * 127.0 / mx).cast("long"))))
 
   /** L2 distance. */

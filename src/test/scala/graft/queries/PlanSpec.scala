@@ -87,14 +87,9 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private def emptyPartitionWindows(name: String): Seq[Window] =
     emptyPartitionWindows(SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan)
 
-  test("q35 IVF: no single-partition window anywhere in the plan") {
-    // the round-1 centroid selector ran row_number over the whole corpus
-    // in one task; the hash-sampled quantizer must never regress to that
-    assert(emptyPartitionWindows("q35_ivf_topk").isEmpty)
-    // the centroids are the driver-collected hash sample, which enters
-    // the query plan as a local relation; the sample itself runs as its
-    // own collect job while the plan is built, so the guard is applied
-    // to that job's plan, captured by a listener
+  /** The plan of query `name`, and every query its build ran (samples,
+    * model collects), captured by a listener. */
+  private def planAndBuildJobs(name: String): (String, Seq[QueryExecution]) = {
     val built = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -103,8 +98,8 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         built.add(qe)
     }
     spark.listenerManager.register(listener)
-    val p = try {
-      val p = plan("q35_ivf_topk")
+    try {
+      val p = plan(name)
       // listener events arrive in order: once the sentinel's is seen,
       // every query the plan build ran has been seen too
       val sentinel = spark.range(1).toDF()
@@ -113,12 +108,24 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       while (!built.asScala.exists(_ eq sentinel.queryExecution) &&
         System.nanoTime() < deadline) Thread.sleep(10)
       assert(built.asScala.exists(_ eq sentinel.queryExecution))
-      p
+      (p, built.asScala.toSeq.filterNot(_ eq sentinel.queryExecution))
     } finally spark.listenerManager.unregister(listener)
-    assert(p.contains("LocalTableScan [centroid_id"), p)
-    val samples = built.asScala.toSeq.filter(
+  }
+
+  test("q35 IVF: no single-partition window anywhere in the plan") {
+    // the round-1 centroid selector ran row_number over the whole corpus
+    // in one task; the hash-sampled quantizer must never regress to that
+    assert(emptyPartitionWindows("q35_ivf_topk").isEmpty)
+    // the centroids are the driver-collected hash sample, which enters
+    // the query plan as one literal; the sample itself runs as its own
+    // collect job while the plan is built, so the guard is applied to
+    // that job's plan, captured by a listener
+    val (p, built) = planAndBuildJobs("q35_ivf_topk")
+    // no centroid table and no join to pack it: the model is a literal
+    assert(!p.contains("LocalTableScan") && !p.contains("BroadcastNestedLoopJoin"), p)
+    val samples = built.filter(
       _.executedPlan.treeString.contains("TakeOrderedAndProject"))
-    assert(samples.nonEmpty, built.asScala.map(_.executedPlan.treeString).mkString("\n"))
+    assert(samples.nonEmpty, built.map(_.executedPlan.treeString).mkString("\n"))
     samples.foreach(qe =>
       assert(emptyPartitionWindows(qe.optimizedPlan).isEmpty, qe.optimizedPlan.treeString))
   }
@@ -281,16 +288,18 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(emptyPartitionWindows("q90_embedding_outliers").isEmpty)
   }
 
-  test("q92 semDedup assignment: pure broadcast-pack projection, zero Exchange") {
-    // the cell argmax is an expression over a broadcast one-row centroid
-    // pack — no shuffle of the corpus at any size (same law as q35's
-    // assignment, proven here on the rounded deterministic variant)
+  test("q92 semDedup assignment: centroid-literal projection, zero Exchange") {
+    // the cell argmax is an expression over the centroids collected into
+    // one plan literal — no shuffle and no join of the corpus at any size
+    // (same law as q35's assignment, proven here on the rounded
+    // deterministic variant); the md5 centroid sample runs while the
+    // plan is built, so it is not part of the plan
     val e = graft.Tables.embeddings(spark, sf)
     val cents = graft.ops.Similarity.md5SeededCentroids(e, "vec_id", "embedding", 8)
     val p = graft.ops.Similarity.assignCellsRounded(e, "vec_id", "embedding", cents)
       .queryExecution.explainString(SimpleMode)
-    assert(!p.contains("Exchange hashpartitioning"), p)
-    assert(p.contains("TakeOrderedAndProject"), p) // the md5 centroid sample
+    assert(!p.contains("Exchange") && !p.contains("Join"), p)
+    assert(!p.contains("TakeOrderedAndProject"), p)
   }
 
   test("q100 edit-distance pairs: shingle equi-join candidates, never a nested-loop cross join") {
@@ -495,12 +504,17 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("q124 kmeans rounds: corpus vectors never shuffle — only (cell, pos) and cell aggregates Exchange") {
-    val p = plan("q124_kmeans_rounds")
-    // assignment is the q92 broadcast-pack projection; the update
-    // aggregates at (centroid_id, pos) then (centroid_id) grain — no
-    // Exchange may carry the corpus vector column itself
-    assert(!"Exchange hashpartitioning\\([^)]*\\bcv#".r.findFirstIn(p).isDefined, p)
-    assert(p.contains("partial_sum"), p) // map-side quantized mean partials
+    // assignment is the q92 centroid-literal projection; each round's
+    // update aggregates at (centroid_id, pos) then (centroid_id) grain
+    // and is collected while the plan is built, so the guard reads the
+    // plans of those jobs, captured by a listener — no Exchange may
+    // carry the corpus vector column itself
+    val (p, built) = planAndBuildJobs("q124_kmeans_rounds")
+    val plans = p +: built.map(_.executedPlan.treeString)
+    plans.foreach(q =>
+      assert(!"Exchange hashpartitioning\\([^)]*\\bcv#".r.findFirstIn(q).isDefined, q))
+    // map-side quantized mean partials in the update rounds
+    assert(plans.exists(_.contains("partial_sum")), plans.mkString("\n"))
     assert(emptyPartitionWindows("q124_kmeans_rounds").isEmpty)
   }
 
