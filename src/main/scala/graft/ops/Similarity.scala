@@ -56,11 +56,19 @@ object Similarity {
     // corpus side fanned out: the Q·N cosine scoring otherwise runs at
     // the single-file scan's width — q50 profiled its brute-force
     // branches as 1-4 s SINGLE-task stages (no-op on cluster layouts)
-    val c = Skew.fanOutForCpu(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-      Seq(col("neighbor_id")))
-    rankTopK(c.crossJoin(broadcast(q)), k)
+    rankTopK(fannedVecs(corpus, idCol, vecCol).crossJoin(broadcast(q)), k)
   }
+
+  /** The corpus as `(neighbor_id, cv)` rows. */
+  private def corpusVecs(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+
+  /** [[corpusVecs]] through [[Skew.fanOutForCpu]]. Every user of this
+    * one frame in a plan reads the same exchange (Spark reuses it), so
+    * [[bruteForceTopK]] and [[ivfPqTopK]]'s encode and rerank scan and
+    * fan out the corpus once between them. */
+  private def fannedVecs(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    Skew.fanOutForCpu(corpusVecs(corpus, idCol, vecCol), Seq(col("neighbor_id")))
 
   /** LSH-bucketed approximate top-k: only candidates sharing a
     * `nBits`-bit hyperplane signature bucket are scored. With B buckets
@@ -83,18 +91,37 @@ object Similarity {
     // fanned out like [[bruteForceTopK]], below the bucket projection:
     // nBits hyperplane projections per corpus row, otherwise serialized
     // at the scan's width
-    val c = Skew.fanOutForCpu(
-        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        Seq(col("neighbor_id")))
+    val c = fannedVecs(corpus, idCol, vecCol)
       .withColumn("bucket", lshBucket(col("cv"), nBits, family = family))
     rankTopK(c.join(q, "bucket"), k)
   }
 
   /** A model table held on the driver — centroids `(centroid_id,
     * centv)` or codebooks `(subspace, code, centv)` — as its rows, in
-    * column order, under its schema. */
+    * column order, under its schema. Every model enters plans as one
+    * literal ([[literalArray]]), so its size is bounded by
+    * [[MaxModelValues]]: a larger one fails here instead of being
+    * shipped inside every plan. */
   private final case class Model(rows: Seq[Row], schema: StructType) {
+    private val values = rows.iterator.map(valueCount).sum
+    require(values <= MaxModelValues,
+      s"an ANN model of ${rows.size} rows holds $values values, more than the " +
+        s"$MaxModelValues a plan literal may carry (centroids hold nCentroids·dim " +
+        "values, codebooks m·k·dim/m); train fewer centroids or codes")
     def toDF(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The most values (ids, codes and vector components) one model may
+    * hold: 2^20, about 4 MB of floats, e.g. 4,080 centroids of dim 256.
+    * The literal is part of every plan that reads the model — its
+    * string form, its task binaries — so this bounds what a plan
+    * carries. SemDeDup at web scale (~√N cells) is far above it. */
+  val MaxModelValues: Long = 1L << 20
+
+  private def valueCount(v: Any): Long = v match {
+    case r: Row => r.toSeq.iterator.map(valueCount).sum
+    case s: Iterable[_] => s.iterator.map(valueCount).sum
+    case _ => 1L
   }
 
   /** A caller's model table, collected in the given column order. It is
@@ -107,8 +134,8 @@ object Similarity {
   /** `rows` as ONE plan literal of type `array<struct<t>>`. Generated
     * code holds a complex literal by reference, not by value, so every
     * model of one shape compiles to the same classes. The literal is
-    * printed in plan strings and serialized into every task, so this
-    * form suits model-sized tables (kilobytes), not megabytes. */
+    * printed in plan strings and serialized into every task binary, so
+    * this form suits model-sized tables; [[Model]] enforces the bound. */
   private def literalArray(rows: Seq[Row], t: StructType): Column =
     GraftSqlBridge.column(Literal.create(rows, ArrayType(t, containsNull = false)))
 
@@ -512,7 +539,7 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"),
       pqLut(pack, unitNormalize(col(vecCol)), sub)(dot).as("lut"))
     rerank(adcTopCandidates(codes.crossJoin(broadcast(q)), k * refine),
-      corpus, queries, idCol, vecCol, k)
+      corpusVecs(corpus, idCol, vecCol), queries, idCol, vecCol, k)
   }
 
   /** ADC scan + per-query top-n cut over (codes, lut) candidate rows:
@@ -532,15 +559,12 @@ object Similarity {
       .select("query_id", "neighbor_id")
   }
 
-  /** The exact rerank of (query_id, neighbor_id) candidates: both real
-    * vectors join back and [[rankTopK]] ranks them. The corpus vectors
-    * come through the same fan-out as [[bruteForceTopK]]'s and the
-    * index encode's, so a plan holding several of them scans the corpus
-    * once. */
-  private def rerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+  /** The exact rerank of (query_id, neighbor_id) candidates: the real
+    * vectors join back — the corpus's from `vecs` ([[corpusVecs]], or
+    * [[fannedVecs]] where the plan fans the corpus out anyway) — and
+    * [[rankTopK]] ranks them. */
+  private def rerank(cand: DataFrame, vecs: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val vecs = Skew.fanOutForCpu(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")), Seq(col("neighbor_id")))
     val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     rankTopK(cand.join(vecs, "neighbor_id").join(broadcast(qvecs), "query_id"), k)
   }
@@ -565,8 +589,10 @@ object Similarity {
                 refine: Int = 4, trainN: Int = 1024, nIters: Int = 2): DataFrame = {
     val (cents, cbs) = ivfPqModel(corpus, idCol, vecCol, nCentroids, dim,
       m, kCodes, trainN, nIters)
-    ivfPqServe(encodeIndex(corpus, idCol, vecCol, cents, cbs, dim / m),
-      cents, cbs, corpus, queries, idCol, vecCol, k, dim, nProbe, m, refine)
+    // the encode and the rerank read one fanned-out corpus
+    val vecs = fannedVecs(corpus, idCol, vecCol)
+    ivfPqServe(encodeIndex(vecs, cents, cbs, dim / m),
+      cents, cbs, vecs, queries, idCol, vecCol, k, dim, nProbe, m, refine)
   }
 
   /** The serving half of IVF-PQ over a (cell, id, codes) index: ONE
@@ -576,7 +602,7 @@ object Similarity {
     * side is whatever the caller hands in — freshly encoded
     * ([[ivfPqTopK]]) or a persisted table ([[ivfPqTopKIndexed]]). */
   private def ivfPqServe(index: DataFrame, cents: Model, cbs: Model,
-                         corpus: DataFrame, queries: DataFrame, idCol: String,
+                         vecs: DataFrame, queries: DataFrame, idCol: String,
                          vecCol: String, k: Int, dim: Int, nProbe: Int, m: Int,
                          refine: Int): DataFrame = {
     val probes = explodeProbes(
@@ -585,7 +611,7 @@ object Similarity {
             probeOrder(centroidScores(cents, uq), nProbe).as("__ps"))).as("__q"))
         .select(col("query_id"), col("__q.lut"), col("__q.__ps")))
     rerank(adcTopCandidates(index.join(broadcast(probes), "centroid_id"), k * refine),
-      corpus, queries, idCol, vecCol, k)
+      vecs, queries, idCol, vecCol, k)
   }
 
   /** Materialize the IVF-PQ index: `table` = (centroid_id, neighbor_id,
@@ -608,7 +634,7 @@ object Similarity {
     cents.toDF(spark).write.mode("overwrite").saveAsTable(s"${table}_centroids")
     cbs.toDF(spark).write.mode("overwrite").saveAsTable(s"${table}_codebooks")
     writeBucketed(
-      encodeIndex(corpus, idCol, vecCol, cents, cbs, dim / m),
+      encodeIndex(fannedVecs(corpus, idCol, vecCol), cents, cbs, dim / m),
       nBuckets, "centroid_id", "overwrite", table)
   }
 
@@ -620,23 +646,20 @@ object Similarity {
   def encodeForIndex(corpus: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame, codebooks: DataFrame,
                      dim: Int, m: Int): DataFrame =
-    encodeIndex(corpus, idCol, vecCol, collectCentroids(centroids),
+    encodeIndex(fannedVecs(corpus, idCol, vecCol), collectCentroids(centroids),
       collectCodebooks(codebooks), dim / m)
 
-  /** `(neighbor_id, centroid_id, codes)` for every corpus row: one
-    * projection unit-normalizes the vector, assigns its cell and
-    * PQ-encodes it against the model literals — no join, no shuffle. */
-  private def encodeIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                          cents: Model, cbs: Model, sub: Int): DataFrame =
-    // the encode is a pure projection, but a CPU-dense one (nCentroids
-    // cosines and m·k sub-L2s per row) — fan the scan out when the input
-    // layout under-parallelizes it (no-op on cluster-wide scans; see
-    // fanOutForCpu)
-    Skew.fanOutForCpu(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__v")),
-        Seq(col("neighbor_id")))
-      .select(col("neighbor_id"), let(unitVec(col("__v")))(cv =>
-        struct(nearestCell(cents, cv).as("centroid_id"),
-          pqCodes(codebookPack(cbs), cv, sub)(l2sq).as("codes"))).as("__e"))
+  /** `(neighbor_id, centroid_id, codes)` for every `(neighbor_id, cv)`
+    * row of `vecs`: one projection unit-normalizes the vector, assigns
+    * its cell and PQ-encodes it against the model literals — no join,
+    * no shuffle. Callers pass [[fannedVecs]]: the encode is a CPU-dense
+    * projection (nCentroids cosines and m·k sub-L2s per row), fanned out
+    * when the input layout under-parallelizes it (no-op on cluster-wide
+    * scans; see fanOutForCpu). */
+  private def encodeIndex(vecs: DataFrame, cents: Model, cbs: Model, sub: Int): DataFrame =
+    vecs.select(col("neighbor_id"), let(unitVec(col("cv")))(u =>
+        struct(nearestCell(cents, u).as("centroid_id"),
+          pqCodes(codebookPack(cbs), u, sub)(l2sq).as("codes"))).as("__e"))
       .select(col("neighbor_id"), col("__e.centroid_id"), col("__e.codes"))
 
   /** Fold a new embedding batch into a persisted [[writeIvfPqIndex]]
@@ -738,7 +761,7 @@ object Similarity {
       pqLut(cbPack, unitNormalize(col(vecCol)), dim / m)((x, c) => q4(dot(x, c))).as("lut"),
       probeOrder(roundedCentroidScores(cents, col(vecCol)), nProbe).as("__ps")))
     rerank(adcTopCandidates(spark.table(table).join(broadcast(probes), "centroid_id"),
-      k * refine), corpus, queries, idCol, vecCol, k)
+      k * refine), corpusVecs(corpus, idCol, vecCol), queries, idCol, vecCol, k)
   }
 
   /** [[ivfPqTopK]] served from a [[writeIvfPqIndex]] staging table:
@@ -753,8 +776,8 @@ object Similarity {
                        nProbe: Int = 2, m: Int = 8,
                        refine: Int = 4): DataFrame =
     ivfPqServe(spark.table(table), collectCentroids(spark.table(s"${table}_centroids")),
-      collectCodebooks(spark.table(s"${table}_codebooks")), corpus, queries, idCol, vecCol,
-      k, dim, nProbe, m, refine)
+      collectCodebooks(spark.table(s"${table}_codebooks")), corpusVecs(corpus, idCol, vecCol),
+      queries, idCol, vecCol, k, dim, nProbe, m, refine)
 
   /** Embedding-cosine near-duplicate pairs over the whole corpus via LSH
     * buckets, OR-amplified across `nTables` independent hyperplane sets:
@@ -1005,7 +1028,7 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"),
       pqLut(pack, unitNormalize(col(vecCol)), sub)((x, c) => q4(dot(x, c))).as("lut"))
     rerank(adcTopCandidates(codes.crossJoin(broadcast(q)), k * refine),
-      corpus, queries, idCol, vecCol, k)
+      corpusVecs(corpus, idCol, vecCol), queries, idCol, vecCol, k)
   }
 
   /** Per-query probe cells under the rounded deterministic metric: one

@@ -2310,7 +2310,7 @@ object LlmQueries {
     // quotas, which flattens over-represented semantic regions instead
     // of over-represented sources (the "cluster-then-balance" step of
     // SemDeDup-style curation, kept as a SAMPLE rather than a dedup).
-    // Scale: cell assignment is a zero-shuffle broadcast-pack
+    // Scale: cell assignment is a zero-shuffle centroid-literal
     // projection; the quota is one (cell, id)-grain window — no
     // vector-carrying shuffle anywhere.
     Q("q113_cluster_balanced_sample",
@@ -3318,7 +3318,7 @@ object LlmQueries {
     // max(load_q) IS the worst-case probe-cost multiplier, since IVF
     // probe latency ∝ probed-cell size; the reading an index operator
     // watches before deciding to re-train centroids or split a hot
-    // cell. Corpus-sized work is the zero-Exchange broadcast-pack
+    // cell. Corpus-sized work is the zero-Exchange centroid-literal
     // assignment straight into a #cells-grain count; the audit math is
     // positive-operand integer division on the #cells-row table.
     Q("q144_index_balance",

@@ -27,12 +27,20 @@ import scala.collection.mutable
   * The spec empties the cache, runs the op once with the code
   * generator's source log captured, and counts the distinct sources
   * compiled: that count does not depend on what earlier suites left in
-  * the cache or on its size. */
+  * the cache or on its size.
+  *
+  * The budget is a regression guard set from a measurement, not a
+  * target the op meets: 79 classes (about 120 entries) were measured
+  * when the ANN models became plan literals, so the op still overflows
+  * the cache. A second op that compiles nothing would need about 60
+  * entries, and AQE's stage-completion order renames a few whole-stage
+  * classes per run even then. */
 class CodegenBudgetSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
   private val queries = (0L until 500L by 25L) // 20 ids: an InSet, as the bench's
-  // 101 distinct classes before the ANN models became plan literals
+  // 101 distinct classes before the ANN models became plan literals,
+  // 79 after; the guard allows three more before it fails
   private val budget = 82
 
   /** One compiled class: its source and whether an executor task

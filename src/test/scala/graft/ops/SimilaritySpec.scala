@@ -320,6 +320,32 @@ class SimilaritySpec extends SparkSpec {
     assert(aggregates.size === 1, plan.treeString)
   }
 
+  test("pqTopK fans the corpus out once: its rerank joins the plain corpus scan") {
+    // the encode's fan-out reads the unit-normalized corpus, which no
+    // other operator reads; a fanned-out rerank side would be a second,
+    // unshared exchange of every corpus vector
+    val prior = spark.conf.getOption(Skew.ScanParallelismKey)
+    spark.conf.set(Skew.ScanParallelismKey, "1")
+    try {
+      val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      val p = Similarity.pqTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
+        5, dim = 64, m = 16).queryExecution.executedPlan.toString
+      assert("REPARTITION_BY_NUM".r.findAllIn(p).size === 1, p)
+    } finally prior match {
+      case Some(v) => spark.conf.set(Skew.ScanParallelismKey, v)
+      case None => spark.conf.unset(Skew.ScanParallelismKey)
+    }
+  }
+
+  test("a model too large for a plan literal fails when it is collected") {
+    val n = Similarity.MaxModelValues.toInt
+    val cents = spark.range(1).select(col("id").as("centroid_id"),
+      array_repeat(lit(0.5f), n).as("centv"))
+    val e = intercept[IllegalArgumentException](
+      Similarity.assignCellsRounded(emb, "vec_id", "embedding", cents))
+    assert(e.getMessage.contains(s"${n + 1} values"), e.getMessage)
+  }
+
   test("multi-table near-dup LSH reaches full recall vs the exact pairs (sf0.01)") {
     // the q51 configuration: per-pair miss (1 - p²)^32 < 3e-7 at cos 0.35
     val d = "/root/testdata/sf0.01"

@@ -326,7 +326,7 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       graft.ops.Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 16),
       carry = Seq("label"))
     val phys = assigned.queryExecution.explainString(SimpleMode)
-    // only the one-row centroid-pack BroadcastExchange may appear — the
+    // the centroids are a plan literal, so no hash Exchange may appear — the
     // corpus itself must never shuffle (q92's law, plus the carry)
     assert(!phys.contains("Exchange hashpartitioning"), phys)
     assert(phys.contains("label"), phys) // the carry survives the projection
@@ -394,7 +394,7 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val phys = SparkEntry.queries("q113_cluster_balanced_sample")(spark, sf)
       .queryExecution.executedPlan.toString
     // one Exchange total: the per-cell quota window's — the centroid
-    // assignment itself is a broadcast-pack projection
+    // assignment itself is a projection over the centroid literal
     val exchanges = "Exchange hashpartitioning".r.findAllIn(phys).size
     assert(exchanges === 1, phys)
   }
@@ -583,7 +583,7 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("q131 hard negatives: zero-Exchange cell assignment, no corpus join-back, no single-partition window") {
     val p = plan("q131_hard_negatives")
-    // corpus vectors ride only the broadcast-pack projection — no
+    // corpus vectors ride only the centroid-literal projection — no
     // Exchange may carry the embedding column
     assert(!"Exchange hashpartitioning\\([^)]*\\bcv#".r.findFirstIn(p).isDefined, p)
     assert(!p.contains("CartesianProduct"), p)
