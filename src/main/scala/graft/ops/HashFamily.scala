@@ -1,17 +1,28 @@
 package graft.ops
 
+import graft.functions.VectorFunctions.unitNormalize
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
 /** The hash family of the text and vector sketches — MinHash + LSH
-  * banding, SimHash, random-hyperplane LSH and the Bloom filter. Each
-  * sketch has one body that takes its family as a parameter, so the
-  * oracle-checked family runs the production plan. [[HashFamily.XxHash64]]
-  * is the production family (8-byte hashes and keys);
-  * [[HashFamily.Md5]] is the verification family, the one hash Spark
-  * and DuckDB compute bit-identically, so every stage of a sketch run
-  * under it is reproducible in a SQL oracle (q91, q97, q98, q115, q177).
-  * Every per-family expression lives here and nowhere else. */
+  * banding, SimHash, random-hyperplane LSH and the Bloom filter — and
+  * of the ANN operators — IVF, PQ, the IVF-PQ index lifecycle and
+  * k-means. Each sketch and operator has one body that takes its family
+  * as a parameter, so the oracle-checked family runs the production
+  * plan. [[HashFamily.XxHash64]] is the production family (8-byte
+  * hashes and keys, raw float scores); [[HashFamily.Md5]] is the
+  * verification family, the one hash Spark and DuckDB compute
+  * bit-identically, with every score an engine could compute with
+  * different float dust rounded first, so every stage of a sketch or
+  * operator run under it is reproducible in a SQL oracle (q91, q97,
+  * q98, q115, q177; q96, q99, q103, q120, q124, q131). The ANN members
+  * ([[seedKey]], [[centroidId]], [[cellScore]], [[codeScore]],
+  * [[cellMean]], [[unitVector]], [[cellInput]], [[codebookType]]) carry
+  * the metric and training differences as well as the hash: Md5 rounds
+  * cell scores, quantizes code scores and Lloyd means to ×10⁴ integers
+  * and reads the vectors its oracles read (q96, q99, q120, q124). Every
+  * per-family expression lives here and nowhere else. */
 sealed trait HashFamily {
   /** The key a shingle carries into the MinHash permutations and the
     * Bloom probe's per-shingle aggregate. */
@@ -30,6 +41,29 @@ sealed trait HashFamily {
   def projection(p: Column): Column
   /** Bloom bit position in `[0, mBits)` of a shingle under hash `s`. */
   def bloomBit(shingle: Column, s: Int, mBits: Long): Column
+
+  /** The ANN seed order: IVF centroids and PQ codebook seeds are the
+    * corpus rows smallest under `(seedKey(id), id)`. */
+  def seedKey(id: Column): Column
+  /** A seed's centroid id, from its [[seedKey]] and its row id. */
+  def centroidId(key: Column, id: Column): Column
+  /** A centroid's ascending sort key for a vector at cosine `sim` (−2
+    * for a zero vector): the nearest cell is the smallest key, the probe
+    * order sorts on it. */
+  def cellScore(sim: Column): Column
+  /** A PQ code distance or ADC lookup entry as it is compared and
+    * summed. */
+  def codeScore(x: Column): Column
+  /** The aggregate a Lloyd round replaces a centroid coordinate with:
+    * the mean of its cell's coordinates `x`. */
+  def cellMean(x: Column): Column
+  /** The unit vector IVF-PQ encodes and builds its lookup tables from. */
+  def unitVector(v: Column): Column
+  /** What IVF-PQ's cells are seeded from and score: the `unit` vector
+    * its codes read, or the `raw` vector. A sample or a column. */
+  def cellInput[A](unit: A, raw: => A): A
+  /** The element type of trained PQ codebook vectors. */
+  def codebookType: DataType
 }
 
 object HashFamily {
@@ -47,6 +81,16 @@ object HashFamily {
     def projection(p: Column): Column = p
     def bloomBit(shingle: Column, s: Int, mBits: Long): Column =
       pmod(xxhash64(lit(s), shingle), lit(mBits))
+    def seedKey(id: Column): Column = xxhash64(id)
+    // the hash doubles as the id: 64-bit, collision-free in practice
+    def centroidId(key: Column, id: Column): Column = key
+    def cellScore(sim: Column): Column = negate(sim)
+    def codeScore(x: Column): Column = x
+    def cellMean(x: Column): Column = avg(x)
+    // float, the type the native cosine_sim of the cell scoring takes
+    def unitVector(v: Column): Column = unitNormalize(v).cast("array<float>")
+    def cellInput[A](unit: A, raw: => A): A = unit
+    def codebookType: DataType = FloatType
   }
 
   case object Md5 extends HashFamily {
@@ -73,5 +117,20 @@ object HashFamily {
     // the first 32 bits of md5("s|shingle")
     def bloomBit(shingle: Column, s: Int, mBits: Long): Column =
       conv(substring(md5(concat(lit(s"$s|"), shingle)), 1, 8), 16, 10).cast("long") % mBits
+    def seedKey(id: Column): Column = md5(id.cast("string"))
+    def centroidId(key: Column, id: Column): Column = id.cast("long")
+    // rounded for the same reason as projection; zcollapse AFTER negate:
+    // a +0.0-rounded cosine would otherwise negate to -0.0 and sort apart
+    // from a -0.0-cosine's +0.0 inside a struct ordering (expression eval
+    // sees raw IEEE doubles — row-write normalization hasn't happened yet)
+    def cellScore(sim: Column): Column = graft.functions.Num.zcollapse(negate(round(sim, 4)))
+    // ×10⁴ integers: their sums are exact and order-independent
+    def codeScore(x: Column): Column = round(x * 10000).cast("long")
+    // the ×10⁴ integer sum is exact; the mean is one double division
+    def cellMean(x: Column): Column =
+      sum(round(x.cast("double") * 10000).cast("long")) / (lit(10000.0) * count(lit(1)))
+    def unitVector(v: Column): Column = unitNormalize(v)
+    def cellInput[A](unit: A, raw: => A): A = raw
+    def codebookType: DataType = DoubleType
   }
 }

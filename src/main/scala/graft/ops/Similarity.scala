@@ -11,16 +11,29 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
 import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor search over an embedding column
-  * (north star). Two tiers:
+  * (north star), and the embedding-cell operators built on its IVF
+  * assignment:
   *   - [[bruteForceTopK]] — exact baseline: broadcast the (small) query
   *     set against the full corpus; O(Q·N·dim) but embarrassingly
   *     parallel and shuffle-free until the final per-query top-k.
-  *   - [[lshTopK]] — scale path: both sides bucketed by deterministic
+  *   - [[lshTopK]] — data-oblivious scale path: both sides bucketed by
   *     random-hyperplane LSH; candidate generation is an equi-join on
   *     the bucket id, so the pair count drops from Q·N to Q·bucket size.
+  *   - [[ivfTopK]] — density-adaptive scale path: hash-sampled (and
+  *     optionally Lloyd-refined, [[ivfCentroids]]) cells, probed by a
+  *     per-query expression; optionally scoped to the query's own or
+  *     another label ([[LabelScope]]).
+  *   - [[pqTopK]] and [[ivfPqTopK]] — product-quantized scans with exact
+  *     rerank; [[writeIvfPqIndex]], [[appendIvfPqIndex]] and
+  *     [[ivfPqTopKIndexed]] persist, grow and serve the IVF-PQ index.
+  *   - [[semDedup]], [[indexBalanceAudit]], [[clusterSeparation]] and
+  *     [[clusterTopTermsDeterministic]] — dedup and audits over the cells.
   *
-  * Results round similarity to 4 decimals *before* ranking so ordering is
-  * reproducible across engines/float paths; ties break on corpus id.
+  * Every trained or sampled operator takes a [[HashFamily]]: XxHash64
+  * in production, Md5 for the DuckDB-oracled queries, which then run the
+  * production body. Results round similarity to 4 decimals *before*
+  * ranking so ordering is reproducible across engines/float paths; ties
+  * break on corpus id.
   */
 object Similarity {
 
@@ -149,14 +162,15 @@ object Similarity {
     collectModel(centroids, "centroid_id", "centv")
 
   /** Per-centroid score structs `(−sim, centroid_id)` for vector `v`
-    * against the centroids `cents`. Ascending struct order is then
-    * exactly the old window contract `orderBy(sim.desc, centroid_id)`:
-    * `array_min` = nearest centroid, `array_sort` head = probe order.
-    * Null sims (zero vectors) coalesce to −(−2) = 2 so they sort last,
-    * like desc_nulls_last did. */
-  private def centroidScores(cents: Model, v: Column): Column =
+    * against the centroids `cents`, the score finished by `family`
+    * ([[HashFamily.cellScore]]; Md5 rounds it to 4dp). Ascending struct
+    * order is then exactly the old window contract `orderBy(sim.desc,
+    * centroid_id)`: `array_min` = nearest centroid, `array_sort` head =
+    * probe order. Null sims (zero vectors) coalesce to −(−2) = 2 so they
+    * sort last, like desc_nulls_last did. */
+  private def centroidScores(cents: Model, v: Column, family: HashFamily): Column =
     transform(centroidPack(cents), ce =>
-      struct(negate(coalesce(cosineSim(v, ce.getField("centv")), lit(-2.0))).as("ns"),
+      struct(family.cellScore(coalesce(cosineSim(v, ce.getField("centv")), lit(-2.0))).as("ns"),
         ce.getField("centroid_id").as("centroid_id")))
 
   /** The id of the best centroid of `cents` under `scores` (the argmax,
@@ -171,8 +185,15 @@ object Similarity {
   }
 
   /** The nearest centroid's id for vector `v`. */
-  private def nearestCell(cents: Model, v: Column): Column =
-    nearest(cents, centroidScores(cents, v))
+  private def nearestCell(cents: Model, v: Column, family: HashFamily): Column =
+    nearest(cents, centroidScores(cents, v, family))
+
+  /** `(neighbor_id, cv, centroid_id, carry…)`: every corpus row with its
+    * nearest cell, one projection over the centroid literal. */
+  private def assign(corpus: DataFrame, idCol: String, vecCol: String, cents: Model,
+                     carry: Seq[String], family: HashFamily): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id") +: col(vecCol).as("cv")
+      +: nearestCell(cents, col(vecCol), family).as("centroid_id") +: carry.map(col): _*)
 
   /** The `nProbe` best `(−sim, centroid_id)` structs under `scores`. */
   private def probeOrder(scores: Column, nProbe: Int): Column =
@@ -199,30 +220,51 @@ object Similarity {
     * posexplode → groupBy(centroid_id, pos) → avg: the per-dimension
     * partial aggregation collapses each map partition to ≤ nCentroids·dim
     * rows before the shuffle, so the exchange is cluster-sized, not
-    * data-sized. Cells that capture no points drop out (standard k-means
-    * behavior — the live centroid count can only shrink). */
-  private def lloydStep(c: DataFrame, cents: DataFrame): DataFrame =
+    * data-sized. The mean is `family`'s ([[HashFamily.cellMean]]: Md5's
+    * is a ×10⁴ integer sum over the count, exact in any engine), cast to
+    * float. Cells that capture no points drop out (standard k-means
+    * behavior — the live centroid count can only shrink; a SQL GROUP BY
+    * drops them alike). */
+  private def lloydStep(c: DataFrame, cents: DataFrame, family: HashFamily): DataFrame =
     // fanned out: the assignment pass is nCentroids cosines per corpus
     // row — serialized at the scan's width otherwise (q50's ivf_lloyd
     // branch; no-op on cluster layouts)
+    // the cell is projected below the explode: an expression beside a
+    // generator is evaluated per generated row, dim times per vector
     Skew.fanOutForCpu(c, Seq(col("neighbor_id")))
-      .select(nearestCell(collectCentroids(cents), col("cv")).as("centroid_id"),
-        posexplode(col("cv")))
-      .groupBy("centroid_id", "pos").agg(avg(col("col")).as("m"))
+      .select(nearestCell(collectCentroids(cents), col("cv"), family).as("centroid_id"),
+        col("cv"))
+      .select(col("centroid_id"), posexplode(col("cv")))
+      .groupBy("centroid_id", "pos").agg(family.cellMean(col("col")).as("m"))
       .groupBy("centroid_id")
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("centroid_id"),
         transform(col("pm"), s => s.getField("m").cast("float")).as("centv"))
 
+  /** The label scope of a filtered IVF search ([[ivfTopK]]): each
+    * query's neighbors are only the corpus rows whose `labelCol` equals
+    * its own ([[SameLabel]] — "search within my category", the
+    * tenant/language/label filter every vector store exposes) or
+    * differs from it ([[OtherLabel]] — hard-negative mining: closest in
+    * embedding space, wrong by label, the SimCSE/DPR-style contrastive
+    * triple). The label rides the cell assignment itself, and the
+    * predicate runs at the cell-candidate join — before any ranking
+    * slot is spent (FAISS IDSelector / Qdrant-filter semantics), with no
+    * corpus-sized join-back. */
+  sealed abstract class LabelScope(val labelCol: String,
+                                   val keep: (Column, Column) => Column)
+  final case class SameLabel(label: String) extends LabelScope(label, _ === _)
+  final case class OtherLabel(label: String) extends LabelScope(label, _ =!= _)
+
   /** IVF (inverted-file) approximate top-k — the other classic ANN scale
-    * path. Coarse quantizer: the `nCentroids` corpus vectors with the
-    * smallest xxhash64(id) — a deterministic pseudo-random sample with no
+    * path. Coarse quantizer: the `nCentroids` corpus vectors smallest
+    * under `family`'s seed key (xxhash64(id), or md5 for the oracle) — a
+    * deterministic pseudo-random sample with no
     * trained model, no count() pre-pass, and no global window, collected
     * once to the driver ([[ivfCentroids]]): Catalyst plans
     * orderBy(hash).limit(n) as TakeOrderedAndProject, so every partition
     * keeps only nCentroids candidate rows and the full corpus never
-    * funnels through one task. The hash doubles as the centroid id
-    * (64-bit, collision-free in practice). `nIters` optional Lloyd
+    * funnels through one task. `nIters` optional Lloyd
     * rounds ([[lloydStep]]) move the sampled centroids to their cell
     * means — cells then follow data density instead of the sample.
     *
@@ -237,36 +279,55 @@ object Similarity {
     * Scored pairs drop from Q·N to ~Q·nProbe·N/nCentroids. Compared to
     * [[lshTopK]]: IVF adapts to the data distribution (cells follow
     * density) at the cost of the assignment pass; LSH is data-oblivious.
+    *
+    * `scope` restricts each query's candidates by label ([[LabelScope]];
+    * the output then carries the neighbor's label after query_id).
+    * Probes are still chosen by unfiltered cell proximity, so a
+    * selective same-label scope may leave a query fewer than k
+    * candidates in its probed cells (raise nProbe); a different-label
+    * scope keeps most of a probed cell.
+    *
+    * Under [[HashFamily.Md5]] the seeds are the md5(id)-smallest vectors,
+    * keyed by their id, and every ordering decision — cell argmax, probe
+    * ranking, final top-k — runs on the 4dp-rounded cosine with id
+    * tiebreaks, so the whole search reproduces in DuckDB (q96, and with
+    * a scope q103 and q131; q35 runs XxHash64).
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nCentroids: Int = 16,
-              nProbe: Int = 2, nIters: Int = 0): DataFrame = {
-    val cents = collectCentroids(ivfCentroids(corpus, idCol, vecCol, nCentroids, nIters))
+              nProbe: Int = 2, nIters: Int = 0, scope: Option[LabelScope] = None,
+              family: HashFamily = HashFamily.XxHash64): DataFrame = {
+    val cents = collectCentroids(ivfCentroids(corpus, idCol, vecCol, nCentroids, nIters, family))
+    val carry = scope.map(_.labelCol).toSeq
     // fanned out: the nearest-centroid argmax is nCentroids cosines per
     // corpus row, serialized at the scan's width otherwise (same remedy
     // as [[ivfPqTopK]]'s encode; no-op on cluster layouts)
-    val assigned = Skew.fanOutForCpu(corpus, Seq(col(idCol)))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        nearestCell(cents, col(vecCol)).as("centroid_id"))
-    val probes = explodeProbes(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), probeOrder(centroidScores(cents, col(vecCol)), nProbe).as("__ps")))
-    rankTopK(assigned.join(probes, "centroid_id"), k)
+    val assigned = assign(Skew.fanOutForCpu(corpus, Seq(col(idCol))), idCol, vecCol,
+      cents, carry, family)
+    val probes = explodeProbes(queries.select(col(idCol).as("query_id") +:
+      col(vecCol).as("qv") +: carry.map(col(_).as("__qm")) :+
+      probeOrder(centroidScores(cents, col(vecCol), family), nProbe).as("__ps"): _*))
+    val cand = assigned.join(probes, "centroid_id")
+    rankTopK(scope.fold(cand)(s => cand.filter(s.keep(col(s.labelCol), col("__qm")))),
+      k, carryOut = carry)
   }
 
   /** The coarse-quantizer centroid table `(centroid_id, centv
     * array<float>)`. The seeds are the first `nCentroids` rows of the
-    * driver-collected hash sample ([[hashSample]]), as a local relation.
-    * `nIters` Lloyd rounds ([[lloydStep]]) then run distributed over the
-    * WHOLE corpus, not the sample, so nothing corpus-sized is collected.
-    * Public so an index build can materialize centroids once and reuse
-    * them across query batches (with [[assignCells]]) instead of
-    * re-deriving per query. */
+    * driver-collected sample ([[hashSample]]) in `family`'s seed order,
+    * as a local relation. `nIters` Lloyd rounds ([[lloydStep]]) then run
+    * distributed over the WHOLE corpus, not the sample, so nothing
+    * corpus-sized is collected. Public so an index build can materialize
+    * centroids once and reuse them across query batches (with
+    * [[assignCells]]) instead of re-deriving per query; under Md5 with
+    * [[assignCells]] it is the DuckDB-oracled k-means (q124). */
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                   nCentroids: Int, nIters: Int = 0): DataFrame = {
+                   nCentroids: Int, nIters: Int = 0,
+                   family: HashFamily = HashFamily.XxHash64): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val seeded = centroidModel(hashSample(corpus, idCol, vecCol, nCentroids), nCentroids)
+    val seeded = centroidModel(hashSample(corpus, idCol, vecCol, nCentroids, family), nCentroids)
       .toDF(corpus.sparkSession)
-    (0 until nIters).foldLeft(seeded)((cs, _) => lloydStep(c, cs))
+    (0 until nIters).foldLeft(seeded)((cs, _) => lloydStep(c, cs, family))
   }
 
   /** Bucketed saveAsTable with ONE shuffle by the bucket key first, so
@@ -311,13 +372,14 @@ object Similarity {
     rankTopK(spark.table(table).join(q, "bucket"), k)
   }
 
-  /** Nearest-centroid cell per corpus row — the IVF assignment pass.
+  /** Nearest-centroid cell per corpus row — the IVF assignment pass,
+    * `(neighbor_id, cv, centroid_id)` plus the `carry` columns unchanged.
     * Pure projection over the centroids collected into one plan literal:
     * NO shuffle, no window, regardless of corpus size. */
   def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
-                  centroids: DataFrame): DataFrame =
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      nearestCell(collectCentroids(centroids), col(vecCol)).as("centroid_id"))
+                  centroids: DataFrame, carry: Seq[String] = Nil,
+                  family: HashFamily = HashFamily.XxHash64): DataFrame =
+    assign(corpus, idCol, vecCol, collectCentroids(centroids), carry, family)
 
   // ---- Product quantization (the compression half of IVF-PQ) ----
   //
@@ -340,31 +402,32 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** The `n` rows with the smallest `(xxhash64(id), id)`, collected to
-    * the driver in that order as `(hashes, vectors)`: one job, planned as
-    * TakeOrderedAndProject (each partition keeps `n` rows; no global
-    * sort, no count pre-pass). The id tiebreak makes the cut a total
-    * order even under hash collisions ('training is deterministic', which
-    * ivfPqTopKIndexed ≡ ivfPqTopK rests on, must not assume collision
-    * absence). Rows with a null vector are never sampled. `prep` maps
-    * the vector before sampling; the null filter runs on the raw column
-    * first, so Catalyst cannot push it below `prep` and evaluate `prep`
-    * twice per row. Callers bound `n` by `trainN` or the centroid count,
-    * never by the corpus size. */
+  /** The `n` rows with the smallest `(seedKey(id), id)` under `family`,
+    * collected to the driver in that order as `(centroid ids, vectors)`:
+    * one job, planned as TakeOrderedAndProject (each partition keeps `n`
+    * rows; no global sort, no count pre-pass). The id tiebreak makes the
+    * cut a total order even under hash collisions ('training is
+    * deterministic', which ivfPqTopKIndexed ≡ ivfPqTopK rests on, must
+    * not assume collision absence). Rows with a null vector are never
+    * sampled, under either family. `prep` maps the vector before
+    * sampling; the null filter runs on the raw column first, so Catalyst
+    * cannot push it below `prep` and evaluate `prep` twice per row.
+    * Callers bound `n` by `trainN` or the centroid count, never by the
+    * corpus size. */
   private def hashSample(corpus: DataFrame, idCol: String, vecCol: String,
-                         n: Int, prep: Column => Column = identity)
+                         n: Int, family: HashFamily, prep: Column => Column = identity)
       : (Array[Long], Array[Array[Double]]) = {
     val rows = corpus
       .filter(col(vecCol).isNotNull)
-      .select(xxhash64(col(idCol)).as("__h"), col(idCol).as("__sid"),
+      .select(family.seedKey(col(idCol)).as("__h"), col(idCol).as("__sid"),
         prep(col(vecCol)).cast("array<double>").as("cv"))
       .orderBy("__h", "__sid").limit(n)
-      .select("__h", "cv").collect()
+      .select(family.centroidId(col("__h"), col("__sid")), col("cv")).collect()
     (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
   }
 
   /** `(centroid_id, centv array<float>)`: the first `n` sample rows,
-    * keyed by their hash (64-bit, collision-free in practice). */
+    * keyed by their centroid ids. */
   private def centroidModel(sample: (Array[Long], Array[Array[Double]]), n: Int): Model =
     Model(sample._1.iterator.zip(sample._2.iterator).take(n)
         .map { case (h, v) => Row(h, v.map(_.toFloat).toSeq) }.toSeq,
@@ -379,22 +442,26 @@ object Similarity {
     * (summed in sample order, cast to float) and drops the cells that
     * captured nothing. Codes are then renumbered 0..k'-1 in code order,
     * because the ADC lookup (element_at(lut, code+1)) and the LUT builder
-    * are POSITIONAL over the code-sorted codebook array. */
+    * are POSITIONAL over the code-sorted codebook array. `centv` is of
+    * `family`'s [[HashFamily.codebookType]]: Md5 keeps the sampled
+    * doubles, which its oracle slices unrounded (q99, q120). */
   private def codebookModel(vs: Array[Array[Double]], trainN: Int, dim: Int,
-                            m: Int, k: Int, nIters: Int): Model = {
+                            m: Int, k: Int, nIters: Int, family: HashFamily): Model = {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val sub = dim / m
     val xs = vs.take(trainN)
     xs.foreach(x => require(x.length == dim,
       s"a sampled vector has ${x.length} elements, not dim = $dim"))
+    val t = family.codebookType
+    def centv(c: Array[Double]): Seq[Any] = if (t == FloatType) c.map(_.toFloat).toSeq else c.toSeq
     val rows = (0 until m).flatMap { j =>
       val pts = xs.map(x => java.util.Arrays.copyOfRange(x, j * sub, j * sub + sub))
       val cents = (0 until nIters).foldLeft(pts.take(k))((cs, _) => lloydRound(pts, cs))
-      cents.iterator.zipWithIndex.map { case (c, code) => Row(j, code, c.map(_.toFloat).toSeq) }
+      cents.iterator.zipWithIndex.map { case (c, code) => Row(j, code, centv(c)) }
     }
     Model(rows, StructType(Seq(StructField("subspace", IntegerType, nullable = false),
       StructField("code", IntegerType, nullable = false),
-      StructField("centv", ArrayType(FloatType)))))
+      StructField("centv", ArrayType(t)))))
   }
 
   /** One driver-local Lloyd round over sample slices: nearest code per
@@ -438,24 +505,27 @@ object Similarity {
     * job, the sample collect; the result is a local relation. */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                   dim: Int, m: Int, k: Int, trainN: Int = 1024,
-                  nIters: Int = 2): DataFrame =
-    codebookModel(hashSample(corpus, idCol, vecCol, trainN)._2, trainN, dim, m, k, nIters)
-      .toDF(corpus.sparkSession)
+                  nIters: Int = 2): DataFrame = {
+    val family = HashFamily.XxHash64
+    codebookModel(hashSample(corpus, idCol, vecCol, trainN, family)._2, trainN, dim, m, k,
+      nIters, family).toDF(corpus.sparkSession)
+  }
 
-  /** Unit-normalized `array<float>`: the IVF side (centroidScores) runs
-    * the native cosine_sim expression, which is typed array<float>. */
-  private def unitVec(v: Column): Column = unitNormalize(v).cast("array<float>")
-
-  /** IVF seeds and PQ codebooks from ONE sample collect: the seeds are
-    * the first `nCentroids` rows of the same `(xxhash64(id), id)`
-    * ordering the codebooks train on, so [[ivfCentroids]] (nIters = 0)
-    * and [[pqCodebooks]] read one sample of max(trainN, nCentroids)
-    * rows. */
+  /** IVF seeds and PQ codebooks from ONE sample collect of `family`'s
+    * [[HashFamily.unitVector]]s: the seeds are the first `nCentroids`
+    * rows of the same ordering the codebooks train on, so
+    * [[ivfCentroids]] (nIters = 0) and [[pqCodebooks]] read one sample
+    * of max(trainN, nCentroids) rows. Where the family's cells read the
+    * raw vector ([[HashFamily.cellInput]], Md5), the seeds are a second,
+    * nCentroids-row sample of raw vectors in the same order. */
   private def ivfPqModel(corpus: DataFrame, idCol: String, vecCol: String,
                          nCentroids: Int, dim: Int, m: Int, kCodes: Int,
-                         trainN: Int, nIters: Int): (Model, Model) = {
-    val s = hashSample(corpus, idCol, vecCol, math.max(trainN, nCentroids), unitVec)
-    (centroidModel(s, nCentroids), codebookModel(s._2, trainN, dim, m, kCodes, nIters))
+                         trainN: Int, nIters: Int, family: HashFamily): (Model, Model) = {
+    val s = hashSample(corpus, idCol, vecCol, math.max(trainN, nCentroids), family,
+      family.unitVector)
+    val cells = family.cellInput(s, hashSample(corpus, idCol, vecCol, nCentroids, family))
+    (centroidModel(cells, nCentroids),
+      codebookModel(s._2, trainN, dim, m, kCodes, nIters, family))
   }
 
   /** All codebooks as ONE plan literal: an array over subspaces, in
@@ -500,9 +570,6 @@ object Similarity {
                    (score: (Column, Column) => Column): Column =
     perSubspace(pack, vec, sub)((x, cb) => transform(cb, ce => score(x, ce.getField("centv"))))
 
-  // the deterministic twins' integer forms: ×10⁴, rounded, as long
-  private def q4(d: Column): Column = round(d * 10000).cast("long")
-
   /** Encode PQ codes: adds a `codes array<int>` column (and drops the
     * vector) — a pure projection over the codebooks collected into one
     * plan literal: no shuffle, no window, at any corpus size. Every other
@@ -524,20 +591,28 @@ object Similarity {
     * broadcast with their LUTs; the only corpus-sized movement is the
     * per-query top-refine·k window over (id, approx) rows. Cosine metric:
     * both sides are unit-normalized for encode/ADC (dot ≡ cosine), the
-    * rerank reads original vectors. */
+    * rerank reads original vectors.
+    *
+    * Under [[HashFamily.Md5]] with nIters = 0 the codebooks are the
+    * md5(id)-smallest unit vectors, sliced, and every code distance and
+    * LUT entry is a ×10⁴ integer ([[HashFamily.codeScore]]; integer sums
+    * are order-independent where float sums are not), so the whole
+    * search reproduces in DuckDB (q99; q82 runs XxHash64). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, dim: Int, m: Int = 8, kCodes: Int = 16,
-             refine: Int = 4, trainN: Int = 1024, nIters: Int = 2): DataFrame = {
+             refine: Int = 4, trainN: Int = 1024, nIters: Int = 2,
+             family: HashFamily = HashFamily.XxHash64): DataFrame = {
     val sub = dim / m
     val unitCorpus = corpus.select(col(idCol).as("neighbor_id"),
       unitNormalize(col(vecCol)).as("cv"))
-    val pack = codebookPack(codebookModel(
-      hashSample(unitCorpus, "neighbor_id", "cv", trainN)._2, trainN, dim, m, kCodes, nIters))
+    val pack = codebookPack(codebookModel(hashSample(unitCorpus, "neighbor_id", "cv", trainN,
+      family)._2, trainN, dim, m, kCodes, nIters, family))
     // fanned out for the CPU-dense encode, same as [[ivfPqTopK]]
     val codes = Skew.fanOutForCpu(unitCorpus, Seq(col("neighbor_id")))
-      .select(col("neighbor_id"), pqCodes(pack, col("cv"), sub)(l2sq).as("codes"))
+      .select(col("neighbor_id"),
+        pqCodes(pack, col("cv"), sub)((x, c) => family.codeScore(l2sq(x, c))).as("codes"))
     val q = queries.select(col(idCol).as("query_id"),
-      pqLut(pack, unitNormalize(col(vecCol)), sub)(dot).as("lut"))
+      pqLut(pack, unitNormalize(col(vecCol)), sub)((x, c) => family.codeScore(dot(x, c))).as("lut"))
     rerank(adcTopCandidates(codes.crossJoin(broadcast(q)), k * refine),
       corpusVecs(corpus, idCol, vecCol), queries, idCol, vecCol, k)
   }
@@ -582,17 +657,20 @@ object Similarity {
     * -row hash-sample collect that [[ivfPqModel]] trains both models
     * from on the driver. The models enter the plan as two literals
     * (nCentroids·dim + m·k·dim/m values), so the encode and the probe
-    * read them with no join, no broadcast and no pin. */
+    * read them with no join, no broadcast and no pin. Its persisted form
+    * ([[writeIvfPqIndex]] + [[ivfPqTopKIndexed]]) serves the same rows
+    * (`BucketedAnnSpec`) and is the one oracled under Md5 (q120). */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, dim: Int, nCentroids: Int = 16,
                 nProbe: Int = 2, m: Int = 8, kCodes: Int = 16,
                 refine: Int = 4, trainN: Int = 1024, nIters: Int = 2): DataFrame = {
+    val family = HashFamily.XxHash64
     val (cents, cbs) = ivfPqModel(corpus, idCol, vecCol, nCentroids, dim,
-      m, kCodes, trainN, nIters)
+      m, kCodes, trainN, nIters, family)
     // the encode and the rerank read one fanned-out corpus
     val vecs = fannedVecs(corpus, idCol, vecCol)
-    ivfPqServe(encodeIndex(vecs, cents, cbs, dim / m),
-      cents, cbs, vecs, queries, idCol, vecCol, k, dim, nProbe, m, refine)
+    ivfPqServe(encodeIndex(vecs, cents, cbs, dim / m, family),
+      cents, cbs, vecs, queries, idCol, vecCol, k, dim, nProbe, m, refine, family)
   }
 
   /** The serving half of IVF-PQ over a (cell, id, codes) index: ONE
@@ -604,11 +682,13 @@ object Similarity {
   private def ivfPqServe(index: DataFrame, cents: Model, cbs: Model,
                          vecs: DataFrame, queries: DataFrame, idCol: String,
                          vecCol: String, k: Int, dim: Int, nProbe: Int, m: Int,
-                         refine: Int): DataFrame = {
+                         refine: Int, family: HashFamily): DataFrame = {
     val probes = explodeProbes(
-      queries.select(col(idCol).as("query_id"), let(unitVec(col(vecCol)))(uq =>
-          struct(pqLut(codebookPack(cbs), uq, dim / m)(dot).as("lut"),
-            probeOrder(centroidScores(cents, uq), nProbe).as("__ps"))).as("__q"))
+      queries.select(col(idCol).as("query_id"), let(family.unitVector(col(vecCol)))(uq =>
+          struct(pqLut(codebookPack(cbs), uq, dim / m)((x, c) => family.codeScore(dot(x, c)))
+              .as("lut"),
+            probeOrder(centroidScores(cents, family.cellInput(uq, col(vecCol)), family), nProbe)
+              .as("__ps"))).as("__q"))
         .select(col("query_id"), col("__q.lut"), col("__q.__ps")))
     rerank(adcTopCandidates(index.join(broadcast(probes), "centroid_id"), k * refine),
       vecs, queries, idCol, vecCol, k)
@@ -623,18 +703,21 @@ object Similarity {
     * trainer [[ivfPqTopK]] uses), encoding is one no-Exchange projection
     * pass over the corpus against the model literals, and every
     * subsequent query batch scans m-byte code payloads instead of
-    * dim×4-byte vectors. */
+    * dim×4-byte vectors. Under [[HashFamily.Md5]] with nIters = 0 the
+    * whole build → append → serve lifecycle reproduces in DuckDB (q120;
+    * q94 runs XxHash64). */
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                       table: String, dim: Int, nCentroids: Int = 16,
                       m: Int = 8, kCodes: Int = 16, nBuckets: Int = 8,
-                      trainN: Int = 1024, nIters: Int = 2): Unit = {
+                      trainN: Int = 1024, nIters: Int = 2,
+                      family: HashFamily = HashFamily.XxHash64): Unit = {
     val spark = corpus.sparkSession
     val (cents, cbs) = ivfPqModel(corpus, idCol, vecCol, nCentroids, dim,
-      m, kCodes, trainN, nIters)
+      m, kCodes, trainN, nIters, family)
     cents.toDF(spark).write.mode("overwrite").saveAsTable(s"${table}_centroids")
     cbs.toDF(spark).write.mode("overwrite").saveAsTable(s"${table}_codebooks")
     writeBucketed(
-      encodeIndex(fannedVecs(corpus, idCol, vecCol), cents, cbs, dim / m),
+      encodeIndex(fannedVecs(corpus, idCol, vecCol), cents, cbs, dim / m, family),
       nBuckets, "centroid_id", "overwrite", table)
   }
 
@@ -645,9 +728,10 @@ object Similarity {
     * contract as frame equality. */
   def encodeForIndex(corpus: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame, codebooks: DataFrame,
-                     dim: Int, m: Int): DataFrame =
+                     dim: Int, m: Int,
+                     family: HashFamily = HashFamily.XxHash64): DataFrame =
     encodeIndex(fannedVecs(corpus, idCol, vecCol), collectCentroids(centroids),
-      collectCodebooks(codebooks), dim / m)
+      collectCodebooks(codebooks), dim / m, family)
 
   /** `(neighbor_id, centroid_id, codes)` for every `(neighbor_id, cv)`
     * row of `vecs`: one projection unit-normalizes the vector, assigns
@@ -656,10 +740,12 @@ object Similarity {
     * projection (nCentroids cosines and m·k sub-L2s per row), fanned out
     * when the input layout under-parallelizes it (no-op on cluster-wide
     * scans; see fanOutForCpu). */
-  private def encodeIndex(vecs: DataFrame, cents: Model, cbs: Model, sub: Int): DataFrame =
-    vecs.select(col("neighbor_id"), let(unitVec(col("cv")))(u =>
-        struct(nearestCell(cents, u).as("centroid_id"),
-          pqCodes(codebookPack(cbs), u, sub)(l2sq).as("codes"))).as("__e"))
+  private def encodeIndex(vecs: DataFrame, cents: Model, cbs: Model, sub: Int,
+                          family: HashFamily): DataFrame =
+    vecs.select(col("neighbor_id"), let(family.unitVector(col("cv")))(u =>
+        struct(nearestCell(cents, family.cellInput(u, col("cv")), family).as("centroid_id"),
+          pqCodes(codebookPack(cbs), u, sub)((x, c) => family.codeScore(l2sq(x, c)))
+            .as("codes"))).as("__e"))
       .select(col("neighbor_id"), col("__e.centroid_id"), col("__e.codes"))
 
   /** Fold a new embedding batch into a persisted [[writeIvfPqIndex]]
@@ -677,91 +763,17 @@ object Similarity {
     * codes; frozen-model appends trade that refresh for batch-sized cost,
     * and a periodic rebuild re-centers the model — the standard
     * FAISS-style maintenance split. `nBuckets` must match the original
-    * build's (Spark rejects a mismatched append). */
+    * build's (Spark rejects a mismatched append), and `family` its
+    * family. */
   def appendIvfPqIndex(newBatch: DataFrame, idCol: String, vecCol: String,
                        table: String, dim: Int, m: Int = 8,
-                       nBuckets: Int = 8): Unit = {
+                       nBuckets: Int = 8,
+                       family: HashFamily = HashFamily.XxHash64): Unit = {
     val spark = newBatch.sparkSession
     writeBucketed(encodeForIndex(newBatch, idCol, vecCol,
       spark.table(s"${table}_centroids"),
-      spark.table(s"${table}_codebooks"), dim, m),
+      spark.table(s"${table}_codebooks"), dim, m, family),
       nBuckets, "centroid_id", "append", table)
-  }
-
-  /** [[writeIvfPqIndex]]'s verification twin: same persisted layout
-    * (cell-bucketed (centroid_id, neighbor_id, codes) + frozen
-    * `_centroids`/`_codebooks` model tables) but the models are
-    * md5-seeded ([[md5SeededCentroids]] raw-vector cells per q96,
-    * [[md5SeededPqCodebooks]] unit slices per q99) and every encode
-    * decision is the deterministic rounded/quantized form, so the WHOLE
-    * build → append → serve lifecycle reproduces in DuckDB and the
-    * persisted-index family gets a full hash oracle (q120; the
-    * production xxhash64/Lloyd q94 keeps its rows-only check). */
-  def writeIvfPqIndexDeterministic(corpus: DataFrame, idCol: String,
-                                   vecCol: String, table: String, dim: Int,
-                                   nCentroids: Int = 16, m: Int = 8,
-                                   kCodes: Int = 16, nBuckets: Int = 8): Unit = {
-    val spark = corpus.sparkSession
-    md5SeededCentroids(corpus, idCol, vecCol, nCentroids)
-      .write.mode("overwrite").saveAsTable(s"${table}_centroids")
-    md5SeededPqCodebooks(corpus, idCol, vecCol, dim, m, kCodes)
-      .write.mode("overwrite").saveAsTable(s"${table}_codebooks")
-    writeBucketed(encodeForIndexDeterministic(corpus, idCol, vecCol,
-      spark.table(s"${table}_centroids"),
-      spark.table(s"${table}_codebooks"), dim, m),
-      nBuckets, "centroid_id", "overwrite", table)
-  }
-
-  /** [[encodeForIndex]]'s deterministic twin under GIVEN frozen models:
-    * cell = rounded-cosine argmax over the raw vector
-    * ([[assignCellsRounded]], q96's contract), codes = ×10⁴-quantized
-    * l2 argmin with code tiebreak over the unit-normalized vector
-    * (q99's contract). Shared by the initial build and the append, so
-    * append ≡ fresh-encode-of-union holds by construction
-    * (`BucketedAnnSpec` pins it as frame equality). */
-  def encodeForIndexDeterministic(corpus: DataFrame, idCol: String,
-                                  vecCol: String, centroids: DataFrame,
-                                  codebooks: DataFrame,
-                                  dim: Int, m: Int): DataFrame = {
-    val cents = collectCentroids(centroids)
-    // same fan-out rationale as [[encodeIndex]]
-    Skew.fanOutForCpu(corpus, Seq(col(idCol)))
-      .select(nearest(cents, roundedCentroidScores(cents, col(vecCol))).as("centroid_id"),
-        col(idCol).as("neighbor_id"),
-        pqCodes(codebookPack(collectCodebooks(codebooks)), unitNormalize(col(vecCol)), dim / m)(
-          (x, c) => q4(l2sq(x, c))).as("codes"))
-  }
-
-  /** [[appendIvfPqIndex]]'s deterministic twin: encode the batch against
-    * the persisted FROZEN md5-seeded models (batch-sized cost, base
-    * never re-read) and append into the cell buckets. */
-  def appendIvfPqIndexDeterministic(newBatch: DataFrame, idCol: String,
-                                    vecCol: String, table: String, dim: Int,
-                                    m: Int = 8, nBuckets: Int = 8): Unit = {
-    val spark = newBatch.sparkSession
-    writeBucketed(encodeForIndexDeterministic(newBatch, idCol, vecCol,
-      spark.table(s"${table}_centroids"),
-      spark.table(s"${table}_codebooks"), dim, m),
-      nBuckets, "centroid_id", "append", table)
-  }
-
-  /** The deterministic serve over a [[writeIvfPqIndexDeterministic]]
-    * table: probe list under the rounded metric ([[probeCells]], q96),
-    * ×10⁴-integer ADC LUTs (q99 — integer sums are order-independent),
-    * codes-only approx scan, exact [[rankTopK]] rerank. */
-  def ivfPqTopKIndexedDeterministic(spark: org.apache.spark.sql.SparkSession,
-                                    table: String, corpus: DataFrame,
-                                    queries: DataFrame, idCol: String,
-                                    vecCol: String, k: Int, dim: Int,
-                                    nProbe: Int = 2, m: Int = 8,
-                                    refine: Int = 4): DataFrame = {
-    val cents = collectCentroids(spark.table(s"${table}_centroids"))
-    val cbPack = codebookPack(collectCodebooks(spark.table(s"${table}_codebooks")))
-    val probes = explodeProbes(queries.select(col(idCol).as("query_id"),
-      pqLut(cbPack, unitNormalize(col(vecCol)), dim / m)((x, c) => q4(dot(x, c))).as("lut"),
-      probeOrder(roundedCentroidScores(cents, col(vecCol)), nProbe).as("__ps")))
-    rerank(adcTopCandidates(spark.table(table).join(broadcast(probes), "centroid_id"),
-      k * refine), corpusVecs(corpus, idCol, vecCol), queries, idCol, vecCol, k)
   }
 
   /** [[ivfPqTopK]] served from a [[writeIvfPqIndex]] staging table:
@@ -769,15 +781,16 @@ object Similarity {
     * scans the persisted (cell, id, codes) index (codes-only I/O), and
     * the persisted model tables are collected into the serve's literals.
     * Output-identical to serving from the same model freshly applied
-    * (spec-pinned). */
+    * (spec-pinned). `family` must be the build's. */
   def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                        table: String, corpus: DataFrame, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int, dim: Int,
                        nProbe: Int = 2, m: Int = 8,
-                       refine: Int = 4): DataFrame =
+                       refine: Int = 4,
+                       family: HashFamily = HashFamily.XxHash64): DataFrame =
     ivfPqServe(spark.table(table), collectCentroids(spark.table(s"${table}_centroids")),
       collectCodebooks(spark.table(s"${table}_codebooks")), corpusVecs(corpus, idCol, vecCol),
-      queries, idCol, vecCol, k, dim, nProbe, m, refine)
+      queries, idCol, vecCol, k, dim, nProbe, m, refine, family)
 
   /** Embedding-cosine near-duplicate pairs over the whole corpus via LSH
     * buckets, OR-amplified across `nTables` independent hyperplane sets:
@@ -854,10 +867,11 @@ object Similarity {
     * never toward over-deletion (spec-pinned, SimilaritySpec).
     *
     * Determinism for the cross-engine oracle: the argmax is over
-    * round(cosine, 4) with centroid-id tiebreak (negate-after-round, so
-    * no rounding asymmetry), and q92's centroids are the nCentroids
-    * md5(id)-smallest corpus vectors — both reproducible bit-identically
-    * in DuckDB, making the full (doc, sem_cluster) table hash-checkable.
+    * round(cosine, 4) with centroid-id tiebreak (the [[HashFamily.Md5]]
+    * cell assignment), and q92's centroids are the nCentroids
+    * md5(id)-smallest corpus vectors ([[ivfCentroids]] under Md5) — both
+    * reproducible bit-identically in DuckDB, making the full (doc,
+    * sem_cluster) table hash-checkable.
     *
     * Output: (doc, sem_cluster) for EVERY corpus row; singletons label
     * themselves.
@@ -868,7 +882,7 @@ object Similarity {
     // staged: the candidate join consumes the assignment twice, and its
     // lineage is the full centroid-scoring projection
     val cells = Staged.stage(
-      assignCellsRounded(corpus, idCol, vecCol, centroids)
+      assignCells(corpus, idCol, vecCol, centroids, family = HashFamily.Md5)
         .select(col("neighbor_id").as("doc"), col("centroid_id").as("cell")))
     val cand = cells.as("a").join(cells.as("b"),
         col("a.cell") === col("b.cell") && col("a.doc") < col("b.doc"))
@@ -883,252 +897,6 @@ object Similarity {
     corpus.select(col(idCol).as("doc"))
       .join(clusters, Seq("doc"), "left_outer")
       .select(col("doc"), coalesce(col("cluster"), col("doc")).as("sem_cluster"))
-  }
-
-  /** The md5(id)-smallest `n` corpus vectors as a centroid table — the
-    * deterministic, cross-engine-reproducible seeding [[semDedup]]'s
-    * oracle needs (DuckDB computes the same md5 ordering; xxhash64 is
-    * Spark-only). TakeOrderedAndProject — no global sort. */
-  def md5SeededCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                         n: Int): DataFrame =
-    corpus.select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-      .orderBy(md5(col("centroid_id").cast("string")), col("centroid_id"))
-      .limit(n)
-
-  /** Full deterministic Lloyd k-means: md5 seeds → `rounds` ×
-    * (assign → quantized-mean update) → final assignment. The oracle
-    * twin of [[ivfCentroids]]' training loop (whose xxhash seeds and
-    * raw-float means are Spark-only): every decision an engine could
-    * diverge on is pinned —
-    *   - assignment argmax runs on the 4dp-ROUNDED cosine with id
-    *     tiebreaks ([[assignCellsRounded]], q96's proven metric);
-    *   - the centroid update is the q99/q102 INTEGER discipline applied
-    *     to the mean: each member coordinate quantizes to a ×10⁴ BIGINT,
-    *     the per-cell sum is exact integer arithmetic (order-independent
-    *     where a float sum is not), and the mean is one double division
-    *     — then cast to FLOAT (IEEE round-to-nearest, identical in any
-    *     engine) because vectors are float-typed corpus-wide;
-    *   - an emptied cell vanishes from the update exactly as a SQL
-    *     GROUP BY drops it.
-    * Scale: per round, one collect of the round's centroids and one
-    * assignment projection over their literal (zero corpus Exchange,
-    * [[assignCellsRounded]]) + one (cell, pos)-grain
-    * aggregate — cluster-count-sized state, map-side partials; the
-    * corpus vectors never shuffle. Output: (neighbor_id, centroid_id)
-    * under the final centroids. */
-  def kmeansDeterministic(corpus: DataFrame, idCol: String, vecCol: String,
-                          n: Int, rounds: Int = 1): DataFrame = {
-    val emb = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val finalCents = (1 to rounds).foldLeft(
-        md5SeededCentroids(corpus, idCol, vecCol, n)) {
-      (cents, _) => roundedLloydUpdate(emb, cents)
-    }
-    assignCellsRounded(emb, "neighbor_id", "cv", finalCents)
-      .select(col("neighbor_id"), col("centroid_id"))
-  }
-
-  /** One quantized-mean Lloyd update under the rounded metric (the
-    * deterministic twin of [[lloydStep]]): assign members, then per
-    * (cell, pos) sum ×10⁴-quantized coordinates exactly and divide
-    * once. Rebuilds `centv` in position order as a float array. */
-  private def roundedLloydUpdate(emb: DataFrame, cents: DataFrame): DataFrame =
-    assignCellsRounded(emb, "neighbor_id", "cv", cents)
-      .select(col("centroid_id"), posexplode(col("cv")).as(Seq("pos", "v")))
-      .groupBy("centroid_id", "pos")
-      .agg(sum(round(col("v").cast("double") * 10000).cast("long")).as("s"),
-        count(lit(1)).as("n"))
-      .groupBy("centroid_id")
-      .agg(transform(
-          array_sort(collect_list(struct(col("pos"),
-            (col("s") / (lit(10000.0) * col("n"))).as("m")))),
-          x => x.getField("m"))
-        .cast("array<float>").as("centv"))
-
-  /** Per-centroid (negated-rounded-cosine, centroid_id) structs — the
-    * CROSS-ENGINE-DETERMINISTIC scoring [[assignCellsRounded]],
-    * [[semDedup]] and [[ivfTopKDeterministic]] share: rounding to 4dp
-    * BEFORE the argmax/sort (negate-after-round, so no rounding
-    * asymmetry) makes the cell choice reproducible in any engine that
-    * computes a 4dp cosine, where the production [[centroidScores]]'
-    * raw doubles are float-path-sensitive. */
-  private def roundedCentroidScores(cents: Model, v: Column): Column =
-    transform(centroidPack(cents), ce =>
-      // zcollapse AFTER negate: a +0.0-rounded cosine would otherwise
-      // negate to -0.0 and sort apart from a -0.0-cosine's +0.0 inside
-      // array_min's struct ordering (expression eval sees raw IEEE
-      // doubles — row-write normalization hasn't happened yet)
-      struct(graft.functions.Num.zcollapse(negate(round(coalesce(
-          cosineSim(v, ce.getField("centv")), lit(-2.0)), 4))).as("ns"),
-        ce.getField("centroid_id").as("centroid_id")))
-
-  /** [[assignCells]] under the rounded deterministic metric — same
-    * centroid-literal projection (no shuffle at any corpus size), same
-    * output shape (neighbor_id, cv, centroid_id). `carry` columns ride
-    * the projection unchanged (metadata a filtered search scopes on —
-    * at scale they live IN the cell-bucketed index row, not behind a
-    * corpus-sized join-back). */
-  def assignCellsRounded(corpus: DataFrame, idCol: String, vecCol: String,
-                         centroids: DataFrame,
-                         carry: Seq[String] = Nil): DataFrame =
-    assignRounded(corpus, idCol, vecCol, collectCentroids(centroids), carry)
-
-  private def assignRounded(corpus: DataFrame, idCol: String, vecCol: String,
-                            cents: Model, carry: Seq[String] = Nil): DataFrame =
-    corpus.select(col(idCol).as("neighbor_id") +: col(vecCol).as("cv")
-      +: nearest(cents, roundedCentroidScores(cents, col(vecCol))).as("centroid_id")
-      +: carry.map(col): _*)
-
-  /** md5-seeded, NO-LLOYD PQ codebooks `(subspace, code, centv)`: the
-    * kCodes md5(id)-smallest unit-normalized corpus vectors, sliced into
-    * m subspaces; code = the seed's md5 rank, so the whole table is
-    * reproducible in DuckDB (the verification-twin role [[pqCodebooks]]'
-    * xxhash sampling + Lloyd rounds can't play). The window runs over
-    * the kCodes-row LIMIT result — never the corpus. */
-  def md5SeededPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
-                           dim: Int, m: Int, kCodes: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val sub = dim / m
-    // TakeOrderedAndProject sample, then rank via a single-row
-    // collect+sort aggregate over the kCodes-row result — bounded by
-    // construction, so no global window enters the plan (PlanSpec bans
-    // empty-partition windows across the ANN family)
-    val seeds = corpus
-      .select(md5(col(idCol).cast("string")).as("__m"), col(idCol).as("__sid"),
-        unitNormalize(col(vecCol)).as("cv"))
-      .orderBy("__m", "__sid").limit(kCodes)
-    seeds
-      .agg(array_sort(collect_list(struct(col("__m"), col("__sid"), col("cv")))).as("a"))
-      .select(posexplode(col("a")))
-      .select(col("pos").as("code"), col("col.cv").as("cv"))
-      .select(col("code"), posexplode(transform(sequence(lit(0), lit(m - 1)),
-        j => slice(col("cv"), j * sub + 1, lit(sub)))))
-      .toDF("code", "subspace", "centv")
-  }
-
-  /** [[pqTopK]]'s verification twin: same ADC plan shape (codebook
-    * literal → projection encode → per-query LUT → codes-only
-    * approx scan → top-refine·k window → exact rerank) but the codebooks
-    * are [[md5SeededPqCodebooks]] (no Lloyd) and every scoring decision
-    * — encode argmin, LUT entries, hence the approx sums — is quantized
-    * to INTEGERS (×10⁴, ties-away-from-zero rounding, which Spark and
-    * DuckDB share) with code/id tiebreaks: integer sums are
-    * order-independent where float sums are not, so the whole
-    * product-quantized search reproduces in DuckDB and gets a full hash
-    * oracle (q99; the production trained q82/q83 keep rows-only + q50
-    * recall floors). */
-  def pqTopKDeterministic(corpus: DataFrame, queries: DataFrame,
-                          idCol: String, vecCol: String, k: Int, dim: Int,
-                          m: Int = 8, kCodes: Int = 16,
-                          refine: Int = 4): DataFrame = {
-    val sub = dim / m
-    val pack = codebookPack(collectCodebooks(
-      md5SeededPqCodebooks(corpus, idCol, vecCol, dim, m, kCodes)))
-    val codes = corpus.select(col(idCol).as("neighbor_id"),
-      pqCodes(pack, unitNormalize(col(vecCol)), sub)((x, c) => q4(l2sq(x, c))).as("codes"))
-    val q = queries.select(col(idCol).as("query_id"),
-      pqLut(pack, unitNormalize(col(vecCol)), sub)((x, c) => q4(dot(x, c))).as("lut"))
-    rerank(adcTopCandidates(codes.crossJoin(broadcast(q)), k * refine),
-      corpusVecs(corpus, idCol, vecCol), queries, idCol, vecCol, k)
-  }
-
-  /** Per-query probe cells under the rounded deterministic metric: one
-    * row per (query, probed centroid), nProbe nearest cells each.
-    * `carry` columns (renamed source → output) ride the projection —
-    * shared by the filtered and unfiltered deterministic searches so
-    * probe semantics can never diverge between them. */
-  private def probeCells(queries: DataFrame, idCol: String, vecCol: String,
-                         cents: Model, nProbe: Int,
-                         carry: Seq[(String, String)] = Nil): DataFrame =
-    explodeProbes(queries.select(col(idCol).as("query_id") +: col(vecCol).as("qv") +:
-      carry.map { case (c, a) => col(c).as(a) } :+
-      probeOrder(roundedCentroidScores(cents, col(vecCol)), nProbe).as("__ps"): _*))
-
-  /** [[ivfTopK]]'s verification twin: identical plan shape
-    * (centroid-literal assignment, expression probe list, cell equi-join,
-    * [[rankTopK]] tail) but every ordering decision — cell argmax, probe
-    * ranking, final top-k — runs on round(cosine, 4) with id tiebreaks,
-    * and the centroid table is supplied by the caller
-    * ([[md5SeededCentroids]] for q96), so the WHOLE approximate search
-    * is reproducible bit-for-bit in DuckDB and gets a full hash oracle
-    * (the production xxhash64-seeded q35 keeps its rows-only check +
-    * recall floor). */
-  def ivfTopKDeterministic(corpus: DataFrame, queries: DataFrame,
-                           idCol: String, vecCol: String, k: Int,
-                           centroids: DataFrame, nProbe: Int = 2): DataFrame = {
-    val cents = collectCentroids(centroids)
-    val assigned = assignRounded(corpus, idCol, vecCol, cents)
-    val probes = probeCells(queries, idCol, vecCol, cents, nProbe)
-    rankTopK(assigned.join(probes, "centroid_id"), k)
-  }
-
-  /** Filtered ANN: [[ivfTopKDeterministic]] under a per-query metadata
-    * constraint — each query retrieves its top-k only among corpus rows
-    * whose `metaCol` equals the query's own ("search within my
-    * category": the tenant/language/label scoping every production
-    * vector store exposes as a search-time filter). The predicate is
-    * POST-FILTER-then-rank (candidates failing the filter are discarded
-    * BEFORE any ranking slot is spent, so the k results are all valid —
-    * the FAISS IDSelector / Qdrant-filter semantics), applied at the
-    * cell-candidate join where the metadata rides the index row itself
-    * ([[assignCellsRounded]]'s carry) — no corpus-sized join-back, no
-    * distance math on filtered-out rows.
-    *
-    * Recall caveat (documented, inherent to IVF filtering): probes are
-    * chosen by unfiltered cell proximity, so a heavily-filtered query
-    * may see fewer than k candidates in its probed cells; raise nProbe
-    * when filters are selective. Determinism: identical to
-    * [[ivfTopKDeterministic]] (shared [[probeCells]]/[[rankTopK]] —
-    * rounded metrics, id tiebreaks), plus the `+ 0.0` signed-zero
-    * collapse on the emitted sim: thinned candidate sets can rank a
-    * near-orthogonal pair, whose ±1e-18 sim rounds to -0.0 or 0.0 by
-    * engine summation order (the q54/q88 lesson — q103's oracle
-    * collapses identically).
-    *
-    * Output: (query_id, metaCol, neighbor_id, sim, rk). */
-  def ivfTopKDeterministicFiltered(corpus: DataFrame, queries: DataFrame,
-                                   idCol: String, vecCol: String,
-                                   metaCol: String, k: Int,
-                                   centroids: DataFrame,
-                                   nProbe: Int = 2): DataFrame = {
-    val cents = collectCentroids(centroids)
-    val assigned = assignRounded(corpus, idCol, vecCol, cents, carry = Seq(metaCol))
-    val probes = probeCells(queries, idCol, vecCol, cents, nProbe,
-      carry = Seq(metaCol -> "__qm"))
-    rankTopK(
-      assigned.join(probes, "centroid_id").filter(col(metaCol) === col("__qm")),
-      k, carryOut = Seq(metaCol))
-  }
-
-  /** Hard-negative mining — [[ivfTopKDeterministicFiltered]] with the
-    * predicate INVERTED: each query's top-k nearest neighbors among
-    * vectors with a DIFFERENT `metaCol` label. This is the contrastive-
-    * training data constructor (per-anchor hardest negatives: closest
-    * in embedding space, wrong by label — e.g. SimCSE/DPR-style triplet
-    * mining, or "nearest doc from another source" curation audits).
-    * Same plan economics as the filtered search: the label rides the
-    * zero-Exchange cell assignment, candidates come only from probed
-    * cells, the ≠ filter runs before any distance math on excluded
-    * rows, and no corpus join-back exists. Self cannot match (same id ⇒
-    * same label), but the explicit id guard is kept for robustness
-    * against inconsistent labels.
-    *
-    * The different-label filter is SELECTIVE in the opposite way from
-    * the same-label one: most of a probed cell usually survives, so
-    * nProbe can stay small; recall loss happens only when a query's
-    * hardest negatives live outside its probed cells — the standard
-    * IVF trade, measured by the q50 harness family. */
-  def ivfHardNegativesDeterministic(corpus: DataFrame, queries: DataFrame,
-                                    idCol: String, vecCol: String,
-                                    metaCol: String, k: Int,
-                                    centroids: DataFrame,
-                                    nProbe: Int = 2): DataFrame = {
-    val cents = collectCentroids(centroids)
-    val assigned = assignRounded(corpus, idCol, vecCol, cents, carry = Seq(metaCol))
-    val probes = probeCells(queries, idCol, vecCol, cents, nProbe,
-      carry = Seq(metaCol -> "__qm"))
-    rankTopK(
-      assigned.join(probes, "centroid_id").filter(col(metaCol) =!= col("__qm")),
-      k, carryOut = Seq(metaCol))
   }
 
   /** Cluster LABELING — top-`k` c-TF-IDF terms per embedding cell
@@ -1153,7 +921,7 @@ object Similarity {
                                    embIdCol: String, vecCol: String,
                                    centroids: DataFrame, k: Int = 5): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val assigned = assignCellsRounded(embeddings, embIdCol, vecCol, centroids)
+    val assigned = assignCells(embeddings, embIdCol, vecCol, centroids, family = HashFamily.Md5)
       .select(col("neighbor_id").as(docIdCol), col("centroid_id"))
     val terms = docs
       .select(col(docIdCol), graft.functions.TextFunctions.tokens(col(textCol)).as("__w"))
@@ -1192,7 +960,7 @@ object Similarity {
     * #cells-row occupancy table with a one-row broadcast total. */
   def indexBalanceAudit(corpus: DataFrame, idCol: String, vecCol: String,
                         centroids: DataFrame): DataFrame = {
-    val occ = assignCellsRounded(corpus, idCol, vecCol, centroids)
+    val occ = assignCells(corpus, idCol, vecCol, centroids, family = HashFamily.Md5)
       .groupBy(col("centroid_id").as("cell")).agg(count(lit(1)).as("n_vecs"))
     val tot = occ.agg(sum("n_vecs").as("__t"), count(lit(1)).as("__k"))
     occ.crossJoin(broadcast(tot))
@@ -1214,24 +982,22 @@ object Similarity {
     * bit; the final ratio is one sign-free integer division (NULL when
     * the nearest-other sum is zero — all points at all centroids).
     *
-    * Shape: one broadcast cross join against the ≤nCentroids centroid
-    * table (vectors never shuffle), a per-point sorted-struct pick of
-    * (own, second) distances, and a cell-grain aggregate. Output:
+    * Shape: the centroids, quantized, are one plan literal; a per-point
+    * projection sorts its (dist², centroid) structs and picks its own
+    * (nearest) and the second-nearest distance, so vectors never shuffle
+    * and the only Exchange is the cell-grain aggregate. Output:
     * (cell, n_points, sum_intra, sum_nearest_other, tightness_bp). */
   def clusterSeparation(corpus: DataFrame, idCol: String, vecCol: String,
                         centroids: DataFrame): DataFrame = {
     val quant: Column => Column =
       v => transform(v, x => round(x.cast("double") * 10000).cast("long"))
-    val e = corpus.select(col(idCol).as("__id"), quant(col(vecCol)).as("__q"))
-    val cent = centroids.select(col("centroid_id").as("__cid"),
-      quant(col("centv")).as("__cq"))
-    val d = e.crossJoin(broadcast(cent))
-      .select(col("__id"), col("__cid"),
-        expr("""aggregate(zip_with(__q, __cq, (x, y) -> (x - y) * (x - y)),
-          0L, (a, x) -> a + x)""").as("__d2"))
-    val picked = d.groupBy("__id")
-      .agg(sort_array(collect_list(struct(col("__d2"), col("__cid"))))
-        .as("__ds"))
+    val cents = collectModel(centroids.select(col("centroid_id"),
+      quant(col("centv")).as("centv")), "centroid_id", "centv")
+    val picked = corpus
+      .select(let(quant(col(vecCol)))(q => array_sort(transform(centroidPack(cents), ce =>
+        struct(aggregate(zip_with(q, ce.getField("centv"), (x, y) => (x - y) * (x - y)),
+            lit(0L), (a, x) => a + x).as("__d2"),
+          ce.getField("centroid_id").as("__cid"))))).as("__ds"))
       .select(
         col("__ds")(0).getField("__cid").as("cell"),
         col("__ds")(0).getField("__d2").as("__intra"),

@@ -33,6 +33,36 @@ object LlmQueries {
       s"psl fixture dir not found at $pslFixtureRoot; " +
         "launch from the repo root or set -Dgraft.fixtures.psl.dir / GRAFT_PSL_FIXTURES_DIR")
 
+  /** The persisted IVF-PQ lifecycle of q94 and q120: build index `t`
+    * on the older half of the embeddings, fold the newer half in through
+    * the frozen-model append, serve each of the first 100 vectors its
+    * top 5 from the appended table. The tables are dropped up front, so
+    * every invocation (Bench iterations) appends exactly once. */
+  private def ivfPqAppend(s: org.apache.spark.sql.SparkSession, d: String, t: String,
+                          nIters: Int, family: HashFamily)
+      : org.apache.spark.sql.DataFrame = {
+    Seq(t, s"${t}_centroids", s"${t}_codebooks").foreach { x =>
+      s.sql(s"DROP TABLE IF EXISTS $x")
+      // a FRESH session's catalog may not know a table whose warehouse
+      // directory survived an earlier run — saveAsTable then fails on
+      // LOCATION_ALREADY_EXISTS; clear the location too
+      val p = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir") + "/" + x)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, true)
+    }
+    val emb = Tables.embeddings(s, d)
+    val cut = emb.agg((max("vec_id") / lit(2.0)).as("__cut"))
+    val withCut = emb.crossJoin(broadcast(cut))
+    val base = withCut.filter(col("vec_id") <= col("__cut")).drop("__cut")
+    val batch = withCut.filter(col("vec_id") > col("__cut")).drop("__cut")
+    Similarity.writeIvfPqIndex(base, "vec_id", "embedding", t,
+      dim = 64, nCentroids = 16, m = 16, nBuckets = 8, nIters = nIters, family = family)
+    Similarity.appendIvfPqIndex(batch, "vec_id", "embedding", t,
+      dim = 64, m = 16, nBuckets = 8, family = family)
+    Similarity.ivfPqTopKIndexed(s, t, emb, emb.filter(col("vec_id") < 100),
+      "vec_id", "embedding", 5, dim = 64, nProbe = 8, m = 16, refine = 8, family = family)
+  }
+
   def all: Seq[Q] = Seq(
 
     // Exact dedup: content-hash groupBy — the canonical first pass of a
@@ -682,20 +712,18 @@ object LlmQueries {
       },
       None),
 
-    // q35's deterministic twin at the same parameters (16 cells, probe
-    // 8, k 5): md5-seeded centroids + every ordering decision on
-    // round(cos, 4) with id tiebreaks make the WHOLE approximate search
-    // — cell argmax, probe ranking, candidate join, final top-k —
-    // reproducible in DuckDB, so the IVF family gets a full hash oracle
-    // (q35 keeps the production metric + q50's recall floor). Same
-    // pattern as q91↔q27 for MinHash and q92's cell assignment.
+    // q35's operator under HashFamily.Md5 at the same parameters (16
+    // cells, probe 8, k 5): md5-seeded centroids + every ordering
+    // decision on round(cos, 4) with id tiebreaks make the WHOLE
+    // approximate search — cell argmax, probe ranking, candidate join,
+    // final top-k — reproducible in DuckDB, so the production IVF plan
+    // gets a full hash oracle (q35 keeps the production family + q50's
+    // recall floor). Same pattern as q91↔q27 for MinHash.
     Q("q96_ivf_topk_md5",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.ivfTopKDeterministic(emb, emb.filter(col("vec_id") < 100),
-          "vec_id", "embedding", 5,
-          Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 16),
-          nProbe = 8)
+        Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 100),
+          "vec_id", "embedding", 5, nCentroids = 16, nProbe = 8, family = HashFamily.Md5)
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |cent AS (SELECT vec_id AS cid, v AS cv FROM e
@@ -735,10 +763,9 @@ object LlmQueries {
     Q("q103_filtered_ann",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.ivfTopKDeterministicFiltered(emb,
-          emb.filter(col("vec_id") < 100), "vec_id", "embedding", "label",
-          5, Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 16),
-          nProbe = 8)
+        Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 100),
+          "vec_id", "embedding", 5, nCentroids = 16, nProbe = 8,
+          scope = Some(Similarity.SameLabel("label")), family = HashFamily.Md5)
       },
       Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
              |cent AS (SELECT vec_id AS cid, v AS cv FROM e
@@ -1437,68 +1464,20 @@ object LlmQueries {
     // base index is never re-read), serve from the appended table. The
     // dedupDelta twin for the serving story. Rows-only (xxhash64-seeded
     // models); BucketedAnnSpec pins append ≡ fresh encode of base ∪
-    // batch under the same models. Tables are dropped up front so every
-    // invocation (Bench iterations) appends exactly once.
+    // batch under the same models.
     Q("q94_ivfpq_append",
-      (s, d) => {
-        val t = "graft_q94_ivfpq"
-        Seq(t, s"${t}_centroids", s"${t}_codebooks").foreach { x =>
-          s.sql(s"DROP TABLE IF EXISTS $x")
-          // a FRESH session's catalog may not know a table whose
-          // warehouse directory survived an earlier run — saveAsTable
-          // then fails on LOCATION_ALREADY_EXISTS; clear the location too
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir") + "/" + x)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        val emb = Tables.embeddings(s, d)
-        val cut = emb.agg((max("vec_id") / lit(2.0)).as("__cut"))
-        val withCut = emb.crossJoin(broadcast(cut))
-        val base = withCut.filter(col("vec_id") <= col("__cut")).drop("__cut")
-        val batch = withCut.filter(col("vec_id") > col("__cut")).drop("__cut")
-        Similarity.writeIvfPqIndex(base, "vec_id", "embedding", t,
-          dim = 64, nCentroids = 16, m = 16, nBuckets = 8)
-        Similarity.appendIvfPqIndex(batch, "vec_id", "embedding", t,
-          dim = 64, m = 16, nBuckets = 8)
-        Similarity.ivfPqTopKIndexed(s, t, emb,
-          emb.filter(col("vec_id") < 100), "vec_id", "embedding", 5,
-          dim = 64, nProbe = 8, m = 16, refine = 8)
-      },
+      (s, d) => ivfPqAppend(s, d, "graft_q94_ivfpq", nIters = 2, HashFamily.XxHash64),
       None),
 
-    // q94's verification twin — the whole persisted-index LIFECYCLE
+    // q94's lifecycle under HashFamily.Md5 with no Lloyd round
     // (build on the first corpus half, frozen-model append of the
     // second, serve from the bucketed table) under md5-seeded models
     // and rounded/quantized decisions, so DuckDB reproduces it end to
     // end by encoding base ∪ batch against the base-trained models (the
     // frozen-model append contract: append ≡ fresh encode of the union,
-    // which BucketedAnnSpec pins as frame equality). Completes the last
-    // rows-only ANN family with a full hash oracle; q94 keeps the
-    // production xxhash64/Lloyd path.
+    // which BucketedAnnSpec pins as frame equality).
     Q("q120_ivfpq_append_md5",
-      (s, d) => {
-        val t = "graft_q120_ivfpq_md5"
-        Seq(t, s"${t}_centroids", s"${t}_codebooks").foreach { x =>
-          s.sql(s"DROP TABLE IF EXISTS $x")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir") + "/" + x)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        val emb = Tables.embeddings(s, d)
-        val cut = emb.agg((max("vec_id") / lit(2.0)).as("__cut"))
-        val withCut = emb.crossJoin(broadcast(cut))
-        val base = withCut.filter(col("vec_id") <= col("__cut")).drop("__cut")
-        val batch = withCut.filter(col("vec_id") > col("__cut")).drop("__cut")
-        Similarity.writeIvfPqIndexDeterministic(base, "vec_id", "embedding",
-          t, dim = 64, nCentroids = 16, m = 16, kCodes = 16, nBuckets = 8)
-        Similarity.appendIvfPqIndexDeterministic(batch, "vec_id", "embedding",
-          t, dim = 64, m = 16, nBuckets = 8)
-        Similarity.ivfPqTopKIndexedDeterministic(s, t, emb,
-          emb.filter(col("vec_id") < 100), "vec_id", "embedding", 5,
-          dim = 64, nProbe = 8, m = 16, refine = 8)
-      },
+      (s, d) => ivfPqAppend(s, d, "graft_q120_ivfpq_md5", nIters = 0, HashFamily.Md5),
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |cut AS (SELECT max(vec_id) / 2.0 AS c FROM e),
              |base AS (SELECT e.vec_id, e.v FROM e, cut WHERE e.vec_id <= c),
@@ -1562,18 +1541,18 @@ object LlmQueries {
              |  ORDER BY sim DESC, neighbor_id) AS rk FROM s)
              |WHERE rk <= 5""".stripMargin)),
 
-    // q82's deterministic twin: md5-seeded no-Lloyd codebooks, encode
-    // argmin and ADC LUT entries quantized to ×10⁴ integers (exact,
-    // order-independent sums — ties-away rounding agrees across
-    // engines), id/code tiebreaks everywhere — the full PQ search (seed
-    // → slice → encode → LUT → codes-only approx scan → top-refine·k →
-    // exact rerank) reproduces in DuckDB. Completes the verification-twin
-    // set: every ANN/sketch family now has a hash-checked instance.
+    // q82's operator under HashFamily.Md5 with no Lloyd round:
+    // md5-seeded codebooks, encode argmin and ADC LUT entries quantized
+    // to ×10⁴ integers (exact, order-independent sums — ties-away
+    // rounding agrees across engines), id/code tiebreaks everywhere — the
+    // full PQ search (seed → slice → encode → LUT → codes-only approx
+    // scan → top-refine·k → exact rerank) reproduces in DuckDB.
     Q("q99_pq_topk_md5",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.pqTopKDeterministic(emb, emb.filter(col("vec_id") < 100),
-          "vec_id", "embedding", 5, dim = 64, m = 8, kCodes = 16, refine = 4)
+        Similarity.pqTopK(emb, emb.filter(col("vec_id") < 100),
+          "vec_id", "embedding", 5, dim = 64, m = 8, kCodes = 16, refine = 4,
+          nIters = 0, family = HashFamily.Md5)
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |u AS (SELECT vec_id, v,
@@ -1815,7 +1794,7 @@ object LlmQueries {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         Similarity.semDedup(e, "vec_id", "embedding",
-          Similarity.md5SeededCentroids(e, "vec_id", "embedding", 8), 0.35)
+          Similarity.ivfCentroids(e, "vec_id", "embedding", 8, family = HashFamily.Md5), 0.35)
       },
       Some("""WITH RECURSIVE
              |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2316,8 +2295,9 @@ object LlmQueries {
     Q("q113_cluster_balanced_sample",
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val cells = Similarity.assignCellsRounded(e, "vec_id", "embedding",
-            Similarity.md5SeededCentroids(e, "vec_id", "embedding", 8))
+        val cells = Similarity.assignCells(e, "vec_id", "embedding",
+            Similarity.ivfCentroids(e, "vec_id", "embedding", 8, family = HashFamily.Md5),
+            family = HashFamily.Md5)
           .select(col("neighbor_id").as("vec_id"), col("centroid_id").as("cell"))
         Sampling.quotaPerStratum(cells, "vec_id", "cell", quota = 40)
       },
@@ -2657,9 +2637,14 @@ object LlmQueries {
     // so round-2 centroids are bit-identical cross-engine and the
     // reassignment argmax cannot diverge.
     Q("q124_kmeans_rounds",
-      (s, d) => Similarity.kmeansDeterministic(
-          Tables.embeddings(s, d), "vec_id", "embedding", n = 8, rounds = 1)
-        .select(col("neighbor_id").as("vec_id"), col("centroid_id")),
+      (s, d) => {
+        val e = Tables.embeddings(s, d)
+        Similarity.assignCells(e, "vec_id", "embedding",
+            Similarity.ivfCentroids(e, "vec_id", "embedding", 8, nIters = 1,
+              family = HashFamily.Md5),
+            family = HashFamily.Md5)
+          .select(col("neighbor_id").as("vec_id"), col("centroid_id"))
+      },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e
              |  ORDER BY md5(cast(vec_id AS VARCHAR)), vec_id LIMIT 8),
@@ -2825,10 +2810,9 @@ object LlmQueries {
     Q("q131_hard_negatives",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.ivfHardNegativesDeterministic(emb,
-          emb.filter(col("vec_id") < 100), "vec_id", "embedding", "label",
-          5, Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 16),
-          nProbe = 8)
+        Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 100),
+          "vec_id", "embedding", 5, nCentroids = 16, nProbe = 8,
+          scope = Some(Similarity.OtherLabel("label")), family = HashFamily.Md5)
       },
       Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
              |cent AS (SELECT vec_id AS cid, v AS cv FROM e
@@ -2871,7 +2855,7 @@ object LlmQueries {
         val emb = Tables.embeddings(s, d)
         Similarity.clusterTopTermsDeterministic(
           Tables.documents(s, d), emb, "doc_id", "text", "vec_id", "embedding",
-          Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 16), 5)
+          Similarity.ivfCentroids(emb, "vec_id", "embedding", 16, family = HashFamily.Md5), 5)
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |cent AS (SELECT vec_id AS cid, v AS cv FROM e
@@ -3325,7 +3309,7 @@ object LlmQueries {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         Similarity.indexBalanceAudit(e, "vec_id", "embedding",
-          Similarity.md5SeededCentroids(e, "vec_id", "embedding", 8))
+          Similarity.ivfCentroids(e, "vec_id", "embedding", 8, family = HashFamily.Md5))
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |cent AS (SELECT vec_id AS cid, v AS cv FROM e
@@ -4935,7 +4919,7 @@ object LlmQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         Similarity.clusterSeparation(emb, "vec_id", "embedding",
-          Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 16))
+          Similarity.ivfCentroids(emb, "vec_id", "embedding", 16, family = HashFamily.Md5))
       },
       Some("""WITH e AS (SELECT vec_id,
              |    list_transform(embedding::DOUBLE[],

@@ -121,21 +121,22 @@ class BucketedAnnSpec extends SparkSpec {
     val batch = emb.filter(col("vec_id") % 2 === 1)
     val t = "graft_emb_ivfpq_md5"
     try {
-      Similarity.writeIvfPqIndexDeterministic(base, "vec_id", "embedding",
-        t, dim = 64, nCentroids = 8, m = 16, kCodes = 16, nBuckets = 4)
-      Similarity.appendIvfPqIndexDeterministic(batch, "vec_id", "embedding",
-        t, dim = 64, m = 16, nBuckets = 4)
-      val expected = Similarity.encodeForIndexDeterministic(emb, "vec_id",
+      Similarity.writeIvfPqIndex(base, "vec_id", "embedding",
+        t, dim = 64, nCentroids = 8, m = 16, kCodes = 16, nBuckets = 4, nIters = 0,
+        family = HashFamily.Md5)
+      Similarity.appendIvfPqIndex(batch, "vec_id", "embedding",
+        t, dim = 64, m = 16, nBuckets = 4, family = HashFamily.Md5)
+      val expected = Similarity.encodeForIndex(emb, "vec_id",
         "embedding", spark.table(s"${t}_centroids"),
-        spark.table(s"${t}_codebooks"), dim = 64, m = 16)
+        spark.table(s"${t}_codebooks"), dim = 64, m = 16, family = HashFamily.Md5)
       val actual = spark.table(t)
       assert(actual.count() === emb.count())
       assert(expected.exceptAll(actual).count() === 0 &&
         actual.exceptAll(expected).count() === 0)
       val queries = emb.filter(col("vec_id") < 20)
-      val served = Similarity.ivfPqTopKIndexedDeterministic(spark, t, emb,
+      val served = Similarity.ivfPqTopKIndexed(spark, t, emb,
         queries, "vec_id", "embedding", 3, dim = 64, nProbe = 4, m = 16,
-        refine = 4)
+        refine = 4, family = HashFamily.Md5)
       assert(served.count() > 0)
       assert(served.filter(col("neighbor_id") % 2 === 1).count() > 0,
         "no appended-batch id ever served")

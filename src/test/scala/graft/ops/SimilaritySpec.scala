@@ -65,18 +65,18 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfTopKDeterministic: full probe reproduces brute-force exactly") {
-    // the q96 verification twin honors the same exactness-at-full-probe
-    // law as the production ivfTopK; a partial probe scans fewer cells,
-    // so per query its best sim can never exceed the full probe's
-    val cents = Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 2)
+    // ivfTopK under HashFamily.Md5 (q96) honors the same
+    // exactness-at-full-probe law as under XxHash64; a partial probe scans
+    // fewer cells, so per query its best sim can never exceed the full
+    // probe's
     val brute = Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 2)
-    val full = Similarity.ivfTopKDeterministic(emb, emb, "vec_id", "embedding", 2,
-      cents, nProbe = 2)
+    val full = Similarity.ivfTopK(emb, emb, "vec_id", "embedding", 2,
+      nCentroids = 2, nProbe = 2, family = HashFamily.Md5)
     assert(brute.exceptAll(full).count() === 0 && full.exceptAll(brute).count() === 0)
     val best = (df: org.apache.spark.sql.DataFrame) => df.filter(col("rk") === 1)
       .select(col("query_id"), col("sim")).as[(Long, Double)].collect().toMap
-    val partialBest = best(Similarity.ivfTopKDeterministic(
-      emb, emb, "vec_id", "embedding", 2, cents, nProbe = 1))
+    val partialBest = best(Similarity.ivfTopK(
+      emb, emb, "vec_id", "embedding", 2, nCentroids = 2, nProbe = 1, family = HashFamily.Md5))
     val fullBest = best(full)
     assert(partialBest.forall { case (q, s) => s <= fullBest(q) })
   }
@@ -90,9 +90,9 @@ class SimilaritySpec extends SparkSpec {
       (2L, Seq(0.0f, 1.0f), 1), (3L, Seq(-1.0f, 0.0f), 1),
       (4L, Seq(0.8f, 0.2f), 0), (5L, Seq(0.1f, 0.9f), 1)
     ).toDF("vec_id", "embedding", "label")
-    val cents = Similarity.md5SeededCentroids(labeled, "vec_id", "embedding", 2)
-    val filtered = Similarity.ivfTopKDeterministicFiltered(labeled, labeled,
-      "vec_id", "embedding", "label", 2, cents, nProbe = 2)
+    val filtered = Similarity.ivfTopK(labeled, labeled, "vec_id", "embedding", 2,
+      nCentroids = 2, nProbe = 2, scope = Some(Similarity.SameLabel("label")),
+      family = HashFamily.Md5)
     // every returned neighbor carries the query's own label
     val byQuery = labeled.select("vec_id", "label").as[(Long, Int)].collect().toMap
     val neigh = filtered.select("query_id", "label", "neighbor_id")
@@ -102,8 +102,8 @@ class SimilaritySpec extends SparkSpec {
     // ≡ running the unfiltered search per label slice
     val bySlice = Seq(0, 1).map { l =>
       val slice = labeled.filter(col("label") === l)
-      Similarity.ivfTopKDeterministic(slice, slice, "vec_id", "embedding", 2,
-        cents, nProbe = 2).withColumn("label", lit(l))
+      Similarity.ivfTopK(slice, slice, "vec_id", "embedding", 2,
+        nCentroids = 2, nProbe = 2, family = HashFamily.Md5).withColumn("label", lit(l))
         .select("query_id", "label", "neighbor_id", "sim", "rk")
     }.reduce(_ union _)
     assert(filtered.exceptAll(bySlice).count() === 0 &&
@@ -248,6 +248,27 @@ class SimilaritySpec extends SparkSpec {
     assert(models(emb.repartition(8)) === one)
   }
 
+  test("seeding never samples a null vector, under either family") {
+    // the md5-smallest id holds a null vector: the md5 seeds are the next
+    // two ids in md5 order, not the null row
+    def md5hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .map(b => f"${b & 0xff}%02x").mkString
+    val ids = (1L to 6L).toSeq
+    val order = ids.sortBy(i => (md5hex(i.toString), i))
+    val df = ids.map(i => (i, if (i == order.head) None else Some(Seq(1.0f, i.toFloat))))
+      .toDF("vec_id", "embedding")
+    val md5Seeds = Similarity.ivfCentroids(df, "vec_id", "embedding", 2, family = HashFamily.Md5)
+      .as[(Long, Seq[Float])].collect().toSeq
+    assert(md5Seeds.map(_._1) === order.slice(1, 3), md5Seeds.toString)
+    assert(md5Seeds.forall(_._2 != null), md5Seeds.toString)
+    Seq(HashFamily.XxHash64, HashFamily.Md5).foreach { family =>
+      val seeds = Similarity.ivfCentroids(df, "vec_id", "embedding", 6, family = family)
+        .as[(Long, Seq[Float])].collect().toSeq
+      assert(seeds.size === 5 && seeds.forall(_._2 != null), s"$family: $seeds")
+    }
+  }
+
   test("ivfPqTopK: building the plan runs one job (the sample collect) and pins nothing") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val sc = spark.sparkContext
@@ -342,7 +363,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = spark.range(1).select(col("id").as("centroid_id"),
       array_repeat(lit(0.5f), n).as("centv"))
     val e = intercept[IllegalArgumentException](
-      Similarity.assignCellsRounded(emb, "vec_id", "embedding", cents))
+      Similarity.assignCells(emb, "vec_id", "embedding", cents, family = HashFamily.Md5))
     assert(e.getMessage.contains(s"${n + 1} values"), e.getMessage)
   }
 
@@ -394,8 +415,9 @@ class SimilaritySpec extends SparkSpec {
       (2L, Seq(0.2f, 0.9f, 0.0f, 0.1f)), (3L, Seq(-1.0f, 0.2f, 0.4f, 0.0f)),
       (4L, Seq(0.1f, 0.2f, 0.9f, 0.4f))
     ).toDF("vec_id", "embedding")
-    val out = Similarity.pqTopKDeterministic(dup, dup.filter(col("vec_id") === 0),
-        "vec_id", "embedding", 2, dim = 4, m = 2, kCodes = 4, refine = 2)
+    val out = Similarity.pqTopK(dup, dup.filter(col("vec_id") === 0),
+        "vec_id", "embedding", 2, dim = 4, m = 2, kCodes = 4, refine = 2, nIters = 0,
+        family = HashFamily.Md5)
       .orderBy("rk").as[(Long, Long, Double, Long)].collect().toSeq
     assert(out.head._2 === 1L && out.head._3 === 1.0)
     assert(out.map(_._4) === (1L to out.length).toSeq)
@@ -413,7 +435,7 @@ class SimilaritySpec extends SparkSpec {
       (10L, Seq(0.0f, 1.0f, 0.00f)), (11L, Seq(0.0f, 1.0f, 0.01f)),
       (20L, Seq(-1.0f, 0.0f, 0.0f)), (21L, Seq(0.0f, -1.0f, 0.0f))
     ).toDF("vec_id", "embedding")
-    val cents = Similarity.md5SeededCentroids(dup, "vec_id", "embedding", 3)
+    val cents = Similarity.ivfCentroids(dup, "vec_id", "embedding", 3, family = HashFamily.Md5)
     val out = Staged.withStaged {
       Similarity.semDedup(dup, "vec_id", "embedding", cents, 0.99)
         .as[(Long, Long)].collect().toMap
@@ -431,7 +453,7 @@ class SimilaritySpec extends SparkSpec {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val labels = Staged.withStaged {
       Similarity.semDedup(e, "vec_id", "embedding",
-        Similarity.md5SeededCentroids(e, "vec_id", "embedding", 8), 0.35)
+        Similarity.ivfCentroids(e, "vec_id", "embedding", 8, family = HashFamily.Md5), 0.35)
         .as[(Long, Long)].collect().toMap
     }
     assert(labels.size === e.count()) // one row per doc, singletons included
@@ -477,9 +499,10 @@ class SimilaritySpec extends SparkSpec {
       groupA.zip(Seq(Seq(1.0f, 0.0f), Seq(0.9f, 0.1f), Seq(0.8f, 0.2f))) ++
       groupB.zip(Seq(Seq(0.0f, 1.0f), Seq(0.1f, 0.9f), Seq(0.2f, 0.8f)))
     val df = vecs.toDF("vec_id", "embedding")
-    val out = Similarity.kmeansDeterministic(df, "vec_id", "embedding",
-        n = 2, rounds = 1)
-      .as[(Long, Long)].collect()
+    val out = Similarity.assignCells(df, "vec_id", "embedding",
+        Similarity.ivfCentroids(df, "vec_id", "embedding", 2, nIters = 1,
+          family = HashFamily.Md5), family = HashFamily.Md5)
+      .select("neighbor_id", "centroid_id").as[(Long, Long)].collect()
     assert(out.length === ids.length)          // one assignment per vector
     val m = out.toMap
     assert(m.keySet === ids.toSet)
@@ -501,7 +524,7 @@ class SimilaritySpec extends SparkSpec {
     val vecs = hot.map((_, Seq(1.0f, 0.0f))) ++ cold.map((_, Seq(0.0f, 1.0f)))
     val df = vecs.toDF("vec_id", "embedding")
     val out = Similarity.indexBalanceAudit(df, "vec_id", "embedding",
-        Similarity.md5SeededCentroids(df, "vec_id", "embedding", 2))
+        Similarity.ivfCentroids(df, "vec_id", "embedding", 2, family = HashFamily.Md5))
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(out.values.map(_._2).sum === 8L)            // occupancy conserves
     assert(out(seedA)._2 === 6L && out(seedB)._2 === 2L)
@@ -513,7 +536,7 @@ class SimilaritySpec extends SparkSpec {
       (Seq(seedB) ++ order.drop(5).take(3)).map((_, Seq(0.0f, 1.0f)))
     val bdf = bal.toDF("vec_id", "embedding")
     val bout = Similarity.indexBalanceAudit(bdf, "vec_id", "embedding",
-        Similarity.md5SeededCentroids(bdf, "vec_id", "embedding", 2))
+        Similarity.ivfCentroids(bdf, "vec_id", "embedding", 2, family = HashFamily.Md5))
       .as[(Long, Long, Long, Long)].collect()
     assert(bout.forall(_._4 === 10000L))
   }
@@ -525,9 +548,9 @@ class SimilaritySpec extends SparkSpec {
       (2L, Seq(0.0f, 1.0f), 1), (3L, Seq(-1.0f, 0.0f), 1),
       (4L, Seq(0.8f, 0.2f), 0), (5L, Seq(0.1f, 0.9f), 1)
     ).toDF("vec_id", "embedding", "label")
-    val cents = Similarity.md5SeededCentroids(labeled, "vec_id", "embedding", 2)
-    val hard = Similarity.ivfHardNegativesDeterministic(labeled, labeled,
-      "vec_id", "embedding", "label", 2, cents, nProbe = 2)
+    val hard = Similarity.ivfTopK(labeled, labeled, "vec_id", "embedding", 2,
+      nCentroids = 2, nProbe = 2, scope = Some(Similarity.OtherLabel("label")),
+      family = HashFamily.Md5)
     val byQuery = labeled.select("vec_id", "label").as[(Long, Int)].collect().toMap
     val neigh = hard.select("query_id", "label", "neighbor_id")
       .as[(Long, Int, Long)].collect()
@@ -538,9 +561,9 @@ class SimilaritySpec extends SparkSpec {
     // the commute law that makes the ≠ filter exact, not a rerank
     val bySlice = Seq(0, 1).map { l =>
       val complement = labeled.filter(col("label") =!= l)
-      Similarity.ivfTopKDeterministic(complement,
+      Similarity.ivfTopK(complement,
         labeled.filter(col("label") === l), "vec_id", "embedding", 2,
-        cents, nProbe = 2).withColumn("label", lit(1 - l))
+        nCentroids = 2, nProbe = 2, family = HashFamily.Md5).withColumn("label", lit(1 - l))
         .select("query_id", "label", "neighbor_id", "sim", "rk")
     }.reduce(_ union _)
     assert(hard.exceptAll(bySlice).count() === 0 &&
@@ -560,7 +583,7 @@ class SimilaritySpec extends SparkSpec {
       (4L to 7L).map(i => (i, Seq(0.01f * (i - 4), 1.0f)))).toDF("vec_id", "embedding")
     val docs = ((0L to 3L).map(i => (i, s"common alpha$i alpha$i alphaX")) ++
       (4L to 7L).map(i => (i, s"common beta$i beta$i betaX"))).toDF("doc_id", "text")
-    val cents = Similarity.md5SeededCentroids(vecs, "vec_id", "embedding", 2)
+    val cents = Similarity.ivfCentroids(vecs, "vec_id", "embedding", 2, family = HashFamily.Md5)
     val out = Similarity.clusterTopTermsDeterministic(docs, vecs,
         "doc_id", "text", "vec_id", "embedding", cents, 3)
       .as[(Long, Long, String, Long, Double)].collect()
@@ -602,7 +625,7 @@ class SimilaritySpec extends SparkSpec {
     // degenerate geometry: all points identical -> both distances 0,
     // the nearest-other sum is 0 and the ratio is honestly NULL
     val flat = (1L to 4L).map(i => (i, v(5, 5))).toDF("vec_id", "embedding")
-    val fc = Similarity.md5SeededCentroids(flat, "vec_id", "embedding", 2)
+    val fc = Similarity.ivfCentroids(flat, "vec_id", "embedding", 2, family = HashFamily.Md5)
     val f = Similarity.clusterSeparation(flat, "vec_id", "embedding", fc)
       .as[(Long, Long, Long, Long, Option[Long])].collect()
     assert(f.forall(_._5.isEmpty), f.mkString(","))
@@ -637,8 +660,8 @@ class SimilaritySpec extends SparkSpec {
       }
       val got = Similarity.clusterSeparation(
           vs.toDF("vec_id", "embedding").repartition(5), "vec_id", "embedding",
-          Similarity.md5SeededCentroids(
-            vs.toDF("vec_id", "embedding"), "vec_id", "embedding", k))
+          Similarity.ivfCentroids(
+            vs.toDF("vec_id", "embedding"), "vec_id", "embedding", k, family = HashFamily.Md5))
         .as[(Long, Long, Long, Long, Option[Long])].collect()
         .map(t => t._1 -> ((t._2, t._3, t._4, t._5))).toMap
       assert(got === want, s"seed=$seed")

@@ -295,8 +295,9 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // deterministic variant); the md5 centroid sample runs while the
     // plan is built, so it is not part of the plan
     val e = graft.Tables.embeddings(spark, sf)
-    val cents = graft.ops.Similarity.md5SeededCentroids(e, "vec_id", "embedding", 8)
-    val p = graft.ops.Similarity.assignCellsRounded(e, "vec_id", "embedding", cents)
+    val md5 = graft.ops.HashFamily.Md5
+    val cents = graft.ops.Similarity.ivfCentroids(e, "vec_id", "embedding", 8, family = md5)
+    val p = graft.ops.Similarity.assignCells(e, "vec_id", "embedding", cents, family = md5)
       .queryExecution.explainString(SimpleMode)
     assert(!p.contains("Exchange") && !p.contains("Join"), p)
     assert(!p.contains("TakeOrderedAndProject"), p)
@@ -321,10 +322,11 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // same law as q92's assignment: adding the metadata carry must not
     // introduce a corpus shuffle or a join-back
     val emb = graft.Tables.embeddings(spark, sf)
-    val assigned = graft.ops.Similarity.assignCellsRounded(emb, "vec_id",
+    val md5 = graft.ops.HashFamily.Md5
+    val assigned = graft.ops.Similarity.assignCells(emb, "vec_id",
       "embedding",
-      graft.ops.Similarity.md5SeededCentroids(emb, "vec_id", "embedding", 16),
-      carry = Seq("label"))
+      graft.ops.Similarity.ivfCentroids(emb, "vec_id", "embedding", 16, family = md5),
+      carry = Seq("label"), family = md5)
     val phys = assigned.queryExecution.explainString(SimpleMode)
     // the centroids are a plan literal, so no hash Exchange may appear — the
     // corpus itself must never shuffle (q92's law, plus the carry)
@@ -411,7 +413,9 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     * ignored. The aggregate strategy is normalised: Spark picks a hash,
     * object-hash or sort aggregate from the buffer's data type (a string
     * min cannot be updated in place), and a sort aggregate's input Sort
-    * comes with that choice. */
+    * comes with that choice. A scan is named by its format, not by its
+    * catalog table (q94 and q120 persist their indexes under their own
+    * names). */
   private def operators(name: String): Seq[String] = {
     import org.apache.spark.sql.execution.{SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -424,12 +428,12 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       })
       case _: HashAggregateExec | _: ObjectHashAggregateExec =>
         "Aggregate" +: p.children.flatMap(walk)
-      case _ => p.nodeName +: p.children.flatMap(walk)
+      case _ => p.nodeName.replaceAll(" spark_catalog\\.\\S+$", " ") +: p.children.flatMap(walk)
     }
     walk(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
   }
 
-  test("md5-family queries run their production twin's plan: q27≡q91, q28≡q97, q30≡q98, q114≡q115") {
+  test("md5-family queries run their production twin's plan: q27≡q91, q28≡q97, q30≡q98, q114≡q115, q35≡q96, q82≡q99, q94≡q120") {
     // each oracled query is its rows-only twin's operator under
     // HashFamily.Md5, so the oracle certifies the production plan: the
     // same fan-out and staging decisions, only the hash expressions
@@ -441,7 +445,10 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "q27_minhash_lsh" -> "q91_minhash_lsh_md5",
       "q28_simhash_pairs" -> "q97_simhash_pairs_md5",
       "q30_lsh_topk" -> "q98_lsh_topk_md5",
-      "q114_bloom_decontaminate" -> "q115_bloom_decontaminate_md5"
+      "q114_bloom_decontaminate" -> "q115_bloom_decontaminate_md5",
+      "q35_ivf_topk" -> "q96_ivf_topk_md5",
+      "q82_pq_topk" -> "q99_pq_topk_md5",
+      "q94_ivfpq_append" -> "q120_ivfpq_append_md5"
     ).flatMap { case (prod, md5) =>
       val (a, b) = (operators(prod), operators(md5))
       if (a == b) None
@@ -840,12 +847,14 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
-  test("q184 cluster separation: vectors never shuffle — the centroid table broadcasts") {
+  test("q184 cluster separation: vectors never shuffle — the only hash Exchange is the cell aggregate") {
     val p = plan("q184_cluster_separation")
-    assert(p.contains("BroadcastNestedLoopJoin BuildRight, Cross"), p)
-    // the only hash Exchanges are the per-point and cell aggregates
-    assert(!p.contains("SortMergeJoin") &&
-      !p.contains("Exchange rangepartitioning"), p)
+    // the centroids are a plan literal: no join, and the per-point pick
+    // of own and second-nearest distance is a projection
+    assert(!p.contains("Join"), p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, p)
+    assert("Exchange hashpartitioning\\(cell#".r.findFirstIn(p).isDefined, p)
+    assert(!p.contains("Exchange rangepartitioning"), p)
   }
 
   test("q185 pack efficiency: the audit adds one shard-grain aggregate over the q76 layout") {
