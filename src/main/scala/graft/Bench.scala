@@ -12,8 +12,9 @@ package graft
   * MEDIAN, defusing noisy-neighbor swings on shared boxes (identical
   * binaries measured 2× apart across rounds on this box); a failing
   * query lands in `errors` with its exception (never a silent fake
-  * timing). The system load average before and after the run is
-  * recorded in the JSON so a noisy co-tenant is visible in the record.
+  * timing), as does one that leaves a staged pin behind. The system
+  * load average before and after the run is recorded in the JSON so a
+  * noisy co-tenant is visible in the record.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -49,10 +50,11 @@ object Bench {
       .foreach { case (name, fn) =>
       def timed(): Option[Double] = {
         val t0 = System.nanoTime()
-        // withStaged: each iteration builds fresh plans, so each must
-        // also release the intermediates it pinned — the unpersist is
-        // inside the timed region because a real deployment pays it too
-        try { graft.ops.Staged.withStaged { fn(spark, sfDir).count() }
+        // each iteration builds fresh plans, so each must also release
+        // the intermediates it pinned (a leftover pin fails the query) —
+        // the release is inside the timed region because a real
+        // deployment pays it too
+        try { graft.ops.Staged.withStagedNoLeaks(spark) { fn(spark, sfDir).count() }
           Some((System.nanoTime() - t0) / 1e9) }
         catch {
           case e: Throwable =>

@@ -27,10 +27,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // withStaged: unpin any intermediate a query persisted (shingle
-      // tables, range exchanges) once its write completed — caches must
-      // not accumulate across the 60-query session
-      try graft.ops.Staged.withStaged {
+      // unpin any intermediate a query staged (shingle tables, range
+      // exchanges) once its write completed, and fail a query that
+      // leaves a pin behind for the rest of the session
+      try graft.ops.Staged.withStagedNoLeaks(spark) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       }

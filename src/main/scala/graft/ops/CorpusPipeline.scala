@@ -85,7 +85,7 @@ object CorpusPipeline {
     * min-label rounds only when the graph spans several partitions).
     * Only non-representatives (doc ≠ cluster) are consumed, so any
     * clusterer honoring the component-min contract slots in — a caller
-    * passes its own to set `maxIter`/`checkpointDir` or a conf scope.
+    * passes its own to set `maxIter` or a conf scope.
     *
     * Observability: the returned frame carries three named `observe()`
     * metric sets — `corpus_keep` (rows_kept + rows_gated, the latter

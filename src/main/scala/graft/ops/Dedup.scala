@@ -420,10 +420,9 @@ object Dedup {
     // shingle key: the window would shuffle-sort every occurrence of a
     // hot shingle into one task — exactly the skew the maxDf cap exists
     // to kill — while groupBy keeps map-side partial counts. The shingle
-    // table is staged (persisted + registered with [[Staged]] so the
-    // per-query releaseAll unpins it) because multiple plan branches
-    // consume it; at cluster scale the same role is played by a staged
-    // intermediate table; MEMORY_AND_DISK keeps it spill-safe.
+    // table is cut through [[Staged]] (released with the query) because
+    // multiple plan branches consume it; a cluster run with a checkpoint
+    // dir makes the cut a reliable checkpoint.
     val sh = Staged.stageCut(shingleRows(df, idCol, textCol, tokensCol, n))
     // by-shingle fan-outs (conf-gated no-ops on cluster layouts): the
     // df-count aggregate, the rare join-back and the intersection
@@ -896,21 +895,6 @@ object Dedup {
           .reduce(_ bitwiseOR _).as("sim"))
   }
 
-  /** The RDD behind a checkpointed frame (`localCheckpoint` or
-    * `checkpoint` both leave a `LogicalRDD` leaf). */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-
-  /** Free a localCheckpoint's blocks through its RDD handle —
-    * `Dataset.unpersist` goes through the CacheManager and cannot reach
-    * them. The blocks are NOT recomputable: only superseded frames that
-    * nothing will read again may be freed. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(blocking = false))
-
   /** Connected components over an undirected near-dup pair list —
     * the clustering step between pair generation (Jaccard/MinHash/LSH)
     * and representative selection: every document in a duplicate
@@ -961,26 +945,19 @@ object Dedup {
     * partner stays a node, and the null id gets one row labelled with
     * its partners' least label; a pair of nulls is dropped.
     *
-    * Checkpoints are `localCheckpoint` (executor-local blocks, no extra
-    * I/O — an executor loss fails the job anyway in a single-app run);
-    * `checkpointDir` switches to reliable `checkpoint` files, so a
-    * multi-hour clustering survives executor loss. Superseded tables are
-    * freed as soon as nothing reads them, and the result is released
-    * with the enclosing `Staged` scope.
+    * Every checkpoint is a [[Staged]] cut, in the form the deployment
+    * gives it: reliable files when the context has a checkpoint dir, so
+    * a multi-hour clustering survives executor loss, executor-local
+    * blocks otherwise. Superseded tables are released as soon as
+    * nothing reads them, and the result with the enclosing `Staged`
+    * scope.
     *
     * Output: (doc, cluster) — one row per distinct node appearing in
     * `pairs`, cluster = min doc id reachable through the pair graph.
     */
   def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
-                        maxIter: Int = 20,
-                        checkpointDir: Option[String] = None): DataFrame = {
+                        maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    val reliable = checkpointDir.isDefined
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    def free(df: DataFrame): Unit =
-      if (reliable) deleteCheckpointFiles(df) else freeCheckpoint(df)
     // exchange sizing + cached-plan re-partitioning: see [[withIterConfs]]
     withIterConfs(spark) {
       val (a, b) = (col(aCol), col(bCol))
@@ -992,31 +969,27 @@ object Dedup {
       val idType = edges.schema("u").dataType
       val labelSchema = StructType(Seq(
         StructField("doc", idType), StructField("cluster", idType)))
-      val local = materialize(edges.repartition(col("u"))
+      val local = Staged.cut(edges.repartition(col("u"))
         .mapPartitions(localComponents(idType))(Encoders.row(labelSchema)))
-      val result =
-        if (checkpointRdd(local).exists(_.getNumPartitions <= 1)) local
-        else {
-          val rows = local.filter(col("doc").isNotNull)
-          val r = rows.groupBy("doc").agg(min("cluster").as("__r"))
-          val q = rows.join(r, "doc").filter(col("cluster") =!= col("__r"))
-            .select(col("__r").as("u"), col("cluster").as("v"))
-          val quotient = Staged.stage(
-            q.unionByName(q.select(col("v").as("u"), col("u").as("v"))).distinct())
-          val labels = minLabelLoop(quotient, maxIter, materialize, free)
-          // every row's local label maps to its component min, so the min
-          // over a node's rows is its label (and a null id's least one)
-          val out = materialize(local
-            .join(labels.select(col("doc").as("cluster"), col("cluster").as("__l")),
-              Seq("cluster"), "left_outer")
-            .groupBy("doc").agg(min(coalesce(col("__l"), col("cluster"))).as("cluster")))
-          quotient.unpersist(blocking = false)
-          free(labels)
-          free(local)
-          out
-        }
-      Staged.registerRelease(() => free(result))
-      result
+      if (local.queryExecution.analyzed
+          .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.getNumPartitions <= 1) local
+      else {
+        val rows = local.filter(col("doc").isNotNull)
+        val r = rows.groupBy("doc").agg(min("cluster").as("__r"))
+        val q = rows.join(r, "doc").filter(col("cluster") =!= col("__r"))
+          .select(col("__r").as("u"), col("cluster").as("v"))
+        val quotient = Staged.stage(
+          q.unionByName(q.select(col("v").as("u"), col("u").as("v"))).distinct())
+        val labels = minLabelLoop(quotient, maxIter)
+        // every row's local label maps to its component min, so the min
+        // over a node's rows is its label (and a null id's least one)
+        val out = Staged.cut(local
+          .join(labels.select(col("doc").as("cluster"), col("cluster").as("__l")),
+            Seq("cluster"), "left_outer")
+          .groupBy("doc").agg(min(coalesce(col("__l"), col("cluster"))).as("cluster")))
+        Seq(quotient, labels, local).foreach(Staged.release)
+        out
+      }
     }
   }
 
@@ -1077,10 +1050,8 @@ object Dedup {
   /** The pointer-jumping min-label loop of [[duplicateClusters]] over a
     * symmetric (u, v) edge table: the checkpointed (doc, cluster) labels
     * of its nodes. */
-  private def minLabelLoop(edges: DataFrame, maxIter: Int,
-                           materialize: DataFrame => DataFrame,
-                           free: DataFrame => Unit): DataFrame = {
-    var labels = materialize(
+  private def minLabelLoop(edges: DataFrame, maxIter: Int): DataFrame = {
+    var labels = Staged.cut(
       edges.select(col("u").as("doc"), col("u").as("cluster")).distinct())
     var converged = false
     var i = 0
@@ -1106,7 +1077,7 @@ object Dedup {
           "cluster")
         .select(col("doc"), col("__l2").as("cluster"), col("__prev"))
       val obs = org.apache.spark.sql.Observation()
-      val next = materialize(
+      val next = Staged.cut(
         jumped.observe(obs, coalesce(
             sum(when(col("cluster") =!= col("__prev"), 1L).otherwise(0L)),
             lit(0L)).as("changed"))
@@ -1117,7 +1088,7 @@ object Dedup {
       converged = obs.get("changed").asInstanceOf[Long] == 0L
       // the superseded round is unreachable from `next` (already
       // materialized) — free it instead of waiting for GC
-      free(labels)
+      Staged.release(labels)
       labels = next
       i += 1
     }
@@ -1152,15 +1123,6 @@ object Dedup {
       case (k, None) => spark.conf.unset(k)
     }
   }
-
-  /** Delete a reliable checkpoint's files once nothing reads it — the
-    * reliable-path twin of [[freeCheckpoint]]. */
-  private def deleteCheckpointFiles(df: DataFrame): Unit =
-    checkpointRdd(df).flatMap(_.getCheckpointFile).foreach { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .delete(path, true)
-    }
 
   /** SimHash near-dup pairs: 64-bit simhash per doc, band into 4×16-bit
     * chunks (docs within Hamming distance 3 of each other collide on at

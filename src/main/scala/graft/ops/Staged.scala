@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Lifecycle registry for staged (persisted/checkpointed) intermediates.
   *
@@ -13,12 +16,12 @@ import org.apache.spark.storage.StorageLevel
   * long-lived session or streaming driver — the round-3 review flagged
   * the pins as a leak with no release path.
   *
-  * Operators register every pin here ([[stage]] for persists,
-  * [[registerRelease]] for anything else, e.g. a localCheckpoint's
-  * block-level free); the driver loop (graft.Verify / graft.Bench — or
-  * any caller running query-at-a-time) calls [[releaseAll]] once a
-  * query's action completes, or scopes the same contract with
-  * [[withStaged]].
+  * Staged is the only code that persists, checkpoints or frees a frame
+  * ([[stage]] for persists, [[stageCut]] for lineage cuts); the driver
+  * loop (graft.Verify / graft.Bench — or any caller running
+  * query-at-a-time) calls [[releaseAll]] once a query's action
+  * completes, or scopes the same contract with [[withStaged]];
+  * [[release]] frees one superseded frame early.
   *
   * The registry is THREAD-LOCAL: an operator builds its plan on the
   * caller's thread, so pins land in that thread's registry and a
@@ -28,27 +31,19 @@ import org.apache.spark.storage.StorageLevel
   * nested blocks release only what they themselves staged. Release is
   * non-blocking for plain persists (correctness never depends on a
   * cache being present, only on it being pinned *during* its query);
-  * checkpoint releases registered via [[registerRelease]] may free
-  * non-recomputable blocks, so a released frame must not be reused.
+  * a cut's release frees blocks or files that cannot be recomputed, so
+  * a released frame must not be reused.
   */
 object Staged {
 
-  private val live = new ThreadLocal[java.util.ArrayDeque[() => Unit]] {
-    override def initialValue(): java.util.ArrayDeque[() => Unit] =
-      new java.util.ArrayDeque[() => Unit]()
-  }
-  // innermost enclosing withStaged mark (0 = no scope): releaseAll must
-  // never reach past it — an operator or Step calling releaseAll inside
-  // a pipeline scope would otherwise free the OUTER scope's pins
+  // each pinned frame with the action that frees it, newest last; every
+  // withStaged scope opens with a Mark, and releaseAll never reaches
+  // past the innermost one — an operator or Step calling releaseAll
+  // inside a pipeline scope would otherwise free the OUTER scope's pins
   // (including non-recomputable checkpoint blocks a later step reads)
-  private val floor = new ThreadLocal[java.util.ArrayDeque[Integer]] {
-    override def initialValue(): java.util.ArrayDeque[Integer] =
-      new java.util.ArrayDeque[Integer]()
-  }
-  private def currentFloor: Int = {
-    val f = floor.get.peekLast()
-    if (f == null) 0 else f.intValue()
-  }
+  private val Mark: (DataFrame, () => Unit) = (null, () => ())
+  private val live =
+    ThreadLocal.withInitial(() => mutable.ArrayBuffer.empty[(DataFrame, () => Unit)])
 
   // lazyStaging nesting depth (thread-local, same discipline as the
   // registry): > 0 makes stageCut delegate to stage within the scope
@@ -57,10 +52,12 @@ object Staged {
   }
 
   /** Run `body` (plan construction) with every [[stageCut]] inside it
-    * downgraded to a LAZY [[stage]] persist. For query tops whose timed
-    * action lets Catalyst prune the staged subtree outright — q141's
-    * PageRank ends in a left join against per-node-unique ranks, so a
-    * count() never needs the edge chain at all — an eager checkpoint
+    * downgraded to a LAZY [[stage]] persist, whose subtree stays visible
+    * in `explain` (the plan-pinning specs wrap every test in it). For
+    * query tops whose timed action lets Catalyst prune the staged
+    * subtree outright — q141's PageRank ends in a left join against
+    * per-node-unique ranks, so a count() never needs the edge chain at
+    * all — an eager checkpoint
     * would FORCE work the optimizer can prove unnecessary; the lazy
     * persist keeps the pruning while full-row consumers (Verify, the
     * oracle dump) still compute and reuse the staged frames exactly as
@@ -77,17 +74,12 @@ object Staged {
     * next [[releaseAll]]). */
   def stage(df: DataFrame): DataFrame = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    live.get.addLast(() => df.unpersist(blocking = false))
+    live.get += df -> (() => { df.unpersist(blocking = false); () })
     df
   }
 
-  /** Register an arbitrary release action (e.g. freeing a
-    * localCheckpoint's blocks through its RDD handle, which
-    * `Dataset.unpersist` cannot reach). */
-  def registerRelease(release: () => Unit): Unit = live.get.addLast(release)
-
-  /** [[stage]]'s lineage-CUTTING form: eager `localCheckpoint` instead
-    * of persist, for intermediates whose UPSTREAM plan is large (the
+  /** [[stage]]'s lineage-CUTTING form: an eager checkpoint instead of
+    * persist, for intermediates whose UPSTREAM plan is large (the
     * corpus-gate chain, exploded shingle tables). Measured round-11
     * motivation, two independent costs of the persist form:
     *
@@ -99,7 +91,7 @@ object Staged {
     *     expressions this was the single largest cost of the pipeline
     *     queries: thread dumps showed the driver's main thread
     *     plan-printing, and q133 spent ~2/3 of its 54 s wall there.
-    *     A localCheckpoint replaces the subtree with a one-line
+    *     A checkpoint replaces the subtree with a one-line
     *     `LogicalRDD` leaf, so downstream plans render and re-optimize
     *     in microseconds. This is the optimization guide's own lever
     *     ("localCheckpoint is a cheaper way to cut lineage when fault
@@ -111,37 +103,51 @@ object Staged {
     *     at plan-build time and every consumer reads materialized
     *     blocks.
     *
-    * Fault-tolerance trade (documented, same as the closure loops'
-    * per-round checkpoints): localCheckpoint blocks are
-    * non-recomputable, so an executor loss fails the query — right for
-    * single-app/local runs; a cluster run wanting lineage-based
-    * recovery for a multi-hour job should write the intermediate to a
-    * staged table instead (the scaladocs' stated 100 TB equivalent).
-    *
-    * Plan-inspection escape hatch: with session conf
-    * `spark.graft.stageCutMode=persist` the call delegates to [[stage]]
-    * — the computation shape below the staging boundary is identical,
-    * but it stays VISIBLE in `explain` instead of executing into a
-    * `LogicalRDD` leaf at plan-build time. The plan-pinning specs set
-    * it so the pinned shapes (join strategies, Exchange keys, id-only
-    * aggregates) keep guarding the real operator structure. */
-  def stageCut(df: DataFrame): DataFrame = {
-    if (lazyDepth.get.intValue() > 0 ||
-        df.sparkSession.conf.getOption("spark.graft.stageCutMode")
-          .contains("persist")) return stage(df)
-    val cut = df.localCheckpoint(eager = true)
-    // BLOCKING release (unlike stage's): checkpoint blocks are
-    // deserialized row storage — bigger than a columnar cache — and an
-    // async free lets them pile up into the NEXT query's run (measured:
-    // untouched q51 inflated 7.4→13.2 s mid-bench from neighbors'
-    // lingering blocks). Synchronous removal charges the cleanup to the
-    // query that created the blocks, which is the honest accounting.
-    live.get.addLast(() => cut.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = true)
-      case _ =>
-    })
-    cut
+    * The cut's form comes from the deployment, as in Spark's own
+    * iterative algorithms (MLlib's `PeriodicCheckpointer`): with a
+    * checkpoint dir set on the context (`SparkContext.setCheckpointDir`
+    * or `spark.checkpoint.dir`) it is a reliable `checkpoint` — files a
+    * lost executor does not take with it — and its release deletes the
+    * files; without one it is a `localCheckpoint` — executor-local
+    * blocks, no extra I/O, but not recomputable, so a lost block fails
+    * the query with Spark's "Checkpoint block ... not found" error —
+    * and its release frees the blocks. A cluster run makes every cut
+    * recoverable by setting the dir. Inside [[lazyStaging]] the call
+    * delegates to [[stage]]. */
+  def stageCut(df: DataFrame): DataFrame =
+    if (lazyDepth.get.intValue() > 0) stage(df) else cut(df)
+
+  /** [[stageCut]]'s eager cut, never downgraded by [[lazyStaging]]: for
+    * loops that must truncate every round's lineage and whose
+    * convergence probe is the cut's own job
+    * ([[Dedup.duplicateClusters]]). */
+  private[ops] def cut(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val reliable = sc.getCheckpointDir.isDefined
+    val c = if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+    // both forms leave a one-line LogicalRDD leaf over the cut's RDD
+    val rdd = c.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    // BLOCKING free (unlike stage's): checkpoint blocks are deserialized
+    // row storage — bigger than a columnar cache — and an async free
+    // lets them pile up into the NEXT query's run (measured: untouched
+    // q51 inflated 7.4→13.2 s mid-bench from neighbors' lingering
+    // blocks). Synchronous removal charges the cleanup to the query
+    // that created the blocks, which is the honest accounting.
+    live.get += c -> (() =>
+      if (reliable) rdd.getCheckpointFile.map(new Path(_)).foreach(p =>
+        p.getFileSystem(sc.hadoopConfiguration).delete(p, true))
+      else rdd.unpersist(blocking = true))
+    c
+  }
+
+  /** Free one frame that [[stage]] or [[stageCut]] pinned in the current
+    * scope now, and drop it from the scope: for a superseded round of
+    * an iterative loop that nothing reads again. */
+  def release(df: DataFrame): Unit = {
+    val q = live.get
+    val i = q.lastIndexWhere(p => (p eq Mark) || (p._1 eq df))
+    require(i >= 0 && !(q(i) eq Mark), "Staged.release: the frame is not staged in this scope")
+    q.remove(i)._2()
   }
 
   /** Release every pin registered on THIS thread since the innermost
@@ -149,8 +155,7 @@ object Staged {
     * active), newest first. Outer scopes' pins are never touched. */
   def releaseAll(): Unit = {
     val q = live.get
-    val stop = currentFloor
-    while (q.size > stop) q.pollLast().apply()
+    while (q.nonEmpty && !(q.last eq Mark)) q.remove(q.size - 1)._2()
   }
 
   /** Run `body` (build + execute a query), then release exactly what it
@@ -159,11 +164,27 @@ object Staged {
     * drains only the block's own pins. */
   def withStaged[T](body: => T): T = {
     val q = live.get
-    val mark = q.size
-    floor.get.addLast(Integer.valueOf(mark))
-    try body finally {
-      floor.get.pollLast()
-      while (q.size > mark) q.pollLast().apply()
-    }
+    q += Mark
+    try body finally try releaseAll() finally q.remove(q.lastIndexWhere(_ eq Mark))
+  }
+
+  /** [[withStaged]] with the leak gate of the query-at-a-time drivers
+    * (graft.Bench, graft.Verify): fails when `body` leaves behind a
+    * persistent RDD, or a cut's `rdd-<id>` entry under the checkpoint
+    * dir, that was not there before it ran — a pin no scope releases
+    * would otherwise carry into every later query of the session. */
+  def withStagedNoLeaks[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    def pins = sc.getPersistentRDDs.keySet.map(id => s"rdd $id") ++
+      sc.getCheckpointDir.toSeq.flatMap { d =>
+        val dir = new Path(d)
+        dir.getFileSystem(sc.hadoopConfiguration).listStatus(dir).map(_.getPath.toString)
+      }
+    val before = pins
+    val out = withStaged(body)
+    val left = (pins -- before).toSeq.sorted
+    if (left.nonEmpty) throw new IllegalStateException(
+      s"leaked staged pins: ${left.mkString(", ")}")
+    out
   }
 }

@@ -22,8 +22,8 @@ object EtlPipeline {
   /** @param continueOnError this step's own failure does not abort the
     *                        pipeline (D5 tolerance)
     * @param alwaysRun       run even after an earlier abort — for
-    *                        cleanup/finalize steps (unpersist, temp
-    *                        deletion) that must not be skipped */
+    *                        cleanup/finalize steps (temp deletion) that
+    *                        must not be skipped */
   final case class Step(name: String, continueOnError: Boolean = false,
                         alwaysRun: Boolean = false)(
       val run: SparkSession => Unit)
@@ -37,10 +37,10 @@ object EtlPipeline {
     * A failing step aborts the pipeline unless marked continueOnError
     * (D5). Each step is tagged as a Spark job group for cancellation /
     * UI attribution (D4). The whole run is a [[graft.ops.Staged]] scope:
-    * intermediates operators staged during any step (shingle tables,
-    * say) are released when the pipeline ends —
-    * frames a step wants to carry PAST the pipeline must use their own
-    * explicit persist (as importOnly's merged frame does). */
+    * frames staged during any step (shingle tables, importOnly's merged
+    * frame) are released when the pipeline ends; a caller that wants a
+    * frame to outlive the pipeline stages it in its own enclosing
+    * `withStaged`. */
   def run(spark: SparkSession, steps: Seq[Step]): Seq[StepResult] =
     runWith(spark, steps, _ => ())
 
@@ -86,19 +86,17 @@ object EtlPipeline {
 
   /** The reference's import-only pipeline (D2,
     * reference src/main_01.py:1191-1262) as a canned two-step run:
-    * import+merge then summarize. */
+    * import+merge then summarize. The merged frame is staged in the
+    * run's scope, which releases it when the pipeline ends. */
   def importOnly(spark: SparkSession, csvRoot: String, outPath: String): Seq[StepResult] = {
     var merged: DataFrame = null
     run(spark, Seq(
       Step("import")(s => {
-        merged = ImportJob.importCsvTree(s, csvRoot)
-        merged.persist(); merged.count(); ()
+        merged = graft.ops.Staged.stage(ImportJob.importCsvTree(s, csvRoot))
+        merged.count(); ()
       }),
       Step("write")(_ => {
         merged.write.mode("overwrite").parquet(outPath); ()
-      }),
-      Step("finalize", continueOnError = true, alwaysRun = true)(_ => {
-        if (merged != null) { merged.unpersist(); () }
       })))
   }
 }

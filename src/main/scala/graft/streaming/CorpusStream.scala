@@ -376,10 +376,10 @@ object CorpusStream {
     * periodic full rebuild (the documented frozen-model maintenance
     * split) — an append-only bucketed table cannot update in place.
     *
-    * Per-batch cost: the embed + anti-join result is persisted before
-    * the emptiness check, so the (expensive, possibly model-serving)
-    * `embed` runs once per batch, not once for the check and again for
-    * the append.
+    * Per-batch cost: the embed + anti-join result is staged, in a
+    * per-batch `withStaged` scope, before the emptiness check, so the
+    * (expensive, possibly model-serving) `embed` runs once per batch,
+    * not once for the check and again for the append.
     *
     * Reader visibility: appends run in the micro-batch's cloned session;
     * a SERVING session that has already resolved the index table keeps
@@ -404,16 +404,15 @@ object CorpusStream {
       // keep the hash-min row deterministically
       val onePerId = graft.ops.Merge.lastWriterWins(
         Seq("doc_id"), Seq(col("content_hash").asc))(novel)
-      val fresh = embed(onePerId).join(
-        spark.table(indexTable)
-          .select(col("neighbor_id").as("doc_id")),
-        Seq("doc_id"), "left_anti")
-        .persist()
-      try {
+      graft.ops.Staged.withStaged {
+        val fresh = graft.ops.Staged.stage(embed(onePerId).join(
+          spark.table(indexTable)
+            .select(col("neighbor_id").as("doc_id")),
+          Seq("doc_id"), "left_anti"))
         if (!fresh.isEmpty)
           graft.ops.Similarity.appendIvfPqIndex(fresh, "doc_id", "embedding",
             indexTable, dim, m, nBuckets)
-      } finally { fresh.unpersist(); () }
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.StagedFaults
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -262,29 +263,40 @@ class DedupSpec extends SparkSpec {
     assert(out(2L)._2 === toks("a", 16) && out(2L)._4 === 16L)
   }
 
-  test("duplicateClusters reliable-checkpoint path matches the default and cleans its files") {
+  /** Run `body` in a `withStaged` scope under a fresh checkpoint dir,
+    * assert the scope left no file in it, and restore the previous dir. */
+  private def withReliableCuts[T](body: => T): T = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val pairs = (0L until 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val expected = Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
-      .as[(Long, Long)].collect().toSet
-    val out = Staged.withStaged {
-      val r = Dedup.duplicateClusters(pairs, "doc_a", "doc_b",
-        checkpointDir = Some(dir)).as[(Long, Long)].collect().toSet
-      // while the result is live, exactly one round's files remain
-      assert(countFiles(dir) > 0)
-      r
+    StagedFaults.withCheckpointDir(spark.sparkContext, Some(dir)) {
+      val out = Staged.withStaged {
+        val r = body
+        // while the result is live, its checkpoint files remain
+        assert(StagedFaults.fileCount(dir) > 0)
+        r
+      }
+      // the staged-release scope deleted every round's checkpoint
+      assert(StagedFaults.fileCount(dir) === 0)
+      out
     }
-    assert(out === expected)
-    // the staged-release scope deleted the final round's checkpoint too
-    assert(countFiles(dir) === 0)
   }
 
-  private def countFiles(dir: String): Int = {
-    val root = new java.io.File(dir)
-    def walk(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0)
-      else 1
-    walk(root)
+  test("duplicateClusters reliable-checkpoint path matches the default and cleans its files") {
+    val pairs = (0L until 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val expected = Staged.withStaged(Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+      .as[(Long, Long)].collect().toSet)
+    val out = withReliableCuts(Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+      .as[(Long, Long)].collect().toSet)
+    assert(out === expected)
+  }
+
+  test("q26 and q62 return the same rows with reliable cuts as with local ones") {
+    val sf = "/root/testdata/sf0.001"
+    for (q <- Seq("q26_ngram_jaccard", "q62_corpus_pipeline")) {
+      def rows = SparkEntry.queries(q)(spark, sf).collect().map(_.toString).sorted.toSeq
+      val local = StagedFaults.withCheckpointDir(spark.sparkContext, None)(
+        Staged.withStaged(rows))
+      assert(withReliableCuts(rows) === local, q)
+    }
   }
 
   test("duplicateClusters frees its checkpoints with the staged-release scope") {

@@ -21,24 +21,13 @@ import scala.jdk.CollectionConverters._
   *
   * The lint reads OPTIMIZED plans, so an alias that `CollapseProject`
   * inlines into a lambda is caught as well. Staged subtrees are kept in
-  * the plan (the persist form of `stageCut`), and the plans of the jobs a
-  * build runs eagerly (samples, checkpoints) are captured and linted
-  * too. */
-class LambdaLintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+  * the plan (every test runs in `Staged.lazyStaging`, the persist form
+  * of `stageCut`), and the plans of the jobs a build runs eagerly
+  * (samples, checkpoints) are captured and linted too. */
+class LambdaLintSpec extends SparkSpec {
 
-  private val cutModeKey = "spark.graft.stageCutMode"
-  private var priorCutMode: Option[String] = None
-  override protected def beforeAll(): Unit = {
-    super.beforeAll()
-    priorCutMode = spark.conf.getOption(cutModeKey)
-    spark.conf.set(cutModeKey, "persist")
-  }
-  override protected def afterAll(): Unit = {
-    try priorCutMode match {
-      case Some(v) => spark.conf.set(cutModeKey, v)
-      case None => spark.conf.unset(cutModeKey)
-    } finally super.afterAll()
-  }
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    Staged.lazyStaging(super.withFixture(test))
 
   private val sf = "/root/testdata/sf0.001"
 

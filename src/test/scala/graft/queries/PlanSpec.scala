@@ -11,29 +11,15 @@ import scala.jdk.CollectionConverters._
   * WindowGroupLimit map-side pruning for the merge, TakeOrderedAndProject
   * for top-k, pushed filters + pruned schemas at the scan.
   */
-class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class PlanSpec extends SparkSpec {
 
   // lineage-cut staging (Staged.stageCut, r11) executes its subtree at
   // plan-BUILD time, leaving only a LogicalRDD leaf in explain — pin
   // the persist form instead, whose computation shape below the
-  // staging boundary is identical and stays inspectable. Scoped to
-  // THIS suite via beforeAll/afterAll (a constructor-level set on the
-  // shared session leaked the persist mode into every suite that ran
-  // after this one, so the shipped eager-checkpoint path got no
-  // coverage from the correctness suites).
-  private val cutModeKey = "spark.graft.stageCutMode"
-  private var priorCutMode: Option[String] = None
-  override protected def beforeAll(): Unit = {
-    super.beforeAll()
-    priorCutMode = spark.conf.getOption(cutModeKey)
-    spark.conf.set(cutModeKey, "persist")
-  }
-  override protected def afterAll(): Unit = {
-    try priorCutMode match {
-      case Some(v) => spark.conf.set(cutModeKey, v)
-      case None => spark.conf.unset(cutModeKey)
-    } finally super.afterAll()
-  }
+  // staging boundary is identical and stays inspectable. Scoped to each
+  // test's own thread, so no other suite runs under the persist form.
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    graft.ops.Staged.lazyStaging(super.withFixture(test))
 
   private val sf = "/root/testdata/sf0.001"
 
